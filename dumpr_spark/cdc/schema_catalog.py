@@ -126,10 +126,17 @@ class TypedViewSink:
         from dumpr_spark.sources.cdc_json import events_to_changes
 
         events = self.events_of_batch(batch)
-        self.catalog.invalidate_for_ddl(events)
-        changes = events_to_changes(events, self.id_cols)
-        tables = [r["tbl"] for r in changes.select("tbl").distinct().collect()]
-        for table in tables:
-            schema = self.catalog.schema_for(table)
-            typed = typed_view(changes, table, schema)
-            typed.write.mode("append").parquet(f"{self.out_dir}/{table}")
+        # the DDL scan, the table list and one write per table are each an
+        # action: persist so the micro-batch is computed once, not N+2 times
+        # (streaming/sink.py docstring)
+        events.persist()
+        try:
+            self.catalog.invalidate_for_ddl(events)
+            changes = events_to_changes(events, self.id_cols)
+            tables = [r["tbl"] for r in changes.select("tbl").distinct().collect()]
+            for table in tables:
+                schema = self.catalog.schema_for(table)
+                typed = typed_view(changes, table, schema)
+                typed.write.mode("append").parquet(f"{self.out_dir}/{table}")
+        finally:
+            events.unpersist()

@@ -428,7 +428,12 @@ def train_centroids_lloyd(
             # quantize over the shortest decimal repr mirrors BigDecimal
             # HALF_UP exactly — the old *1e6+0.5 double arithmetic could
             # flip the 6th decimal at representation boundaries and change
-            # the stop decision vs an oracle replaying the loop with ROUND
+            # the stop decision vs an oracle replaying the loop with ROUND.
+            # This assumes Java's Double.toString gives the shortest
+            # round-trip digits, as Python's repr does; that holds from
+            # JDK 19 on, and an older JDK can print a longer string, so an
+            # exact half at the 6th decimal could still round differently
+            # (the +1e-9 nudge makes that very unlikely)
             move = float(
                 Decimal(repr(math.sqrt(s) + 1e-9)).quantize(
                     Decimal("1e-6"), rounding=ROUND_HALF_UP

@@ -119,16 +119,7 @@ class HistorySink(MergeSink):
             keep = raw.where(F.col("tbl").isin(touched)).where(~prunable)
             self._commit(keep, touched, f"prune-{horizon_seq}")
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if self.errors_path is not None:
-            from dumpr_spark.cdc.envelope import validate_envelope
-            from dumpr_spark.cdc.materialize import split_errors
-
-            batch, errors = split_errors(validate_envelope(batch))
-            if not errors.isEmpty():
-                errors.write.mode("overwrite").parquet(
-                    f"{self.errors_path}/batch_id={batch_id}"
-                )
+    def _merge(self, batch: DataFrame, batch_id: int) -> None:
         # error rows must never enter the interval window: a persisted error
         # row would close the key's live upsert interval at the error's seq
         # (MergeSink gets this for free because materialize() filters

@@ -87,14 +87,21 @@ class JdbcMergeSink:
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         cols = [self.key_col, *self.value_cols, "op"]
         staged = batch.select(*cols)
-        if staged.isEmpty():
-            return
-        # phase 1: executor-parallel staging write (overwrite => replay-safe).
-        # The staging table keeps the JDBC dialect's own type mapping — on
-        # Derby that is CLOB for strings, and fighting it breaks NULL writes
-        # (the dialect's setNull type must match the column). The MERGE below
-        # CASTs string references instead.
-        staged.write.mode("overwrite").jdbc(self.url, self.staging, properties=self.properties)
+        # the emptiness probe and the staging write are two actions: persist
+        # so the micro-batch is computed once (streaming/sink.py docstring)
+        staged.persist()
+        try:
+            if staged.isEmpty():
+                return
+            # phase 1: executor-parallel staging write (overwrite =>
+            # replay-safe). The staging table keeps the JDBC dialect's own
+            # type mapping — on Derby that is CLOB for strings, and fighting
+            # it breaks NULL writes (the dialect's setNull type must match
+            # the column). The MERGE below CASTs string references instead.
+            staged.write.mode("overwrite").jdbc(self.url, self.staging,
+                                                properties=self.properties)
+        finally:
+            staged.unpersist()
         str_cols = {
             f.name for f in staged.schema.fields if f.dataType.simpleString() == "string"
         }

@@ -16,6 +16,16 @@ upsert with a lower seq arriving in a LATER batch must not resurrect a
 deleted key. `read_state` serves the live view (tombstones filtered);
 `compact()` purges tombstones once the feed guarantees no older seqs remain
 in flight.
+
+One evaluation per micro-batch: every foreachBatch target persists its
+batch at entry and unpersists it in a `finally`. The batch handed to a
+foreachBatch function is a plan, not data, so each action on it (the
+touched-slice collect, the dead-letter probe, the fold-plus-write) re-runs
+the whole upstream micro-batch: the source scan, the shuffle and any
+stateful operator, whose state-store load, update and commit then happen
+once per action. `MergeSink.__call__` is that shared entry for the merge
+sinks (HistorySink overrides `_merge`, not `__call__`); `JdbcMergeSink`
+and `TypedViewSink` follow the same rule.
 """
 
 from __future__ import annotations
@@ -1219,17 +1229,27 @@ class MergeSink:
             self._check_bucket_growth(touched)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if self.errors_path is not None:
-            from dumpr_spark.cdc.envelope import validate_envelope
-            from dumpr_spark.cdc.materialize import split_errors
+        """The foreachBatch entry of every merge sink: compute the batch
+        once (see the module docstring), route its dead letters, merge."""
+        batch.persist()
+        try:
+            data = batch
+            if self.errors_path is not None:
+                from dumpr_spark.cdc.envelope import validate_envelope
+                from dumpr_spark.cdc.materialize import split_errors
 
-            batch, errors = split_errors(validate_envelope(batch))
-            # one partition dir per batch_id, overwritten on replay => the
-            # dead-letter write is idempotent; empty batches skip the job
-            if not errors.isEmpty():
-                errors.write.mode("overwrite").parquet(
-                    f"{self.errors_path}/batch_id={batch_id}"
-                )
+                data, errors = split_errors(validate_envelope(batch))
+                # one partition dir per batch_id, overwritten on replay =>
+                # the dead-letter write is idempotent; empty batches skip it
+                if not errors.isEmpty():
+                    errors.write.mode("overwrite").parquet(
+                        f"{self.errors_path}/batch_id={batch_id}"
+                    )
+            self._merge(data, batch_id)
+        finally:
+            batch.unpersist()
+
+    def _merge(self, batch: DataFrame, batch_id: int) -> None:
         # derive from DATA rows only: with errors_path=None in-band
         # op='error' rows are still in the batch here (materialize()
         # drops them later), and an error row's NULL/"" id would flip

@@ -44,7 +44,7 @@ PREMATERIALIZED = {
 
 def audit_one(name: str, txt: str) -> dict:
     d: dict = {"name": name}
-    if name in PREMATERIALIZED or "Scan ExistingRDD" in txt and txt.count("\n") < 20:
+    if name in PREMATERIALIZED or ("Scan ExistingRDD" in txt and txt.count("\n") < 20):
         d["prematerialized"] = True
     d["exchanges"] = len(re.findall(r"^\s*\(\d+\) Exchange", txt, re.M))
     d["ex_hash"] = len(re.findall(r"Exchange hashpartitioning", txt))

@@ -441,6 +441,70 @@ def test_streaming_tx_filter_across_batches(spark, tmp_path):
     assert [(r["payload"], r["seq"]) for r in rows] == [("r1", 2), ("r2", 3)]
 
 
+@pytest.mark.parametrize("kind", ["merge_bucketed", "history"])
+def test_sink_computes_tx_filter_batch_once(spark, tmp_path, kind):
+    """A foreachBatch action re-runs the upstream micro-batch plan, state
+    store included, so a sink that ran two actions on an unpersisted batch
+    folded the tx filter twice: the stateful operator's numRowsTotal read
+    2 x sources. The sink entry persists the batch once and always
+    unpersists it — also when the merge raises."""
+    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
+    from dumpr_spark.streaming.history import HistorySink, start_history_stream
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink, start_merge_stream
+    from dumpr_spark.streaming.state import streaming_tx_filter
+
+    def persisted_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    sources = ["s1", "s2", "s3"]
+    events, seq = [], 0
+    for i, s in enumerate(sources):
+        for et, payload in [("tx-begin", None), ("write", {"id": 2 * i}),
+                            ("write", {"id": 2 * i + 1}), ("tx-commit", None)]:
+            seq += 1
+            events.append({"source": s, "event_type": et,
+                           "tbl": "w" if payload else None,
+                           "payload": json.dumps(payload) if payload else None,
+                           "seq": seq})
+    src = str(tmp_path / "feed")
+    write_events(src, events)
+    changes = streaming_tx_filter(
+        spark.readStream.schema(
+            "source string, event_type string, tbl string, payload string, seq long"
+        ).json(src)
+    ).select(
+        F.lit("upsert").alias("op"), "tbl",
+        F.get_json_object("payload", "$.id").alias("id"),
+        F.col("payload").alias("content"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        F.lit(None).cast("string").alias("next_file"),
+        F.col("seq").alias("next_position"), "seq",
+    )
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    before = persisted_rdds()
+    if kind == "history":
+        sink = HistorySink(spark, state)
+        q = start_history_stream(changes, state, ckpt, output_mode="append")
+    else:
+        kb = KeyBucket(width=4)
+        sink = MergeSink(spark, state, key_bucket=kb)
+        q = start_merge_stream(changes, state, ckpt, output_mode="append",
+                               key_bucket=kb)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    progress = json.loads(q.lastProgress.json)
+    assert progress["numInputRows"] == len(events)
+    assert progress["stateOperators"][0]["numRowsTotal"] == len(sources)
+    assert persisted_rdds() == before
+    assert sink.read_state().count() == 2 * len(sources)
+
+    bad = spark.createDataFrame(
+        [("upsert", "", "9", "{}", None, "f1", 99, 99)], ENVELOPE_SCHEMA)
+    with pytest.raises(ValueError, match="unrepresentable table name"):
+        sink(bad, 1)
+    assert persisted_rdds() == before
+
+
 def test_streaming_tx_filter_transform_with_state(spark, tmp_path):
     """Same cross-batch tx semantics through the Spark 4
     transformWithStateInPandas API (typed value state)."""
