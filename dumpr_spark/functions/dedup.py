@@ -378,7 +378,13 @@ def shingle_overlap_pairs(df: DataFrame, pairs: DataFrame,
     volume tracks distinct CONTENT pairs, not id pairs (sf1-local: 1.67M
     id pairs -> 33.8k content pairs, a 49x cut on the heavy legs). Equal
     md5 => equal text => identical (ni, na, nb); on a duplicate-free
-    corpus the mapping is 1:1 and only the narrow key joins are added."""
+    corpus the mapping is 1:1 and only the narrow key joins are added.
+
+    Pair contract: `pairs` holds each unordered pair once, as `a < b` (what
+    lsh_candidate_pairs and minhash_lsh_pairs emit). The content-pair key
+    (_ha, _hb) keeps that orientation and is not normalized, so a caller
+    passing both (a, b) and (b, a) pays the shingle and intersection legs
+    for both orientations of the same content pair."""
     # r17: conditional fan-out before the ~100x shingle explode + per-
     # shingle md5 (the same single-task-scan hazard minhash_signature
     # guards against); hashing on the content hash means the distinct's
