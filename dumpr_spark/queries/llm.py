@@ -326,7 +326,12 @@ def dedup_winnow_pairs(spark, sf_dir):
 
     corpus = _dup_corpus(spark, sf_dir, near=True)
     fps = tx.winnow_fingerprints_df(fan_out(corpus), k=3, w=4)
-    flat = fps.select("doc_id", F.explode_outer("fps").alias("fp"))
+    # A doc with no fingerprints explodes to one null-fp row; dropping it
+    # before the count window keeps those rows from forming one hot
+    # partition, and changes no result: a null "bucket" could only pair
+    # docs on that one fp, below the >= 3 shared-fp cut.
+    flat = fps.select("doc_id", F.explode_outer("fps").alias("fp")).where(
+        F.col("fp").isNotNull())
     # r18 (§5, the minhash_lsh_pairs_scaled discipline): cap the bucket
     # BEFORE collect_list. The old shape collected every fp bucket's
     # member array into one aggregation buffer and size-filtered after —

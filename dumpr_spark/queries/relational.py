@@ -1122,7 +1122,7 @@ def join_lateral_topk(spark, sf_dir):
     no per-row re-execution — which is exactly why the declarative form is
     safe at 100 TB where a nested-loop lateral would not be. Deterministic
     tie-break on o_orderkey keeps the LIMIT stable across engines."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_LATERAL_TOPK_SQL)
 
 

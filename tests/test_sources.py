@@ -49,6 +49,77 @@ def test_events_nanos_normalized(spark, sf_dir):
     assert ev.where(F.col("ts").isNull()).count() == 0
 
 
+def _jobs_of(spark, group, fn):
+    """Run `fn()` under a fresh job group; return its result and the
+    number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_parquet(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_parquet_schema_inferred_once_per_file_version(spark, tmp_path):
+    _write_parquet(tmp_path / "tbl.parquet", k=[1, 2, 3], b=[b"x", b"y", b"z"])
+    read = lambda: load_table(spark, str(tmp_path), "tbl")  # noqa: E731
+    first, n_first = _jobs_of(spark, "memo_first", read)
+    second, n_second = _jobs_of(spark, "memo_second", read)
+    assert n_first >= 1  # inference runs a job...
+    assert n_second == 0  # ...once per file version
+    assert second.schema == first.schema
+    assert second.count() == 3
+
+    # a rewrite of the same path is a new version
+    _write_parquet(tmp_path / "tbl.parquet", k=[1, 2], b=[b"x", b"y"], extra=[7, 8])
+    assert read().columns == ["k", "b", "extra"]
+    assert sorted(r.extra for r in read().collect()) == [7, 8]
+
+    # so is a conf that changes what inference returns
+    assert dict(read().dtypes)["b"] == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert dict(read().dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(read().dtypes)["b"] == "binary"
+
+
+def test_parquet_directory_table_restamped_when_it_gains_a_file(spark, tmp_path):
+    path = str(tmp_path / "dir.parquet")
+    spark.range(5).write.parquet(path)
+    read = lambda: load_table(spark, str(tmp_path), "dir")  # noqa: E731
+    read()
+    df, n = _jobs_of(spark, "memo_dir_warm", read)
+    assert n == 0 and df.count() == 5
+    spark.range(5, 8).write.mode("append").parquet(path)
+    df, n = _jobs_of(spark, "memo_dir_grown", read)
+    assert n >= 1  # the new file changed the stamp: inferred again
+    assert df.count() == 8
+
+
+def test_memoized_reads_self_join_unambiguously(spark, sf_dir):
+    from dumpr_spark.queries.base import t
+
+    n1, n2 = t(spark, sf_dir, "nation"), t(spark, sf_dir, "nation")
+    pairs = (
+        n1.join(n2, n1["n_regionkey"] == n2["n_regionkey"])
+        .where(n1["n_name"] < n2["n_name"])
+        .select(n1["n_name"].alias("a"), n2["n_name"].alias("b"))
+    )
+    per_region = [r["c"] for r in n1.groupBy("n_regionkey").agg(
+        F.count(F.lit(1)).alias("c")).collect()]
+    assert pairs.count() == sum(c * (c - 1) // 2 for c in per_region) > 0
+
+
 def test_jdbc_helpers_no_server():
     from dumpr_spark.sources.jdbc import mysql_url
 
