@@ -233,7 +233,7 @@ def minhash_lsh_pairs_scaled(df: DataFrame, id_col: str = "doc_id", text_col: st
     (`exact_prepass_edges` keeps the join-based shape for payloads that must
     NOT ride a shuffle or an aggregation buffer — the multimodal twin's
     binary payloads — where re-scanning beats moving the bytes.)"""
-    from dumpr_spark.operators.scale import scan_splits
+    from dumpr_spark.operators.scale import fan_out
 
     # NO checkpoint on grp, deliberately: since r18 it has ONE consumer
     # (the LSH leg; edges moved to their own narrow window leg below), and
@@ -270,9 +270,7 @@ def minhash_lsh_pairs_scaled(df: DataFrame, id_col: str = "doc_id", text_col: st
     # On a cluster-wide scan the rep table keeps advisory-sized partitions
     # and no re-shuffle is paid — the input width is the cheap, faithful
     # proxy (a narrow-input corpus can only produce a narrow rep table).
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    if 0 < scan_splits(df) < n_parts // 2:
-        reps_df = reps_df.repartition(n_parts)
+    reps_df = fan_out(reps_df)
     lsh = minhash_lsh_pairs(reps_df, id_col, text_col, num_hashes, band_size, k,
                             max_bucket_size, pre_partitioned=True)
     return edges.unionByName(lsh)

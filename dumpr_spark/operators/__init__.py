@@ -3,7 +3,6 @@
 from dumpr_spark.operators.scale import (
     bucketed_table,
     explain_str,
-    repartition_for_explode,
     salted_join,
     write_bucketed,
     write_partitioned,
@@ -12,7 +11,6 @@ from dumpr_spark.operators.scale import (
 __all__ = [
     "bucketed_table",
     "explain_str",
-    "repartition_for_explode",
     "salted_join",
     "write_bucketed",
     "write_partitioned",

@@ -12,9 +12,8 @@ rules. Each encodes one decision Catalyst cannot make for you:
   repeated-join amortization Catalyst can't infer across jobs).
 - `write_partitioned`: directory partitioning for partition pruning — a time
   or tenant predicate then prunes whole files at planning time.
-- `repartition_for_explode`: fan rows out BEFORE a row-multiplying operator
-  (explode of shingles/frames) so the multiplication parallelizes; a compact
-  input file otherwise serializes the expensive stage on few tasks.
+- `fan_out`: the one fan-out rule — repartition to the session parallelism
+  before a heavy per-row stage, only when the file scan under-parallelizes.
 """
 
 from __future__ import annotations
@@ -286,14 +285,6 @@ def gc_layouts(spark: SparkSession, name: str, keep_fingerprint: str) -> int:
             spark.sql(f"DROP TABLE IF EXISTS {tbl.name}")
             dropped += 1
     return dropped
-
-
-def repartition_for_explode(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Fan out ahead of a row-multiplying op. Hash-repartition on `cols` when
-    downstream groups by them (explode + groupBy then share one shuffle);
-    round-robin otherwise."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(c) for c in cols]) if cols else df.repartition(n)
 
 
 def scan_splits(df: DataFrame) -> int:

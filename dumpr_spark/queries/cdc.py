@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from dumpr_spark.cdc.envelope import snapshot_to_changes
 from dumpr_spark.cdc.materialize import materialize
+from dumpr_spark.operators.scale import fan_out
 from dumpr_spark.queries.base import eps_round, query, t
 
 # The auto-layout dial constants — f-strung into the oracle SQL below so
@@ -49,12 +50,6 @@ _CHANGES_CTE = """
       FROM orders WHERE o_orderkey % 7 = 0
     )
 """
-
-
-# _scan_splits moved to operators.scale (shared by every conditional
-# fan-out in the engine); the alias keeps this module's call sites and
-# docstring references stable.
-from dumpr_spark.operators.scale import scan_splits as _scan_splits  # noqa: E402
 
 
 def _synthetic_changes(spark, sf_dir) -> DataFrame:
@@ -87,15 +82,13 @@ def _synthetic_changes(spark, sf_dir) -> DataFrame:
     # pre-explode rows (~3 columns), not the JSON-bearing envelope. Hashing
     # also avoids round-robin's sort-before-repartition pass and is
     # deterministic under stage retry (guide §2.5).
-    n_parts = spark.sparkContext.defaultParallelism
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice", "o_orderstatus")
     k = F.col("o_orderkey")
     pre = o.select(
         F.col("o_orderkey"), F.col("o_totalprice"), F.col("o_orderstatus"),
         k.cast("string").alias("id"),
     )
-    if _scan_splits(o) < n_parts // 2:
-        pre = pre.repartition(n_parts, F.col("id"))
+    pre = fan_out(pre, "id")
 
     def env(op, content, ts, nfile, npos, seq):
         return F.struct(

@@ -11,10 +11,14 @@ needs when the consumer asks "what did this row look like at position P?" —
 the batch-query twin is `cdc_scd2_history` / `cdc_time_travel`
 (queries/cdc.py).
 
-Storage/fold discipline is inherited from MergeSink verbatim (touched-
-partition rewrite, hardlink carry-forward of untouched ``tbl=`` partitions,
-atomic swap, crash recovery): history rows are the key's change log with the
-lead(seq) interval precomputed, so re-deriving a touched partition is
+HistorySink supplies only the fold step of MergeSink's slice path (see the
+`streaming/sink.py` module docstring): it inherits the touched-slice read,
+the hardlink carry-forward of untouched slices, the atomic swap, crash
+recovery, both layouts (plain ``tbl=`` and bucketed ``tbl=/_kb=``; a key's
+whole history shares one bucket, since the bucket is a function of id, so
+the interval window never spans slices) and the maintenance rewrite that
+`prune_closed_before` runs. History rows are the key's change log with the
+lead(seq) interval precomputed, so re-deriving a touched slice is
 `dropDuplicates(tbl,id,seq)` over (persisted versions ∪ batch) + one keyed
 lead() window — O(touched state) per batch, and deterministic, which makes
 checkpoint-replay idempotent (a replayed batch re-derives byte-identical
@@ -32,7 +36,7 @@ the touched keys only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from dumpr_spark.cdc.envelope import (
@@ -40,6 +44,7 @@ from dumpr_spark.cdc.envelope import (
 )
 from dumpr_spark.streaming.sink import (
     AUTO_TARGET_ROWS_PER_BUCKET, GROWTH_WARN_FACTOR, MergeSink,
+    _start_sink_stream,
 )
 
 HISTORY_SCHEMA = StructType(
@@ -60,23 +65,22 @@ class HistorySink(MergeSink):
         """All versions with intervals: one row per upsert version carrying
         [valid_from, valid_to) and is_current; delete terminators excluded
         (their seq is visible as the closing valid_to of the prior row)."""
-        out = (
+        return (
             self._read_raw()
             .where(F.col("op") == OP_UPSERT)
             .withColumn("valid_from", F.col("seq"))
             .withColumn("is_current", F.col("valid_to").isNull())
+            .drop("_kb")
         )
-        return out.drop("_kb") if self.key_bucket else out
 
     def read_state(self) -> DataFrame:
         """The live current-state view — open upsert intervals only. Matches
         MergeSink.read_state()/materialize() on the same change stream."""
-        out = (
+        return (
             self._read_raw()
             .where((F.col("op") == OP_UPSERT) & F.col("valid_to").isNull())
-            .drop("valid_to")
+            .drop("valid_to", "_kb")
         )
-        return out.drop("_kb") if self.key_bucket else out
 
     def compact(self) -> None:  # pragma: no cover - guard, exercised in tests
         raise NotImplementedError(
@@ -93,90 +97,31 @@ class HistorySink(MergeSink):
         no event with a lower seq can still arrive, so the terminator's
         resurrection-blocking job is over). Point-in-time queries earlier
         than the horizon become unanswerable — an explicit, caller-owned
-        trade. Only partitions that actually contain prunable rows are
-        rewritten; the rest carry forward by hardlink (same touched-set
-        discipline as MergeSink.compact)."""
-        from dumpr_spark.streaming.sink import _pair_filter
-
-        raw = self._read_raw()
-        prunable = (
+        trade. Only slices that actually contain prunable rows are
+        rewritten; the rest carry forward by hardlink (the same
+        `_drop_rows` rewrite as MergeSink.compact)."""
+        self._drop_rows(
             (F.col("valid_to").isNotNull() & (F.col("valid_to") < F.lit(horizon_seq)))
-            | ((F.col("op") != OP_UPSERT) & (F.col("seq") < F.lit(horizon_seq)))
+            | ((F.col("op") != OP_UPSERT) & (F.col("seq") < F.lit(horizon_seq))),
+            f"prune-{horizon_seq}",
         )
-        if self.key_bucket is not None:
-            pairs = [
-                (r["tbl"], r["_kb"])
-                for r in raw.where(prunable).select("tbl", "_kb").distinct().collect()
-            ]
-            if pairs:
-                keep = raw.where(_pair_filter(pairs)).where(~prunable)
-                self._commit(keep, pairs, f"prune-{horizon_seq}")
-            return
-        touched = [
-            r["tbl"] for r in raw.where(prunable).select("tbl").distinct().collect()
-        ]
-        if touched:
-            keep = raw.where(F.col("tbl").isin(touched)).where(~prunable)
-            self._commit(keep, touched, f"prune-{horizon_seq}")
 
     def _merge(self, batch: DataFrame, batch_id: int) -> None:
         # error rows must never enter the interval window: a persisted error
         # row would close the key's live upsert interval at the error's seq
         # (MergeSink gets this for free because materialize() filters
         # OP_ERROR; the lead() fold has no such built-in filter)
-        batch = batch.where(F.col("op") != OP_ERROR)
-        self._resolve_auto(batch)
-        if self.key_bucket == "auto":
-            return  # empty seed batch, no state yet: nothing to derive from
-        env_cols = ENVELOPE_COLS
-        w = Window.partitionBy("tbl", "id").orderBy("seq")
-        if self.key_bucket is not None:
-            # bucketed layout: a key's WHOLE history shares one bucket
-            # (the bucket is a deterministic function of id), so the
-            # per-(tbl, id) interval window never spans buckets and the
-            # touched unit is the (tbl, bucket) pair — same discipline
-            # as MergeSink's bucketed fold
-            from dumpr_spark.streaming.sink import _pair_filter
+        super()._merge(batch.where(F.col("op") != OP_ERROR), batch_id)
 
-            kb_batch = batch.withColumn("_kb", self._kb())
-            touched = [
-                (r["tbl"], r["_kb"])
-                for r in kb_batch.select("tbl", "_kb").distinct().collect()
-            ]
-            if not touched:
-                return
-            # touched-dirs scan — O(touched) listing, not O(all buckets);
-            # _pair_filter stays for its NULL-bucket raise (see
-            # MergeSink._read_touched)
-            current = self._read_touched(touched)
-            prior = current.where(_pair_filter(touched)).drop("valid_to", "_kb")
-            merged = prior.unionByName(batch.select(*env_cols))
-            merged = merged.dropDuplicates(["tbl", "id", "seq"])
-            next_touched = (
-                merged.withColumn("valid_to", F.lead("seq").over(w))
-                .withColumn("_kb", self._kb())
-            )
-            self._commit(next_touched, touched, batch_id)
-            self._maybe_compact_files(batch_id)
-            return
-        touched = [r["tbl"] for r in batch.select("tbl").distinct().collect()]
-        if not touched:
-            return
-        # same pre-write NULL/empty-tbl refusal as MergeSink's plain path
-        # (the bucketed path above gets it via _pair_filter)
-        from dumpr_spark.streaming.sink import _check_tbls
-
-        _check_tbls(touched)
-        current = self._read_raw()
-        # versions already persisted for the touched tables, stripped back to
-        # raw change rows (valid_to is derived state, recomputed below)
-        prior = current.where(F.col("tbl").isin(touched)).drop("valid_to")
-        merged = prior.unionByName(batch.select(*env_cols))
-        # (tbl,id,seq) is the change identity — replayed batches collapse here
+    def _fold(self, current: DataFrame, batch: DataFrame) -> DataFrame:
+        """Re-derive the touched slices' versions: persisted change rows
+        (valid_to is derived state, recomputed here) ∪ batch, deduplicated
+        on the change identity (tbl, id, seq) so replayed batches
+        collapse, then valid_to = the key's next seq."""
+        merged = current.drop("valid_to").unionByName(batch.select(*ENVELOPE_COLS))
         merged = merged.dropDuplicates(["tbl", "id", "seq"])
-        next_touched = merged.withColumn("valid_to", F.lead("seq").over(w))
-        self._commit(next_touched, touched, batch_id)
-        self._maybe_compact_files(batch_id)
+        w = Window.partitionBy("tbl", "id").orderBy("seq")
+        return merged.withColumn("valid_to", F.lead("seq").over(w))
 
 
 def start_history_stream(
@@ -204,15 +149,8 @@ def start_history_stream(
     threshold (None disables) — see MergeSink._check_bucket_growth (a
     history slice's footer count includes closed versions, which is the
     honest unit: the rewrite term pays every persisted row)."""
-    sink = HistorySink(changes.sparkSession, history_path,
-                       errors_path=errors_path, key_bucket=key_bucket,
-                       compact_every_n_batches=compact_every_n_batches,
-                       growth_warn_rows_per_bucket=growth_warn_rows_per_bucket)
-    writer = (
-        changes.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink_stream(HistorySink, changes, history_path,
+                              checkpoint_path, trigger_available_now,
+                              errors_path, output_mode, key_bucket,
+                              compact_every_n_batches,
+                              growth_warn_rows_per_bucket)

@@ -2,13 +2,27 @@
 
 The merge sink is the streaming materializer: each micro-batch of envelope
 rows is folded into a keyed current-state parquet table (last-write-wins by
-seq). Parquet has no MERGE, so the fold is read-modify-write — but only over
-the ``tbl=`` partitions the batch actually touches: untouched partitions are
-carried into the next state version by hardlink (metadata-only, no data read
-or rewrite), so per-batch work is O(touched state), not O(state). On an ACID
-table format the same `merge_batch` logic becomes a real MERGE INTO with
-file-level pruning. Idempotence (max-by-seq fold + delete tombstones) makes
-batch replay after checkpoint restart a no-op => exactly-once end to end.
+seq). Parquet has no MERGE, so the fold is read-modify-write over SLICES,
+the unit the sink rewrites: a ``tbl=X`` directory in the plain layout, or a
+``tbl=X/_kb=N`` directory in the bucketed one (`MergeSink`'s
+``key_bucket``). Every rewrite takes one slice path, whatever the layout:
+
+- `MergeSink._touched` names the slices a frame's rows fall in, as
+  ``(tbl,)`` or ``(tbl, _kb)`` tuples;
+- `MergeSink._read_slices` reads the persisted rows of those slices;
+- `MergeSink._fold` folds a batch into them — the one step a subclass
+  supplies (`HistorySink` folds to validity intervals);
+- `MergeSink._commit` writes the folded slices, carries every untouched
+  slice into the next state version by hardlink (metadata-only, no data
+  read or rewrite) and swaps that version in.
+
+`_merge` (one micro-batch) and `_drop_rows` (the `compact` and
+`prune_closed_before` maintenance rewrites) are its two callers, and
+neither branches on the layout. Per-batch work is O(touched slices), not
+O(state). On an ACID table format the same fold becomes a real MERGE INTO
+with file-level pruning. Idempotence (max-by-seq fold + delete
+tombstones) makes batch replay after checkpoint restart a no-op =>
+exactly-once end to end.
 
 Deletes persist as tombstone rows (op='delete') rather than vanishing: the
 fold is incremental across micro-batches, and an out-of-order or replayed
@@ -24,8 +38,8 @@ touched-slice collect, the dead-letter probe, the fold-plus-write) re-runs
 the whole upstream micro-batch: the source scan, the shuffle and any
 stateful operator, whose state-store load, update and commit then happen
 once per action. `MergeSink.__call__` is that shared entry for the merge
-sinks (HistorySink overrides `_merge`, not `__call__`); `JdbcMergeSink`
-and `TypedViewSink` follow the same rule.
+sinks (a subclass supplies `_fold`, not `__call__`); `JdbcMergeSink` and
+`TypedViewSink` follow the same rule.
 """
 
 from __future__ import annotations
@@ -530,6 +544,36 @@ def _link_tree(src: str, dst: str) -> None:
             os.link(os.path.join(root, f), os.path.join(troot, f))
 
 
+def _link_untouched(src: str, dst: str, cols: list, touched: set,
+                    inner: set, key: tuple = ()) -> None:
+    """Hardlink every slice dir under `src` whose key tuple is not in
+    `touched` into the same place under `dst`. `cols` are the slice
+    columns, one directory level each; a dir whose key is in `inner` (a
+    proper prefix of a touched slice, i.e. a touched table of the
+    bucketed layout) is descended into instead of linked whole."""
+    prefix = cols[len(key)] + "="
+    for d in os.listdir(src):
+        if not d.startswith(prefix):
+            continue
+        k = key + (unquote(d[len(prefix):]),)
+        if k in inner:
+            _link_untouched(os.path.join(src, d), os.path.join(dst, d),
+                            cols, touched, inner, k)
+        elif k not in touched:
+            _link_tree(os.path.join(src, d), os.path.join(dst, d))
+
+
+def _move_into(src: str, dst: str) -> None:
+    """Rename `src` to `dst`; where `dst` already exists, move `src`'s
+    entries into it instead (a touched table whose untouched buckets were
+    linked in first)."""
+    if not os.path.exists(dst):
+        os.rename(src, dst)
+        return
+    for e in os.listdir(src):
+        _move_into(os.path.join(src, e), os.path.join(dst, e))
+
+
 class MergeSink:
     """foreachBatch target maintaining a current-state table at `state_path`.
 
@@ -582,6 +626,12 @@ class MergeSink:
     GROWTH_WARN_FACTOR x the auto rows-per-bucket target; None disables),
     naming `suggest_migration` — the maintenance call that re-derives the
     policy from live state when outgrown — and `migrate_key_bucket`.
+
+    Both layouts share one slice path (see the module docstring): a batch
+    is `_touched` -> `_read_slices` -> `_fold` -> `_commit`, and the
+    maintenance rewrites (`compact`, `HistorySink.prune_closed_before`)
+    are `_drop_rows` over the same read and commit. A subclass supplies
+    `_fold` only, plus its persisted `_schema`.
     """
 
     # persisted-row schema; subclasses (HistorySink) extend the envelope
@@ -590,7 +640,6 @@ class MergeSink:
     def __init__(self, spark: SparkSession, state_path: str,
                  errors_path: str | None = None, key_bucket=None,
                  compact_every_n_batches: int | None = None,
-                 compact_target_file_mb: int = 128,
                  growth_warn_rows_per_bucket: int | None =
                  GROWTH_WARN_FACTOR * AUTO_TARGET_ROWS_PER_BUCKET):
         self.spark = spark
@@ -600,7 +649,6 @@ class MergeSink:
         if compact_every_n_batches is not None and compact_every_n_batches < 1:
             raise ValueError("compact_every_n_batches must be >= 1 (or None)")
         self.compact_every_n_batches = compact_every_n_batches
-        self.compact_target_file_mb = compact_target_file_mb
         if (growth_warn_rows_per_bucket is not None
                 and growth_warn_rows_per_bucket < 1):
             raise ValueError("growth_warn_rows_per_bucket must be >= 1 (or None)")
@@ -720,9 +768,7 @@ class MergeSink:
         for a bucketed sink; raises on a plain one (there is no pinned
         policy to outgrow — adopting bucketing for a plain state is a
         design choice, not drift)."""
-        self._resolve_auto()
-        self._recover()
-        self._validate_layout()
+        self._ready()
         if self.key_bucket is None or self.key_bucket == "auto":
             raise ValueError(
                 "suggest_migration checks a PINNED bucket layout for "
@@ -795,7 +841,7 @@ class MergeSink:
         window, which remains the right call for very large states."""
         n = self.compact_every_n_batches
         if n and (int(batch_id) + 1) % n == 0:
-            self.compact_files(target_file_mb=self.compact_target_file_mb)
+            self.compact_files()
 
     def _kb(self, id_col=None):
         return self.key_bucket(
@@ -809,6 +855,34 @@ class MergeSink:
         return StructType(
             list(self._schema.fields) + [StructField("_kb", IntegerType())]
         )
+
+    def _slice_cols(self) -> list[str]:
+        """The partition columns that name a slice, one dir level each."""
+        return ["tbl", "_kb"] if self.key_bucket else ["tbl"]
+
+    def _keyed(self, df: DataFrame) -> DataFrame:
+        """`df` with its rows' `_kb` bucket in the bucketed layout."""
+        return df.withColumn("_kb", self._kb()) if self.key_bucket else df
+
+    def _ready(self) -> None:
+        """The preamble of every state access: adopt the stamped layout of
+        an auto sink (marker-only), restore a torn swap, and refuse a
+        layout this sink does not match — before anything reads or swaps."""
+        self._resolve_auto()
+        self._recover()
+        self._validate_layout()
+
+    def _stamp_policy(self, root: str) -> None:
+        """Stamp the bucket-policy identity into `root/_kb_policy.json`
+        for `_validate_layout`'s drift check; a no-op for a plain sink or
+        an opaque callable. Hidden (underscore) file, invisible to the
+        parquet reader, and re-stamped after every rewrite that drops
+        root-level extras (`_commit`, `compact_files`,
+        `migrate_key_bucket`)."""
+        pol = self._kb_policy()
+        if pol is not None:
+            with open(os.path.join(root, "_kb_policy.json"), "w") as f:
+                json.dump(pol, f)
 
     def _recover(self) -> None:
         """Crash between the two swap renames leaves state absent + a backup
@@ -1004,9 +1078,7 @@ class MergeSink:
         """Full persisted state INCLUDING delete tombstones (+ the `_kb`
         partition column in bucketed mode — internal, dropped by
         read_state)."""
-        self._resolve_auto()  # marker-only: adopt an existing layout
-        self._recover()
-        self._validate_layout()
+        self._ready()
         schema = self._ext_schema() if self.key_bucket else self._schema
         if not os.path.exists(self.state_path):
             return self.spark.createDataFrame([], schema)
@@ -1032,9 +1104,7 @@ class MergeSink:
         still apply `_pair_filter` on top — it carries the loud
         NULL-bucket raise, and the redundant predicate prunes nothing
         further."""
-        self._resolve_auto()
-        self._recover()
-        self._validate_layout()
+        self._ready()
         schema = self._ext_schema()
         if not os.path.exists(self.state_path):
             return self.spark.createDataFrame([], schema)
@@ -1059,39 +1129,53 @@ class MergeSink:
             .parquet(*dirs)
         )
 
+    def _touched(self, df: DataFrame) -> list[tuple]:
+        """The slices `df`'s rows fall in: ``(tbl,)`` tuples in the plain
+        layout, ``(tbl, _kb)`` in the bucketed one (`df` then carries
+        `_kb`). One small collect, bounded by the tables x buckets the
+        frame spans, not by its rows."""
+        cols = self._slice_cols()
+        return [tuple(r) for r in df.select(*cols).distinct().collect()]
+
+    def _read_slices(self, touched: list[tuple]) -> DataFrame:
+        """The persisted rows (tombstones and `_kb` included) of the
+        `touched` slices. Raises on a NULL/empty table name or a NULL
+        bucket, before any state mutates."""
+        if self.key_bucket:
+            # touched-dirs scan: O(touched) listing, not O(all buckets) —
+            # see _read_touched; _pair_filter stays for its NULL-bucket raise
+            return self._read_touched(touched).where(_pair_filter(touched))
+        tbls = [tbl for (tbl,) in touched]
+        _check_tbls(tbls)
+        return self._read_raw().where(F.col("tbl").isin(tbls))
+
+    def _fold(self, current: DataFrame, batch: DataFrame) -> DataFrame:
+        """Fold `batch` into `current`, the persisted rows of the slices it
+        touches (neither carries `_kb`): union + per-key max_by(seq), with
+        deletes kept as tombstones (see the module docstring). The one
+        step of the slice path a subclass replaces."""
+        return materialize(current.unionByName(batch), keep_tombstones=True)
+
+    def _drop_rows(self, cond: Column, tag: str) -> None:
+        """Maintenance rewrite: drop the persisted rows matching `cond`.
+        Only the slices holding such rows are read and rewritten; every
+        other slice carries forward by hardlink."""
+        touched = self._touched(self._read_raw().where(cond))
+        if touched:
+            self._commit(self._read_slices(touched).where(~cond), touched, tag)
+
     def read_state(self) -> DataFrame:
         """The live materialized view: tombstones are an implementation detail
         of the incremental fold, not part of the entity-map contract (and
         so is the bucketed layout's `_kb`)."""
-        out = self._read_raw().where(F.col("op") != OP_DELETE)
-        return out.drop("_kb") if self.key_bucket else out
+        return self._read_raw().where(F.col("op") != OP_DELETE).drop("_kb")
 
     def compact(self) -> None:
-        """Drop delete tombstones (full rewrite of touched partitions —
-        (tbl, bucket) slices in bucketed mode). Safe once the feed
-        guarantees no event with a lower seq than a persisted tombstone
-        can still arrive (e.g. after a checkpoint epoch rolls)."""
-        raw = self._read_raw()
-        if self.key_bucket:
-            pairs = [
-                (r["tbl"], r["_kb"])
-                for r in raw.where(F.col("op") == OP_DELETE)
-                .select("tbl", "_kb").distinct().collect()
-            ]
-            if pairs:
-                keep = (
-                    raw.where(_pair_filter(pairs))
-                    .where(F.col("op") != OP_DELETE)
-                )
-                self._commit(keep, pairs, "compact")
-            return
-        tombstoned = [
-            r["tbl"]
-            for r in raw.where(F.col("op") == OP_DELETE).select("tbl").distinct().collect()
-        ]
-        if tombstoned:
-            self._commit(raw.where(F.col("tbl").isin(tombstoned)).where(F.col("op") != OP_DELETE),
-                         tombstoned, "compact")
+        """Drop delete tombstones, rewriting only the slices that hold one.
+        Safe once the feed guarantees no event with a lower seq than a
+        persisted tombstone can still arrive (e.g. after a checkpoint
+        epoch rolls)."""
+        self._drop_rows(F.col("op") == OP_DELETE, "compact")
 
     def compact_files(self, target_file_mb: int = 128, order_by: list[str] | None = None) -> int:
         """Small-files maintenance: rewrite the state directory into
@@ -1113,9 +1197,7 @@ class MergeSink:
         so point lookups on the key prune row groups via footer stats."""
         from dumpr_spark.operators.scale import compact_small_files
 
-        self._resolve_auto()
-        self._recover()
-        self._validate_layout()
+        self._ready()
         if not os.path.exists(self.state_path):
             # a maintenance call before any batch has seeded state (e.g. a
             # cron firing against a not-yet-started stream) compacts
@@ -1127,31 +1209,26 @@ class MergeSink:
             self.spark, self.state_path, target_file_mb=target_file_mb,
             schema=schema, order_by=order_by,
         )
-        # the compactor's rewrite legitimately drops root-level extras —
-        # re-stamp the bucket-policy marker so a drifted sink started in
-        # the compact-to-next-batch window is still refused
-        pol = self._kb_policy() if self.key_bucket is not None else None
-        if pol is not None:
-            with open(os.path.join(self.state_path, "_kb_policy.json"), "w") as f:
-                json.dump(pol, f)
+        # re-stamp so a drifted sink started in the compact-to-next-batch
+        # window is still refused
+        self._stamp_policy(self.state_path)
         return n
 
-    def _commit(self, next_touched: DataFrame, touched: list, batch_id) -> None:
-        """Write the folded touched partitions, assemble the next state version
-        (hardlinking untouched partitions), and atomically swap it in.
+    def _commit(self, next_touched: DataFrame, touched: list[tuple],
+                batch_id) -> None:
+        """Write the folded touched slices, assemble the next state version
+        (hardlinking every untouched slice), and atomically swap it in.
 
-        `touched` is a list of tbl strings (default layout) or of
-        (tbl, _kb) pairs (bucketed layout — `next_touched` then carries
-        the _kb column); carry-forward granularity matches: whole
-        untouched tables link as one tree, and inside a touched table
-        only its UNTOUCHED buckets link."""
+        `touched` lists slice tuples (see `_touched`) and `next_touched`
+        carries the slice columns. An untouched table links as one tree;
+        inside a touched table of the bucketed layout only its untouched
+        buckets link."""
         tmp = f"{self.state_path}.tmp-{batch_id}"
         nxt = f"{self.state_path}.next-{batch_id}"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(nxt, ignore_errors=True)
-        bucketed = self.key_bucket is not None
-        part_cols = ["tbl", "_kb"] if bucketed else ["tbl"]
-        if bucketed:
+        part_cols = self._slice_cols()
+        if self.key_bucket:
             # cluster rows by their slice before the partitioned write so
             # each touched (tbl, bucket) dir receives EXACTLY ONE file —
             # unclustered, every shuffle task writes into every touched
@@ -1168,52 +1245,18 @@ class MergeSink:
             next_touched = next_touched.repartition(*[F.col(c) for c in part_cols])
         next_touched.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
 
-        if bucketed:
-            touched_by_tbl: dict = {}
-            for tbl, kb in touched:
-                touched_by_tbl.setdefault(tbl, set()).add(str(kb))
-        touched_set = touched_by_tbl if bucketed else set(touched)
         os.makedirs(nxt)
         if os.path.exists(self.state_path):
-            for d in os.listdir(self.state_path):
-                if not d.startswith("tbl="):
-                    continue
-                tblval = unquote(d[len("tbl="):])
-                # carry forward untouched partitions without reading a byte
-                if tblval not in touched_set:
-                    _link_tree(os.path.join(self.state_path, d), os.path.join(nxt, d))
-                elif bucketed:
-                    # touched table: link only its untouched buckets
-                    src_t = os.path.join(self.state_path, d)
-                    dst_t = os.path.join(nxt, d)
-                    os.makedirs(dst_t, exist_ok=True)
-                    for kd in os.listdir(src_t):
-                        if (kd.startswith("_kb=")
-                                and unquote(kd[len("_kb="):])
-                                not in touched_set[tblval]):
-                            _link_tree(os.path.join(src_t, kd),
-                                       os.path.join(dst_t, kd))
+            # carry forward untouched slices without reading a byte
+            keys = {tuple(str(v) for v in t) for t in touched}
+            inner = {k[:i] for k in keys for i in range(1, len(k))}
+            _link_untouched(self.state_path, nxt, part_cols, keys, inner)
         for d in os.listdir(tmp):
-            # a touched partition that folded to zero rows simply has no dir
-            if not d.startswith("tbl="):
-                continue
-            if bucketed and os.path.isdir(os.path.join(nxt, d)):
-                # table dir pre-created by the bucket carry-forward:
-                # move the freshly written bucket dirs in beside them
-                for kd in os.listdir(os.path.join(tmp, d)):
-                    os.rename(os.path.join(tmp, d, kd),
-                              os.path.join(nxt, d, kd))
-            else:
-                os.rename(os.path.join(tmp, d), os.path.join(nxt, d))
+            # a touched slice that folded to zero rows simply has no dir
+            if d.startswith("tbl="):
+                _move_into(os.path.join(tmp, d), os.path.join(nxt, d))
         shutil.rmtree(tmp, ignore_errors=True)
-        if bucketed:
-            # stamp the bucket-policy identity for _validate_layout's
-            # drift check (re-stamped every commit: compact_small_files'
-            # rewrite legitimately drops root-level extras)
-            pol = self._kb_policy()
-            if pol is not None:
-                with open(os.path.join(nxt, "_kb_policy.json"), "w") as f:
-                    json.dump(pol, f)
+        self._stamp_policy(nxt)
 
         # atomic-enough swap for local FS; object stores use rename-free commit.
         # After _recover(), a .bak that coexists with state is stale — drop it.
@@ -1223,7 +1266,7 @@ class MergeSink:
             os.rename(self.state_path, bak)
         os.rename(nxt, self.state_path)
         shutil.rmtree(bak, ignore_errors=True)
-        if bucketed:
+        if self.key_bucket:
             # post-commit growth signal over the slices just written —
             # metadata-only (parquet footers), warns once per instance
             self._check_bucket_growth(touched)
@@ -1250,57 +1293,21 @@ class MergeSink:
             batch.unpersist()
 
     def _merge(self, batch: DataFrame, batch_id: int) -> None:
+        """Fold one micro-batch into the slices it touches."""
         # derive from DATA rows only: with errors_path=None in-band
         # op='error' rows are still in the batch here (materialize()
         # drops them later), and an error row's NULL/"" id would flip
         # the dispatch to hash and pin the wrong layout for the
-        # stream's lifetime — HistorySink filters errors before its
-        # resolve for the same reason
+        # stream's lifetime
         self._resolve_auto(batch.where(F.col("op") != OP_ERROR))
         if self.key_bucket == "auto":
             return  # empty seed batch, no state yet: nothing to derive from
-        if self.key_bucket is not None:
-            # bucketed layout: the touched unit is the (tbl, bucket) pair
-            # — still metadata-sized (bounded by tables x buckets a batch
-            # can span, not rows)
-            batch = batch.withColumn("_kb", self._kb())
-            touched = [
-                (r["tbl"], r["_kb"])
-                for r in batch.select("tbl", "_kb").distinct().collect()
-            ]
-            if not touched:
-                return
-            # touched-dirs scan (runs _recover first): O(touched) listing,
-            # not O(all buckets) — see _read_touched; _pair_filter stays
-            # for its NULL-bucket raise. The fold drops _kb (materialize
-            # returns envelope columns) and it is recomputed —
-            # deterministic in id
-            current = self._read_touched(touched)
-            folded = materialize(
-                current.where(_pair_filter(touched)).drop("_kb")
-                .unionByName(batch.drop("_kb")),
-                keep_tombstones=True,
-            )
-            self._commit(folded.withColumn("_kb", self._kb()), touched, batch_id)
-            self._maybe_compact_files(batch_id)
-            return
-        # the touched-table list is tiny (bounded by table count, not rows) —
-        # the one acceptable collect in this path
-        touched = [r["tbl"] for r in batch.select("tbl").distinct().collect()]
+        touched = self._touched(self._keyed(batch))
         if not touched:
             return
-        # NULL/empty tbl is unrepresentable in the Hive layout in PLAIN
-        # mode too (isin(['']) can never match the read-back NULL) — same
-        # loud pre-write raise the bucketed path gets via _pair_filter
-        _check_tbls(touched)
-        current = self._read_raw()  # runs _recover() first
-        # fold ONLY the touched partitions: union + per-key max_by(seq);
-        # deletes persist as tombstones (see module docstring)
-        next_touched = materialize(
-            current.where(F.col("tbl").isin(touched)).unionByName(batch),
-            keep_tombstones=True,
-        )
-        self._commit(next_touched, touched, batch_id)
+        # the fold drops _kb and it is recomputed — deterministic in id
+        folded = self._fold(self._read_slices(touched).drop("_kb"), batch)
+        self._commit(self._keyed(folded), touched, batch_id)
         self._maybe_compact_files(batch_id)
 
 
@@ -1370,15 +1377,34 @@ def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
         # file and the write parallelism is the shuffle width.
         out = out.repartition(F.col("tbl"), F.col("_kb"))
         out.write.mode("overwrite").partitionBy("tbl", "_kb").parquet(tmp)
-        pol = MergeSink(spark, state_path, key_bucket=key_bucket)._kb_policy()
-        if pol is not None:
-            with open(os.path.join(tmp, "_kb_policy.json"), "w") as f:
-                json.dump(pol, f)
+        MergeSink(spark, state_path, key_bucket=key_bucket)._stamp_policy(tmp)
     bak = state_path + ".migrate-bak"
     shutil.rmtree(bak, ignore_errors=True)
     os.rename(state_path, bak)
     os.rename(tmp, state_path)
     shutil.rmtree(bak, ignore_errors=True)
+
+
+def _start_sink_stream(sink_cls, changes: DataFrame, state_path: str,
+                       checkpoint_path: str, trigger_available_now: bool,
+                       errors_path: str | None, output_mode: str, key_bucket,
+                       compact_every_n_batches: int | None,
+                       growth_warn_rows_per_bucket: int | None):
+    """The one writeStream body of `start_merge_stream` and
+    `start_history_stream`: build the `sink_cls` sink and start the
+    foreachBatch query that feeds it."""
+    sink = sink_cls(changes.sparkSession, state_path, errors_path=errors_path,
+                    key_bucket=key_bucket,
+                    compact_every_n_batches=compact_every_n_batches,
+                    growth_warn_rows_per_bucket=growth_warn_rows_per_bucket)
+    writer = (
+        changes.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_path)
+        .foreachBatch(sink)
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_merge_stream(
@@ -1405,16 +1431,12 @@ def start_merge_stream(
     compact_every_n_batches: optional small-files auto-cadence — see
     MergeSink._maybe_compact_files.
     growth_warn_rows_per_bucket: the seed-pinned layout's growth-signal
-    threshold (None disables) — see MergeSink._check_bucket_growth."""
-    sink = MergeSink(changes.sparkSession, state_path, errors_path=errors_path,
-                     key_bucket=key_bucket,
-                     compact_every_n_batches=compact_every_n_batches,
-                     growth_warn_rows_per_bucket=growth_warn_rows_per_bucket)
-    writer = (
-        changes.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    threshold (None disables) — see MergeSink._check_bucket_growth.
+
+    The sink class is looked up as the module global `MergeSink` at call
+    time, so a caller that rebinds that name (a traced subclass) gets its
+    subclass here."""
+    return _start_sink_stream(MergeSink, changes, state_path, checkpoint_path,
+                              trigger_available_now, errors_path, output_mode,
+                              key_bucket, compact_every_n_batches,
+                              growth_warn_rows_per_bucket)

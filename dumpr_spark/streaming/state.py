@@ -74,7 +74,8 @@ def streaming_tx_filter(events: DataFrame) -> DataFrame:
 
 
 def _fold_tx_rows(rows: pd.DataFrame, in_tx: bool, buf: list[dict]):
-    """Shared fold for both stateful APIs: returns (released, in_tx, buf)."""
+    """The tx fold over one source's rows in seq order: returns
+    (released, in_tx, buf)."""
     out: list[dict] = []
     for r in rows.sort_values("seq").itertuples(index=False):
         et = r.event_type
@@ -97,49 +98,6 @@ def _fold_tx_rows(rows: pd.DataFrame, in_tx: bool, buf: list[dict]):
                 # straight through, mirroring (rf result input) stream.clj:52
                 out.append(row)
     return out, in_tx, buf
-
-
-try:  # transformWithState is the Spark 4.x arbitrary-state API
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class TxFilterProcessor(StatefulProcessor):
-        """transformWithStateInPandas form of the tx filter — same semantics
-        as `streaming_tx_filter`, on the typed value-state API (explicit state
-        variables, RocksDB-native layout, per-key timers available for a
-        future tx-timeout eviction policy)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("tx", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            in_tx, buffer = self._state.get() if self._state.exists() else (False, "[]")
-            buf = json.loads(buffer)
-            # concat ALL Arrow chunks before the fold: chunk boundaries are
-            # arbitrary, and the seq sort must be global over the micro-batch
-            # (a commit marker can arrive in an earlier chunk than its rows)
-            out, in_tx, buf = _fold_tx_rows(pd.concat(list(rows)), in_tx, buf)
-            self._state.update((in_tx, json.dumps(buf)))
-            yield pd.DataFrame(out, columns=[f.name for f in TX_OUT_SCHEMA.fields])
-
-        def close(self) -> None:
-            pass
-
-    def streaming_tx_filter_tws(events: DataFrame) -> DataFrame:
-        """Spark 4 transformWithStateInPandas variant of streaming_tx_filter.
-
-        NOTE: the TWS Python state-server protocol needs `google.protobuf`
-        at runtime (not bundled in every environment — the test skips where
-        absent). `streaming_tx_filter` (applyInPandasWithState) is the
-        dependency-free equivalent."""
-        return events.groupBy("source").transformWithStateInPandas(
-            statefulProcessor=TxFilterProcessor(),
-            outputStructType=TX_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-
-except ImportError:  # pragma: no cover - pre-4.0 Spark
-    streaming_tx_filter_tws = None
 
 
 # --------------------------------------------------------------------------

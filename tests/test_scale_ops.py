@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from dumpr_spark.operators.scale import (
     explain_str,
-    repartition_for_explode,
     salted_join,
     write_bucketed,
     write_partitioned,
@@ -281,14 +280,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan and "o_orderstatus" in plan.split("PartitionFilters")[1].split("\n")[0]
     expected = o.where(F.col("o_orderstatus") == "F").count()
     assert back.count() == expected
-
-
-def test_repartition_for_explode_spreads_rows(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents").limit(64)
-    fanned = repartition_for_explode(d)
-    assert fanned.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    keyed = repartition_for_explode(d, ["lang"])
-    assert keyed.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_asof_join_union_form_matches_naive(spark):

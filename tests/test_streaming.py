@@ -441,7 +441,8 @@ def test_streaming_tx_filter_across_batches(spark, tmp_path):
     assert [(r["payload"], r["seq"]) for r in rows] == [("r1", 2), ("r2", 3)]
 
 
-@pytest.mark.parametrize("kind", ["merge_bucketed", "history"])
+@pytest.mark.parametrize("kind", ["merge_plain", "merge_bucketed",
+                                  "history_plain", "history_bucketed"])
 def test_sink_computes_tx_filter_batch_once(spark, tmp_path, kind):
     """A foreachBatch action re-runs the upstream micro-batch plan, state
     store included, so a sink that ran two actions on an unpersisted batch
@@ -482,14 +483,12 @@ def test_sink_computes_tx_filter_batch_once(spark, tmp_path, kind):
     )
     state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
     before = persisted_rdds()
-    if kind == "history":
-        sink = HistorySink(spark, state)
-        q = start_history_stream(changes, state, ckpt, output_mode="append")
-    else:
-        kb = KeyBucket(width=4)
-        sink = MergeSink(spark, state, key_bucket=kb)
-        q = start_merge_stream(changes, state, ckpt, output_mode="append",
-                               key_bucket=kb)
+    sink_kind, layout = kind.split("_")
+    kb = KeyBucket(width=4) if layout == "bucketed" else None
+    sink_cls, start = ((HistorySink, start_history_stream) if sink_kind == "history"
+                       else (MergeSink, start_merge_stream))
+    sink = sink_cls(spark, state, key_bucket=kb)
+    q = start(changes, state, ckpt, output_mode="append", key_bucket=kb)
     q.awaitTermination(120)
     assert q.exception() is None
     progress = json.loads(q.lastProgress.json)
@@ -503,46 +502,6 @@ def test_sink_computes_tx_filter_batch_once(spark, tmp_path, kind):
     with pytest.raises(ValueError, match="unrepresentable table name"):
         sink(bad, 1)
     assert persisted_rdds() == before
-
-
-def test_streaming_tx_filter_transform_with_state(spark, tmp_path):
-    """Same cross-batch tx semantics through the Spark 4
-    transformWithStateInPandas API (typed value state)."""
-    from dumpr_spark.streaming.state import streaming_tx_filter_tws
-
-    if streaming_tx_filter_tws is None:
-        pytest.skip("transformWithState unavailable")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState state-server protocol needs protobuf (absent here)")
-
-    src = str(tmp_path / "tws_src")
-    write_events(src, [
-        {"source": "s1", "event_type": "tx-begin", "tbl": None, "payload": None, "seq": 1},
-        {"source": "s1", "event_type": "write", "tbl": "w", "payload": "r1", "seq": 2},
-    ], file_name="b1.json")
-    write_events(src, [
-        {"source": "s1", "event_type": "write", "tbl": "w", "payload": "r2", "seq": 3},
-        {"source": "s1", "event_type": "tx-commit", "tbl": None, "payload": None, "seq": 4},
-        {"source": "s1", "event_type": "tx-begin", "tbl": None, "payload": None, "seq": 5},
-        {"source": "s1", "event_type": "write", "tbl": "w", "payload": "r3", "seq": 6},
-        {"source": "s1", "event_type": "tx-rollback", "tbl": None, "payload": None, "seq": 7},
-    ], file_name="b2.json")
-
-    events = (
-        spark.readStream.schema("source string, event_type string, tbl string, payload string, seq long")
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
-    q = (
-        streaming_tx_filter_tws(events)
-        .writeStream.format("memory").queryName("tws_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT payload, seq FROM tws_test ORDER BY seq").collect()
-    assert [(r["payload"], r["seq"]) for r in rows] == [("r1", 2), ("r2", 3)]
 
 
 def test_stream_static_join(spark, tmp_path):
@@ -910,6 +869,70 @@ def test_merge_sink_key_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
         assert bucket_files(kb) == before[kb], f"bucket {kb} was rewritten"
     got = {r["id"] for r in sink.read_state().collect()}
     assert {str(i) for i in range(300, 400, 5)} <= got
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+@pytest.mark.parametrize("rewrite", ["compact", "prune"])
+def test_maintenance_rewrite_links_slices_without_matching_rows(
+        spark, tmp_path, rewrite, layout):
+    """`MergeSink.compact` and `HistorySink.prune_closed_before` rewrite
+    only the slices holding rows to drop: every other slice keeps the same
+    files, inodes and mtimes (hardlink carry-forward), and the live state
+    is unchanged."""
+    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
+    from dumpr_spark.streaming.history import HistorySink
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
+
+    state = str(tmp_path / "state")
+    kb = KeyBucket(width=10) if layout == "bucketed" else None
+    sink = (MergeSink if rewrite == "compact" else HistorySink)(
+        spark, state, key_bucket=kb)
+
+    def env(op, tbl, i, seq):
+        return (op, tbl, str(i), json.dumps({"id": i, "v": seq}), None, "f1", seq, seq)
+
+    sink(spark.createDataFrame(
+        [env("upsert", t, i, i) for t in ("a", "b") for i in range(40)],
+        ENVELOPE_SCHEMA), 0)
+    # keys 10-14 of table a (bucket 1): tombstones for compact, closed
+    # versions for prune — the only rows the rewrite may drop
+    op = "delete" if rewrite == "compact" else "upsert"
+    sink(spark.createDataFrame(
+        [env(op, "a", i, 100 + i) for i in range(10, 15)], ENVELOPE_SCHEMA), 1)
+
+    depth = 1 if kb is None else 2
+
+    def slices():
+        out: dict = {}
+        for root, _dirs, files in os.walk(state):
+            rel = os.path.relpath(root, state).split(os.sep)
+            if len(rel) < depth or not rel[0].startswith("tbl="):
+                continue
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                out.setdefault("/".join(rel[:depth]), {})[
+                    os.path.join(*rel[depth:], f)] = (st.st_ino, st.st_mtime_ns)
+        return out
+
+    def live():
+        return sorted(tuple(r) for r in sink.read_state().collect())
+
+    hit = "tbl=a" if kb is None else "tbl=a/_kb=1"
+    before, live_before = slices(), live()
+    assert len(before) == (2 if kb is None else 8)
+    if rewrite == "compact":
+        sink.compact()
+        assert sink._read_raw().where(F.col("op") == "delete").count() == 0
+    else:
+        sink.prune_closed_before(1000)
+        assert sink.read_history().where(F.col("valid_to").isNotNull()).count() == 0
+    after = slices()
+    assert after.keys() == before.keys()
+    for name in before:
+        if name != hit:
+            assert after[name] == before[name], f"{name} was rewritten"
+    assert after[hit] != before[hit]
+    assert live() == live_before
 
 
 def test_history_sink_key_bucketed_equals_plain(spark, tmp_path):
