@@ -7,6 +7,12 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 The actual inventory lives in ``dumpr_spark.queries`` (one module per operator
 family, SURVEY.md §2.2); this file is the thin adapter the driver imports.
+
+``queries()`` is in walk order, because the driver checks only a prefix of
+it each round: first the names whose source fingerprint has no green driver
+row in ``dumpr_spark/queries/verified.json`` (new, red, or edited since),
+then the rest, oldest green round first. ``dumpr_spark/queries/walk.py``
+computes that order and folds each round's CORRECTNESS_r{N}.json back in.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.2."""
+    """One entry per implemented operator from SURVEY.md §2.2, in walk order."""
     from dumpr_spark import queries as q
 
     def wrap(fn):

@@ -68,7 +68,10 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: q.fn for name, q in REGISTRY.items()}
+    """Every builder, in the driver's walk order (see ``queries.walk``)."""
+    from dumpr_spark.queries.walk import walk
+
+    return {name: REGISTRY[name].fn for name in walk()}
 
 
 def oracle_sql() -> dict[str, str]:

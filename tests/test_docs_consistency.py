@@ -1,7 +1,8 @@
-"""The judge audits SURVEY/COVERAGE line by line against the registry; this
-pins the other direction — every shipped query is documented, so inventory
+"""SURVEY/COVERAGE/README against the registry: every shipped query is
+documented and declared, and the docs' registry counts match, so inventory
 drift (shipped-but-undeclared operators) fails the suite instead of being
-discovered at review time."""
+found at review time. The driver's walk order is computed, not kept by
+hand, and is tested in tests/test_walk.py."""
 
 from __future__ import annotations
 
@@ -26,51 +27,6 @@ def test_registry_count_claims_match():
     readme = open(os.path.join(REPO, "README.md")).read()
     assert f"{n} `queries()` entries" in cov, f"COVERAGE.md count != {n}"
     assert f"{n} (Spark builder, DuckDB oracle) pairs" in readme, f"README count != {n}"
-
-
-def test_rank_tiers_cover_every_query_exactly_once():
-    """The budget-capped driver walk depends on the rank partition being a
-    real partition: verified | new | late | never-green must tile the
-    registry with no overlaps (an overlap would let a stale-evidence name
-    shadow a never-checked one)."""
-    from dumpr_spark.queries import (
-        REGISTRY, _NEVER_GREEN, _R16_NEW, _VERIFIED_STALEST_FIRST,
-    )
-
-    names = set(REGISTRY)
-    tiers = [_R16_NEW, _NEVER_GREEN, *(v & names for v in _VERIFIED_STALEST_FIRST)]
-    union = set().union(*tiers)
-    assert union == names
-    for i, a in enumerate(tiers):
-        for b in tiers[i + 1:]:
-            assert not (a & b), f"rank tiers overlap: {a & b}"
-
-
-def test_round16_registration_count_claim_matches():
-    import re
-
-    from dumpr_spark.queries import _R16_NEW
-
-    cov = open(os.path.join(REPO, "COVERAGE.md")).read()
-    m = re.search(r"Round 16 \(`_R16_NEW`, (\d+) registrations", cov)
-    assert m, "COVERAGE.md round-16 registration claim missing"
-    assert int(m.group(1)) == len(_R16_NEW), (
-        f"COVERAGE.md claims {m.group(1)} round-16 registrations, "
-        f"registry has {len(_R16_NEW)}"
-    )
-
-
-def test_round16_eviction_budget_respected():
-    """The r15 verdict caps never-green backlog + _R16_NEW at <= 7 so the
-    50-slot driver walk re-certifies the whole 43-name r10 tier in one
-    round. An unplanned eviction (helper edit cascading into consumers)
-    silently eats a re-cert slot — fail loudly instead."""
-    from dumpr_spark.queries import _NEVER_GREEN, _R16_NEW
-
-    assert len(_NEVER_GREEN) + len(_R16_NEW) <= 7, (
-        f"driver budget blown: {len(_NEVER_GREEN)} never-green + "
-        f"{len(_R16_NEW)} new > 7 leaves the r10 tier partially stale"
-    )
 
 
 def _survey_section_2_2():
