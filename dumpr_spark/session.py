@@ -40,20 +40,152 @@ every warm pass (190-560 ms of compile time per pass on a 4-vCPU host); all
 costs about 110 MB heap plus 34 MB non-heap, about 40 KB per entry, so 4096
 holds the whole registry for about 2% of the 8 GB driver heap, and a
 working set as small as the mix costs only what it uses.
+
+Local files: without libhadoop (the session logs "Unable to load
+native-hadoop library"), Hadoop's `file:` filesystem forks a `chmod`
+process on every create, mkdir and setPermission, and a `readlink` on
+every link-status lookup, several per FileContext rename. A streaming
+micro-batch commits its offset, commit and source logs, the RocksDB state
+upload and the sink's files through it: in a `cdc_replicate` tail on a
+4-vCPU host that was 95 forks per batch, about 1.8 ms of CPU each, 0.17 s
+per batch that shows only in the JVM's reaped-children time. `get_spark`
+points the scheme at the three classes in `dumpr_spark/jvm`, which make
+the same `chmod(2)` and `lstat(2)` calls in-process and are Hadoop's
+classes otherwise (`.crc` sidecars, file modes, a FileContext rename that
+refuses an existing target). They are compiled once per version of their
+sources and of Hadoop's client API into `$XDG_CACHE_HOME/dumpr_spark`
+(default `~/.cache`; the first build takes about 3.5 s) and put on the
+driver classpath, which in `local[N]` is the executors' too. The tail then
+forks only Spark's `rm -rf` of RocksDB's local checkpoint dirs, 4-5 per
+batch, 0.010 s. Without a `javac` (`$JAVA_HOME/bin`, then `PATH`) the
+session logs one WARNING and keeps Hadoop's classes: results are the same,
+only the forks return. An `extra_conf` value for `spark.hadoop.fs.file.impl`
+wins over the engine's.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+_LOG = logging.getLogger(__name__)
 # the directory `dumpr_spark` is imported from, for the worker path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# sources of the engine's `file:` classes, and the Hadoop keys they serve
+_JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_LOCAL_FS = {
+    "spark.hadoop.fs.file.impl": "dumpr_spark.jvm.NoForkLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "dumpr_spark.jvm.NoForkLocalFs",
+}
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def _javac() -> str | None:
+    java_home = os.environ.get("JAVA_HOME")
+    if java_home and os.access(os.path.join(java_home, "bin", "javac"), os.X_OK):
+        return os.path.join(java_home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def localfs_jar() -> str | None:
+    """The jar of the engine's `file:` classes (`dumpr_spark/jvm`), compiled
+    once per version of their sources and of Hadoop's client API into the
+    user cache dir (not TMPDIR, which a caller may delete). None, after one
+    WARNING, when it cannot be built."""
+    jars = os.path.join(_find_spark_home(), "jars")
+    sources = sorted(glob.glob(os.path.join(_JVM_SRC, "*.java")))
+    digest = hashlib.sha256()
+    for api in sorted(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))):
+        digest.update(os.path.basename(api).encode())
+    for src in sources:
+        with open(src, "rb") as f:
+            digest.update(os.path.basename(src).encode() + b"\0" + f.read())
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+                         "dumpr_spark")
+    jar = os.path.join(cache, f"localfs-{digest.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    try:
+        javac = _javac()
+        if javac is None:
+            raise OSError("no javac in $JAVA_HOME/bin or on PATH")
+        os.makedirs(cache, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=cache) as tmp:
+            classes = os.path.join(tmp, "classes")
+            subprocess.run([javac, "--release", "17", "-cp", os.path.join(jars, "*"),
+                            "-d", classes, *sources],
+                           check=True, capture_output=True, text=True)
+            part = os.path.join(tmp, "localfs.jar")
+            with zipfile.ZipFile(part, "w") as z:
+                for root, _, files in os.walk(classes):
+                    for name in files:
+                        path = os.path.join(root, name)
+                        z.write(path, os.path.relpath(path, classes))
+            os.replace(part, jar)
+    except (OSError, subprocess.CalledProcessError) as e:
+        _LOG.warning("cannot build the engine's local filesystem classes, keeping "
+                     "Hadoop's (a chmod or readlink fork per local file): %s",
+                     getattr(e, "stderr", None) or e)
+        return None
+    return jar
+
+
+def _prepend(conf: dict[str, str], key: str, entry: str | None) -> None:
+    """Put `entry` first on the path-list conf `key`, keeping a caller's value."""
+    value = os.pathsep.join(p for p in (entry, conf.get(key)) if p)
+    if value:
+        conf[key] = value
+
+
+def session_conf(
+    cpus: int,
+    shuffle_partitions: int,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """Every conf `get_spark` sets besides the master and app name:
+    `extra_conf` wins over the engine's values, and the two path lists are
+    merged with it."""
+    jar = localfs_jar()
+    conf = {
+        # semantics
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",  # testdata events.ts is TIMESTAMP(NANOS)
+        # performance
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.default.parallelism": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.sql.codegen.cache.maxEntries": "4096",
+        "spark.ui.enabled": "false",
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.python.daemon.module": "dumpr_spark.worker_daemon",
+        **(_LOCAL_FS if jar else {}),
+        **(extra_conf or {}),
+    }
+    _prepend(conf, "spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+    # the master is local[N], so the driver's classpath is the executors' too
+    _prepend(conf, "spark.driver.extraClassPath", jar)
+    return conf
 
 
 def get_spark(
@@ -65,37 +197,10 @@ def get_spark(
     """Build (or reuse) a SparkSession configured for this engine.
 
     Local mode for tests/bench; on a cluster the master/deploy settings come
-    from spark-submit and only the semantic confs below matter.
+    from spark-submit and only the semantic confs of `session_conf` matter.
     """
     cpus = cpus or default_parallelism()
-    shuffle_partitions = shuffle_partitions or cpus
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        # semantics
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")  # testdata events.ts is TIMESTAMP(NANOS)
-        # performance
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        .config("spark.python.daemon.module", "dumpr_spark.worker_daemon")
-    )
-    conf = dict(extra_conf or {})
-    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
-    for k, v in conf.items():
+    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
+    for k, v in session_conf(cpus, shuffle_partitions or cpus, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

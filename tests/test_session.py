@@ -1,8 +1,17 @@
-"""Session settings that only show over many queries in one JVM."""
+"""Session settings that only show over many queries in one JVM, and the
+engine's `file:` filesystem classes with the jar `get_spark` builds them
+into."""
 
 from __future__ import annotations
 
+import logging
+import os
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
+
+from dumpr_spark import session
 
 
 def test_codegen_cache_holds_a_cyclic_query_set(spark):
@@ -19,3 +28,182 @@ def test_codegen_cache_holds_a_cyclic_query_set(spark):
     for df in plans:
         df.collect()
     assert compiled.getCount() - before == 0
+
+
+# --- the engine's `file:` classes (dumpr_spark/jvm) ---------------------------
+
+ENGINE_FS = "dumpr_spark.jvm.NoForkLocalFileSystem"
+ENGINE_FC = "dumpr_spark.jvm.NoForkLocalFs"
+
+
+@pytest.fixture(scope="module")
+def local_fs(spark):
+    """The `file:` (FileSystem, FileContext) pair of the session and the
+    same pair built from Hadoop's stock classes, by name."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    stock_conf = jvm.org.apache.hadoop.conf.Configuration(hconf)
+    stock_conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    stock_conf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    uri = jvm.java.net.URI("file:///")
+    fs, fc = jvm.org.apache.hadoop.fs.FileSystem, jvm.org.apache.hadoop.fs.FileContext
+    stock = fs.newInstance(uri, stock_conf)
+    yield {"engine": (fs.get(uri, hconf), fc.getFileContext(hconf)),
+           "stock": (stock, fc.getFileContext(stock_conf))}
+    stock.close()
+
+
+def test_file_scheme_runs_the_engine_classes(spark, local_fs):
+    hconf = spark._jsc.hadoopConfiguration()
+    assert hconf.get("fs.file.impl") == ENGINE_FS
+    fs, fc = local_fs["engine"]
+    assert fs.getClass().getName() == ENGINE_FS
+    assert fc.getDefaultFileSystem().getClass().getName() == ENGINE_FC
+    stock_fs, stock_fc = local_fs["stock"]
+    assert stock_fs.getClass().getName() == "org.apache.hadoop.fs.LocalFileSystem"
+    assert stock_fc.getDefaultFileSystem().getClass().getName() == \
+        "org.apache.hadoop.fs.local.LocalFs"
+
+
+def _local_fs_ops(spark, fs, fc, root):
+    """Modes, sidecars, a refused rename and link statuses after the same
+    operations, with `root` written as ROOT."""
+    jvm = spark._jvm
+    hfs = jvm.org.apache.hadoop.fs
+    P, perm = hfs.Path, hfs.permission.FsPermission
+    no_opts = spark.sparkContext._gateway.new_array(hfs.Options.CreateOpts, 0)
+    no_rename = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 0)
+
+    def mode(name):
+        return oct(os.stat(os.path.join(root, name)).st_mode & 0o7777)
+
+    out = {}
+    fs.mkdirs(P(f"file:{root}/fs_dir"), perm("750"))
+    fc.mkdir(P(f"file:{root}/fc_dir"), perm.getDirDefault(), True)
+    fs.create(P(f"file:{root}/fs_file")).close()
+    fc.create(P(f"file:{root}/fc_file"),
+              jvm.java.util.EnumSet.of(hfs.CreateFlag.CREATE), no_opts).close()
+    out["modes"] = {n: mode(n) for n in ("fs_dir", "fc_dir", "fs_file", "fc_file")}
+    fs.setPermission(P(f"file:{root}/fs_file"), perm("640"))
+    out["mode_640"] = mode("fs_file")
+    out["files"] = sorted(os.listdir(root))
+    try:
+        fc.rename(P(f"file:{root}/fc_file"), P(f"file:{root}/fs_file"), no_rename)
+        out["rename"] = "renamed"
+    except Exception as e:  # py4j's Py4JJavaError
+        out["rename"] = e.java_exception.getClass().getName()
+    os.symlink(os.path.join(root, "fs_file"), os.path.join(root, "link"))
+    for path in (f"file:{root}/link", f"{root}/link"):
+        for via, api in (("fs", fs), ("fc", fc)):
+            st = api.getFileLinkStatus(P(path))
+            out[via, path.replace(root, "ROOT")] = (
+                st.isSymlink(), st.isFile(), st.getLen(), st.getPath().toString(),
+                st.getSymlink().toString() if st.isSymlink() else None,
+            )
+    return {k: str(v).replace(root, "ROOT") for k, v in out.items()}
+
+
+def test_engine_local_fs_matches_stock_hadoop(spark, local_fs, tmp_path):
+    got = {}
+    for name, (fs, fc) in local_fs.items():
+        os.mkdir(tmp_path / name)
+        got[name] = _local_fs_ops(spark, fs, fc, str(tmp_path / name))
+    assert got["engine"] == got["stock"]
+    engine = got["engine"]
+    assert engine["mode_640"] == "0o640"
+    assert engine["rename"] == "org.apache.hadoop.fs.FileAlreadyExistsException"
+    for name in ("fs_file", "fc_file"):  # one checksum sidecar per create
+        assert f".{name}.crc" in engine["files"]
+    # the link branch is exercised: the unqualified path reads as a link
+    assert engine["fs", "ROOT/link"].startswith("(True,")
+
+
+def test_engine_local_fs_forks_no_process(spark, local_fs, tmp_path):
+    """100 rounds of create + setPermission + FileContext rename: Hadoop's
+    stock classes fork a chmod or readlink process for most calls, whose CPU
+    the JVM collects as reaped-children time; the engine's fork none."""
+    jvm = spark._jvm
+    hfs = jvm.org.apache.hadoop.fs
+    no_rename = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 0)
+    perm = hfs.permission.FsPermission("640")
+    stat = f"/proc/{jvm.java.lang.ProcessHandle.current().pid()}/stat"
+
+    def reaped_ticks():
+        with open(stat) as f:
+            v = f.read().rsplit(")", 1)[1].split()
+        return int(v[13]) + int(v[14])  # cutime + cstime (fields 16, 17 of proc(5))
+
+    grew = {}
+    for name, (fs, fc) in local_fs.items():
+        root = tmp_path / name
+        os.mkdir(root)
+        before = reaped_ticks()
+        for i in range(100):
+            p = hfs.Path(f"file:{root}/a{i}")
+            fs.create(p).close()
+            fs.setPermission(p, perm)
+            fc.rename(p, hfs.Path(f"file:{root}/b{i}"), no_rename)
+        grew[name] = reaped_ticks() - before
+    assert grew["engine"] <= 2, grew
+    assert grew["stock"] > 20, grew
+
+
+@pytest.fixture(scope="module")
+def jar_cache(tmp_path_factory):
+    """A user cache dir holding a fresh build of the engine's jar."""
+    cache = str(tmp_path_factory.mktemp("xdg_cache"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", cache)
+        jar = session.localfs_jar()
+    assert jar is not None and jar.startswith(cache) and os.path.isfile(jar)
+    return cache, jar
+
+
+def _no_javac(monkeypatch, tmp_path):
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    monkeypatch.setenv("PATH", str(empty))
+    monkeypatch.setenv("JAVA_HOME", str(empty))
+
+
+def test_localfs_jar_is_reused_and_keyed_by_its_sources(jar_cache, tmp_path, monkeypatch,
+                                                        caplog):
+    cache, jar = jar_cache
+    monkeypatch.setenv("XDG_CACHE_HOME", cache)
+    src = tmp_path / "jvm"
+    shutil.copytree(session._JVM_SRC, src)
+    with open(src / "NoForkLocalFileSystem.java", "a") as f:
+        f.write("// edited\n")
+    with monkeypatch.context() as mp:
+        mp.setattr(session, "_JVM_SRC", str(src))
+        edited = session.localfs_jar()
+    assert edited != jar and os.path.isfile(edited)
+
+    _no_javac(monkeypatch, tmp_path)
+    with caplog.at_level(logging.WARNING, logger="dumpr_spark.session"):
+        assert session.localfs_jar() == jar  # the cached jar, no javac needed
+    assert not caplog.records
+
+
+def test_session_conf_merges_the_jar_with_the_callers_classpath(jar_cache, monkeypatch):
+    cache, jar = jar_cache
+    monkeypatch.setenv("XDG_CACHE_HOME", cache)
+    conf = session.session_conf(2, 2, {"spark.driver.extraClassPath": "lib/extra.jar"})
+    assert conf["spark.driver.extraClassPath"] == os.pathsep.join([jar, "lib/extra.jar"])
+    assert conf["spark.hadoop.fs.file.impl"] == ENGINE_FS
+    assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] == ENGINE_FC
+    stock = "org.apache.hadoop.fs.LocalFileSystem"
+    conf = session.session_conf(2, 2, {"spark.hadoop.fs.file.impl": stock})
+    assert conf["spark.hadoop.fs.file.impl"] == stock
+    assert conf["spark.driver.extraClassPath"] == jar
+
+
+def test_without_javac_one_warning_and_stock_classes(tmp_path, monkeypatch, caplog):
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    _no_javac(monkeypatch, tmp_path)
+    with caplog.at_level(logging.WARNING, logger="dumpr_spark.session"):
+        conf = session.session_conf(2, 2, {"spark.driver.extraClassPath": "lib/extra.jar"})
+    assert [r.levelno for r in caplog.records] == [logging.WARNING]
+    assert "spark.hadoop.fs.file.impl" not in conf
+    assert "spark.hadoop.fs.AbstractFileSystem.file.impl" not in conf
+    assert conf["spark.driver.extraClassPath"] == "lib/extra.jar"
