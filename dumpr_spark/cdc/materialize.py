@@ -12,6 +12,14 @@ input partition reduces to one candidate row per key BEFORE the shuffle,
 whereas a window function must shuffle every change row. Same result, far
 less shuffle I/O on high-churn keys (the skew case AQE handles poorest).
 
+The streaming merge sink (streaming/sink.py) runs the same fold through
+`_materialize_by`, keyed by ``(tbl, _kb, id)`` in its bucketed layout, on
+input it has already hash-partitioned by slice ``(tbl, _kb)``: that
+clustering satisfies the fold's grouping, so the fold adds no exchange of
+its own, and its partial aggregate runs after the shuffle (no map-side
+combine). That costs little there: a batch plus the slices it touches is
+bounded by the bucket policy's rows per slice.
+
 The struct-valued max_by buffer forces SortAggregate (hash aggregation
 needs mutable fixed-width buffers). The r18 measured attempt at a
 hash-aggregable form — groupBy max(seq) (HashAggregate) + join the
@@ -33,10 +41,12 @@ from pyspark.sql import DataFrame, functions as F
 from dumpr_spark.cdc.envelope import OP_DELETE, OP_ERROR
 
 
-def _unpack_winner(winner: DataFrame, keep_tombstones: bool) -> DataFrame:
+def _unpack_winner(winner: DataFrame, keep_tombstones: bool,
+                   extra_keys: tuple = ()) -> DataFrame:
     """Shared tail of both folds: tombstone policy + envelope-shaped
     unpack of the max_by winner struct — one place to evolve the envelope
-    so the plain and salted folds can never drift apart."""
+    so the plain and salted folds can never drift apart. Grouping keys
+    beyond ``(tbl, id)`` (`extra_keys`) follow the envelope columns."""
     if not keep_tombstones:
         winner = winner.where(F.col("w.op") != OP_DELETE)
     return winner.select(
@@ -48,6 +58,7 @@ def _unpack_winner(winner: DataFrame, keep_tombstones: bool) -> DataFrame:
         F.col("w.next_file").alias("next_file"),
         F.col("w.next_position").alias("next_position"),
         F.col("w.seq").alias("seq"),
+        *extra_keys,
     )
 
 
@@ -64,16 +75,25 @@ def materialize(changes: DataFrame, keep_tombstones: bool = False) -> DataFrame:
     without the tombstone, a replayed/out-of-order upsert with a lower seq in
     a later batch would silently resurrect the key.
     """
+    return _materialize_by(changes, ("tbl", "id"), keep_tombstones)
+
+
+def _materialize_by(changes: DataFrame, keys: tuple,
+                    keep_tombstones: bool) -> DataFrame:
+    """`materialize`'s fold grouped by `keys`, which hold ``tbl`` and ``id``
+    and may add columns that are a function of them (the merge sink's
+    ``_kb`` bucket); the extra keys are carried into the output."""
     winner = (
         changes.where(F.col("op") != OP_ERROR)
-        .groupBy("tbl", "id")
+        .groupBy(*keys)
         .agg(
             F.max_by(
                 F.struct("op", "content", "ts", "next_file", "next_position", "seq"), F.col("seq")
             ).alias("w")
         )
     )
-    return _unpack_winner(winner, keep_tombstones)
+    extra = tuple(k for k in keys if k not in ("tbl", "id"))
+    return _unpack_winner(winner, keep_tombstones, extra)
 
 
 def materialize_asof(changes: DataFrame, seq_cutoff: int) -> DataFrame:

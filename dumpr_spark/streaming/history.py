@@ -20,7 +20,9 @@ the interval window never spans slices) and the maintenance rewrite that
 `prune_closed_before` runs. History rows are the key's change log with the
 lead(seq) interval precomputed, so re-deriving a touched slice is
 `dropDuplicates(tbl,id,seq)` over (persisted versions ∪ batch) + one keyed
-lead() window — O(touched state) per batch, and deterministic, which makes
+lead() window (both keyed by the slice columns too, so in the bucketed
+layout the input's clustering by slice is their only exchange) —
+O(touched state) per batch, and deterministic, which makes
 checkpoint-replay idempotent (a replayed batch re-derives byte-identical
 intervals). Delete events persist as terminator rows (op='delete'): they
 close the prior version's interval and mark the deletion seq; they are *data*
@@ -39,9 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from dumpr_spark.cdc.envelope import (
-    ENVELOPE_COLS, ENVELOPE_SCHEMA, OP_ERROR, OP_UPSERT,
-)
+from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA, OP_ERROR, OP_UPSERT
 from dumpr_spark.streaming.sink import (
     AUTO_TARGET_ROWS_PER_BUCKET, GROWTH_WARN_FACTOR, MergeSink,
     _start_sink_stream,
@@ -113,14 +113,16 @@ class HistorySink(MergeSink):
         # OP_ERROR; the lead() fold has no such built-in filter)
         super()._merge(batch.where(F.col("op") != OP_ERROR), batch_id)
 
-    def _fold(self, current: DataFrame, batch: DataFrame) -> DataFrame:
-        """Re-derive the touched slices' versions: persisted change rows
-        (valid_to is derived state, recomputed here) ∪ batch, deduplicated
-        on the change identity (tbl, id, seq) so replayed batches
-        collapse, then valid_to = the key's next seq."""
-        merged = current.drop("valid_to").unionByName(batch.select(*ENVELOPE_COLS))
-        merged = merged.dropDuplicates(["tbl", "id", "seq"])
-        w = Window.partitionBy("tbl", "id").orderBy("seq")
+    def _fold(self, rows: DataFrame) -> DataFrame:
+        """Re-derive the touched slices' versions from `rows`, their
+        persisted change rows (valid_to is derived state, recomputed here)
+        ∪ the batch: deduplicated on the change identity (tbl, id, seq) so
+        replayed batches collapse, then valid_to = the key's next seq.
+        Both steps also key on `_kb` in the bucketed layout (a function of
+        id), which the slice-clustered input already satisfies."""
+        key = [*self._slice_cols(), "id"]
+        merged = rows.dropDuplicates([*key, "seq"])
+        w = Window.partitionBy(*key).orderBy("seq")
         return merged.withColumn("valid_to", F.lead("seq").over(w))
 
 

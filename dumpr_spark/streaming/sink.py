@@ -10,8 +10,12 @@ the unit the sink rewrites: a ``tbl=X`` directory in the plain layout, or a
 - `MergeSink._touched` names the slices a frame's rows fall in, as
   ``(tbl,)`` or ``(tbl, _kb)`` tuples;
 - `MergeSink._read_slices` reads the persisted rows of those slices;
-- `MergeSink._fold` folds a batch into them — the one step a subclass
-  supplies (`HistorySink` folds to validity intervals);
+- `MergeSink._clustered` hash-partitions rows by slice in the bucketed
+  layout, so the fold below needs no exchange of its own and each touched
+  slice is written by one task, as one file;
+- `MergeSink._fold` folds the batch and those rows into the next rows of
+  the slices — the one step a subclass supplies (`HistorySink` folds to
+  validity intervals);
 - `MergeSink._commit` writes the folded slices, carries every untouched
   slice into the next state version by hardlink (metadata-only, no data
   read or rewrite) and swaps that version in.
@@ -34,12 +38,17 @@ in flight.
 One evaluation per micro-batch: every foreachBatch target persists its
 batch at entry and unpersists it in a `finally`. The batch handed to a
 foreachBatch function is a plan, not data, so each action on it (the
-touched-slice collect, the dead-letter probe, the fold-plus-write) re-runs
+touched-slice pass, the dead-letter probe, the fold-plus-write) re-runs
 the whole upstream micro-batch: the source scan, the shuffle and any
 stateful operator, whose state-store load, update and commit then happen
 once per action. `MergeSink.__call__` is that shared entry for the merge
 sinks (a subclass supplies `_fold`, not `__call__`); `JdbcMergeSink` and
-`TypedViewSink` follow the same rule.
+`TypedViewSink` follow the same rule. The merge sinks' first action is the
+OBSERVED pass of `_touched`: one ``noop`` write of the batch that builds
+its cache (and commits any stateful operator upstream) while an
+`Observation` collects the touched slices, with no shuffle and no second
+job. A bucketed batch then costs that pass plus one shuffle, the fold and
+write of the clustered touched slices.
 """
 
 from __future__ import annotations
@@ -50,10 +59,12 @@ import shutil
 from dataclasses import dataclass
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from dumpr_spark.cdc.envelope import OP_DELETE, OP_ERROR, ENVELOPE_SCHEMA
-from dumpr_spark.cdc.materialize import materialize
+from dumpr_spark.cdc.envelope import (
+    ENVELOPE_COLS, ENVELOPE_SCHEMA, OP_DELETE, OP_ERROR,
+)
+from dumpr_spark.cdc.materialize import _materialize_by
 
 # The certified auto-layout dials (r13-r15). These are the SINGLE source
 # the seed-time dispatch (`derive_auto_policy`), the growth signal
@@ -498,22 +509,17 @@ def _check_tbls(tbls) -> None:
         )
 
 
-def _pair_filter(pairs):
-    """Partition-prunable predicate for a (tbl, _kb) pair list: one
-    `tbl = t AND _kb IN (...)` disjunct per table — simple comparisons on
-    partition columns, so the scan reads ONLY the touched bucket dirs
-    (a concat/isin over both would defeat pruning).
-
-    Rejects NULL buckets and NULL/empty table names loudly: every caller
-    collects its pair list BEFORE writing, so these raises fire before
-    any state mutates. A key_bucket function that can yield NULL (e.g.
-    try_cast on a non-numeric id) would otherwise poison the layout —
-    the NULL bucket writes as __HIVE_DEFAULT_PARTITION__, `isin([None])`
-    never matches it on the read side (open intervals never close /
-    deleted keys resurrect), and the carry-forward vs fresh-write
-    collision wedges the stream on every checkpoint replay; an empty
-    tbl is the same hazard one level up (see `_check_tbls`)."""
-    by_tbl: dict = {}
+def _check_pairs(pairs) -> None:
+    """Reject NULL buckets and NULL/empty table names in a (tbl, _kb) pair
+    list loudly: every caller collects its pair list BEFORE writing, so
+    these raises fire before any state mutates. A key_bucket function that
+    can yield NULL (e.g. try_cast on a non-numeric id) would otherwise
+    poison the layout — the NULL bucket writes as
+    __HIVE_DEFAULT_PARTITION__, `isin([None])` never matches it on the
+    read side (open intervals never close / deleted keys resurrect), and
+    the carry-forward vs fresh-write collision wedges the stream on every
+    checkpoint replay; an empty tbl is the same hazard one level up (see
+    `_check_tbls`)."""
     _check_tbls(tbl for tbl, _kb in pairs)
     null_tbls = sorted({tbl for tbl, kb in pairs if kb is None})
     if null_tbls:
@@ -523,6 +529,16 @@ def _pair_filter(pairs):
             "object (KeyBucket / HashKeyBucket, both total by construction) "
             "or wrap yours, e.g. coalesce(<bucket expr>, lit(-1))"
         )
+
+
+def _pair_filter(pairs):
+    """Partition-prunable predicate for a (tbl, _kb) pair list: one
+    `tbl = t AND _kb IN (...)` disjunct per table — simple comparisons on
+    partition columns, so the scan reads ONLY the touched bucket dirs
+    (a concat/isin over both would defeat pruning). Raises as
+    `_check_pairs` does."""
+    _check_pairs(pairs)
+    by_tbl: dict = {}
     for tbl, kb in pairs:
         by_tbl.setdefault(tbl, []).append(kb)
     cond = None
@@ -596,8 +612,8 @@ class MergeSink:
     buckets and buys nothing — pick the policy to match the workload;
     the mechanism is policy-agnostic — `suggest_key_bucket` derives a
     range width from observed state so the caller doesn't guess). The
-    bucket function must be DETERMINISTIC in the id (it is recomputed per
-    batch and after every fold) and stable across the stream's lifetime —
+    bucket function must be DETERMINISTIC in the id (it is recomputed for
+    every batch) and stable across the stream's lifetime —
     changing it over an existing state directory splits keys across
     buckets, and enabling/disabling it over existing state is refused up
     front (`_validate_layout`); both migrate through the full-rewrite
@@ -628,9 +644,10 @@ class MergeSink:
     policy from live state when outgrown — and `migrate_key_bucket`.
 
     Both layouts share one slice path (see the module docstring): a batch
-    is `_touched` -> `_read_slices` -> `_fold` -> `_commit`, and the
-    maintenance rewrites (`compact`, `HistorySink.prune_closed_before`)
-    are `_drop_rows` over the same read and commit. A subclass supplies
+    is `_touched` -> `_read_slices` -> `_clustered` -> `_fold` -> `_commit`,
+    and the maintenance rewrites (`compact`,
+    `HistorySink.prune_closed_before`) are `_drop_rows` over the same
+    read, clustering and commit. A subclass supplies
     `_fold` only, plus its persisted `_schema`.
     """
 
@@ -843,11 +860,6 @@ class MergeSink:
         if n and (int(batch_id) + 1) % n == 0:
             self.compact_files()
 
-    def _kb(self, id_col=None):
-        return self.key_bucket(
-            F.col("id") if id_col is None else id_col
-        ).cast("int").alias("_kb")
-
     def _ext_schema(self):
         """Persisted schema + the _kb partition column (bucketed mode)."""
         from pyspark.sql.types import IntegerType, StructField, StructType
@@ -862,7 +874,9 @@ class MergeSink:
 
     def _keyed(self, df: DataFrame) -> DataFrame:
         """`df` with its rows' `_kb` bucket in the bucketed layout."""
-        return df.withColumn("_kb", self._kb()) if self.key_bucket else df
+        if not self.key_bucket:
+            return df
+        return df.withColumn("_kb", self.key_bucket(F.col("id")).cast("int"))
 
     def _ready(self) -> None:
         """The preamble of every state access: adopt the stamped layout of
@@ -1100,10 +1114,10 @@ class MergeSink:
         Falls back to the full pruned read when a table name is not
         identity under URL quoting (exotic names) so hand-built paths
         can never diverge from Spark's own partition-dir escaping; new
-        buckets with no dir yet simply don't contribute rows. Callers
-        still apply `_pair_filter` on top — it carries the loud
-        NULL-bucket raise, and the redundant predicate prunes nothing
-        further."""
+        buckets with no dir yet simply don't contribute rows. The paths
+        are exactly the touched slices, so no predicate goes on top; the
+        caller runs `_check_pairs` first for its loud NULL-bucket and
+        empty-table raises."""
         self._ready()
         schema = self._ext_schema()
         if not os.path.exists(self.state_path):
@@ -1132,10 +1146,16 @@ class MergeSink:
     def _touched(self, df: DataFrame) -> list[tuple]:
         """The slices `df`'s rows fall in: ``(tbl,)`` tuples in the plain
         layout, ``(tbl, _kb)`` in the bucketed one (`df` then carries
-        `_kb`). One small collect, bounded by the tables x buckets the
-        frame spans, not by its rows."""
-        cols = self._slice_cols()
-        return [tuple(r) for r in df.select(*cols).distinct().collect()]
+        `_kb`). One pass over `df` and no shuffle: a ``noop`` write
+        observed by ``collect_set(struct(slice cols))``, whose result is
+        bounded by the tables x buckets the frame spans, not by its rows.
+        A struct holding a NULL field is kept, so `_check_pairs` /
+        `_check_tbls` still see a NULL bucket or table name; an empty or
+        zero-partition frame yields []."""
+        obs = Observation()
+        (df.observe(obs, F.collect_set(F.struct(*self._slice_cols())).alias("s"))
+         .write.format("noop").mode("overwrite").save())
+        return [tuple(r) for r in obs.get["s"]]
 
     def _read_slices(self, touched: list[tuple]) -> DataFrame:
         """The persisted rows (tombstones and `_kb` included) of the
@@ -1143,26 +1163,52 @@ class MergeSink:
         bucket, before any state mutates."""
         if self.key_bucket:
             # touched-dirs scan: O(touched) listing, not O(all buckets) —
-            # see _read_touched; _pair_filter stays for its NULL-bucket raise
-            return self._read_touched(touched).where(_pair_filter(touched))
+            # see _read_touched
+            _check_pairs(touched)
+            return self._read_touched(touched)
         tbls = [tbl for (tbl,) in touched]
         _check_tbls(tbls)
         return self._read_raw().where(F.col("tbl").isin(tbls))
 
-    def _fold(self, current: DataFrame, batch: DataFrame) -> DataFrame:
-        """Fold `batch` into `current`, the persisted rows of the slices it
-        touches (neither carries `_kb`): union + per-key max_by(seq), with
-        deletes kept as tombstones (see the module docstring). The one
+    def _clustered(self, df: DataFrame) -> DataFrame:
+        """`df` hash-partitioned by slice, ``(tbl, _kb)``, in the bucketed
+        layout; `df` itself in the plain one.
+
+        Clustered, each touched slice is written by ONE task, as exactly
+        one file. Unclustered, every shuffle task writes into every
+        touched dir (touched x tasks small files per batch: the r12
+        trickle measurement read 200 x 32 = 6,400 files/batch, and the
+        committer + later carry-forward/link/read costs all scale with
+        that count). A slice is bounded by the bucket policy
+        (~target_rows_per_bucket), so per-task volume stays bounded, and
+        the parallelism is the touched slices, the unit of work. The
+        clustering also satisfies every grouping the folds run on
+        ``(tbl, _kb, id, ...)``, so it is the merge's one exchange. Plain
+        mode stays unclustered: one dir per TABLE would serialize a whole
+        table's write through one task."""
+        if not self.key_bucket:
+            return df
+        return df.repartition(*[F.col(c) for c in self._slice_cols()])
+
+    def _fold(self, rows: DataFrame) -> DataFrame:
+        """Fold `rows`, the persisted rows of the touched slices and the
+        batch (envelope columns, plus `_kb` in the bucketed layout), into
+        the slices' next rows: per-key max_by(seq), deletes kept as
+        tombstones (see the module docstring), keyed by the slice columns
+        and id so the clustered input needs no further exchange. The one
         step of the slice path a subclass replaces."""
-        return materialize(current.unionByName(batch), keep_tombstones=True)
+        return _materialize_by(rows, (*self._slice_cols(), "id"),
+                               keep_tombstones=True)
 
     def _drop_rows(self, cond: Column, tag: str) -> None:
         """Maintenance rewrite: drop the persisted rows matching `cond`.
-        Only the slices holding such rows are read and rewritten; every
-        other slice carries forward by hardlink."""
+        Only the slices holding such rows are read and rewritten, each as
+        one file in the bucketed layout; every other slice carries forward
+        by hardlink."""
         touched = self._touched(self._read_raw().where(cond))
         if touched:
-            self._commit(self._read_slices(touched).where(~cond), touched, tag)
+            self._commit(self._clustered(self._read_slices(touched).where(~cond)),
+                         touched, tag)
 
     def read_state(self) -> DataFrame:
         """The live materialized view: tombstones are an implementation detail
@@ -1220,29 +1266,16 @@ class MergeSink:
         (hardlinking every untouched slice), and atomically swap it in.
 
         `touched` lists slice tuples (see `_touched`) and `next_touched`
-        carries the slice columns. An untouched table links as one tree;
-        inside a touched table of the bucketed layout only its untouched
-        buckets link."""
+        carries the slice columns, clustered by `_clustered`. An untouched
+        table links as one tree; inside a touched table of the bucketed
+        layout only its untouched buckets link."""
         tmp = f"{self.state_path}.tmp-{batch_id}"
         nxt = f"{self.state_path}.next-{batch_id}"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(nxt, ignore_errors=True)
         part_cols = self._slice_cols()
-        if self.key_bucket:
-            # cluster rows by their slice before the partitioned write so
-            # each touched (tbl, bucket) dir receives EXACTLY ONE file —
-            # unclustered, every shuffle task writes into every touched
-            # dir (touched x tasks small files per batch: the r12 trickle
-            # measurement read 200 x 32 = 6,400 files/batch, and the
-            # committer + later carry-forward/link/read costs all scale
-            # with that count). The extra exchange moves only the folded
-            # slice rows, and a slice is bounded by the bucket policy
-            # (~target_rows_per_bucket), so per-task write volume stays
-            # bounded; parallelism = touched slices, which is exactly the
-            # unit of work. Plain mode stays unclustered — one dir per
-            # TABLE would serialize a whole table's write through one
-            # task.
-            next_touched = next_touched.repartition(*[F.col(c) for c in part_cols])
+        # the callers cluster by slice (`_clustered`), so each touched
+        # bucketed slice lands as one file with no exchange here
         next_touched.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
 
         os.makedirs(nxt)
@@ -1293,21 +1326,26 @@ class MergeSink:
             batch.unpersist()
 
     def _merge(self, batch: DataFrame, batch_id: int) -> None:
-        """Fold one micro-batch into the slices it touches."""
-        # derive from DATA rows only: with errors_path=None in-band
-        # op='error' rows are still in the batch here (materialize()
-        # drops them later), and an error row's NULL/"" id would flip
-        # the dispatch to hash and pin the wrong layout for the
-        # stream's lifetime
-        self._resolve_auto(batch.where(F.col("op") != OP_ERROR))
+        """Fold one micro-batch into the slices it touches: the observed
+        pass of `_touched`, then one write of the clustered fold."""
         if self.key_bucket == "auto":
-            return  # empty seed batch, no state yet: nothing to derive from
-        touched = self._touched(self._keyed(batch))
+            # derive from DATA rows only: with errors_path=None in-band
+            # op='error' rows are still in the batch here (the fold drops
+            # them later), and an error row's NULL/"" id would flip the
+            # dispatch to hash and pin the wrong layout for the stream's
+            # lifetime
+            self._resolve_auto(batch.where(F.col("op") != OP_ERROR))
+            if self.key_bucket == "auto":
+                return  # empty seed batch, no state yet: nothing to derive from
+        keyed = self._keyed(batch)
+        touched = self._touched(keyed)
         if not touched:
             return
-        # the fold drops _kb and it is recomputed — deterministic in id
-        folded = self._fold(self._read_slices(touched).drop("_kb"), batch)
-        self._commit(self._keyed(folded), touched, batch_id)
+        # the envelope columns, plus `_kb` when bucketed (a persisted
+        # valid_to is derived state that HistorySink's fold recomputes)
+        cols = [*ENVELOPE_COLS, *self._slice_cols()[1:]]
+        rows = self._read_slices(touched).select(*cols).unionByName(keyed.select(*cols))
+        self._commit(self._fold(self._clustered(rows)), touched, batch_id)
         self._maybe_compact_files(batch_id)
 
 
@@ -1367,17 +1405,17 @@ def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
                 "both total by construction) or wrap yours, e.g. "
                 "coalesce(<bucket expr>, lit(-1))"
             )
-        # cluster by slice before the partitioned write — the SAME shape
-        # `_commit` uses for the seed write and for the same reason (see
-        # its comment): unclustered, every task writes into every dir
-        # (tasks x n_buckets small files + a committer walk over all of
-        # them — at the 4096-bucket auto layout the 2M smoke measured the
-        # unclustered form >5 min vs ~1 min for one clustered seed write
-        # of the same rows). Clustered, each slice lands as exactly one
-        # file and the write parallelism is the shuffle width.
-        out = out.repartition(F.col("tbl"), F.col("_kb"))
-        out.write.mode("overwrite").partitionBy("tbl", "_kb").parquet(tmp)
-        MergeSink(spark, state_path, key_bucket=key_bucket)._stamp_policy(tmp)
+        # cluster by slice before the partitioned write, as every bucketed
+        # sink write is (`MergeSink._clustered`): unclustered, every task
+        # writes into every dir (tasks x n_buckets small files + a
+        # committer walk over all of them — at the 4096-bucket auto layout
+        # the 2M smoke measured the unclustered form >5 min vs ~1 min for
+        # one clustered seed write of the same rows). Clustered, each
+        # slice lands as exactly one file and the write parallelism is the
+        # shuffle width.
+        sink = MergeSink(spark, state_path, key_bucket=key_bucket)
+        sink._clustered(out).write.mode("overwrite").partitionBy("tbl", "_kb").parquet(tmp)
+        sink._stamp_policy(tmp)
     bak = state_path + ".migrate-bak"
     shutil.rmtree(bak, ignore_errors=True)
     os.rename(state_path, bak)

@@ -504,6 +504,98 @@ def test_sink_computes_tx_filter_batch_once(spark, tmp_path, kind):
     assert persisted_rdds() == before
 
 
+@pytest.mark.parametrize("kind", ["merge_bucketed", "history_bucketed"])
+def test_bucketed_sink_batch_is_one_pass_and_one_shuffle(spark, tmp_path,
+                                                         monkeypatch, kind):
+    """A bucketed sink call runs one pass over the batch (the observed
+    `noop` write that names the touched slices) and one shuffle that
+    folds and writes them: at most 3 jobs, one Exchange in the written
+    plan, and one data file in every touched slice dir. An empty batch
+    and a zero-partition batch write nothing and return."""
+    import re
+    import threading
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
+    from dumpr_spark.streaming.history import HistorySink
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
+
+    sc = spark.sparkContext
+    state = str(tmp_path / "state")
+    sink = (HistorySink if kind.startswith("history") else MergeSink)(
+        spark, state, key_bucket=KeyBucket(width=10))
+
+    def env(op, tbl, i, seq):
+        return (op, tbl, str(i), json.dumps({"id": i, "v": seq}), None, "f1", seq, seq)
+
+    sink(spark.createDataFrame(
+        [env("upsert", t, i, i) for t in ("a", "b") for i in range(40)],
+        ENVELOPE_SCHEMA), 0)
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        # planned as written, while the sink holds the batch cached
+        written.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+
+    def call(df, batch_id):
+        """Run one sink call under its own job group and return its job
+        count; in a thread, so a call that never returns fails here
+        instead of hanging the suite."""
+        group, errors = f"{kind}-{batch_id}-{uuid.uuid4().hex}", []
+
+        def run():
+            sc.setJobGroup(group, group)
+            try:
+                sink(df, batch_id)
+            except Exception as e:  # re-raised on the test thread
+                errors.append(e)
+
+        t = threading.Thread(target=run)
+        t.start()
+        t.join(120)
+        assert not t.is_alive(), f"batch {batch_id} did not return"
+        if errors:
+            raise errors[0]
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs = call(spark.createDataFrame(
+        [env("upsert", "a", i, 100 + i) for i in (1, 12, 25)]
+        + [env("delete", "b", 3, 200)], ENVELOPE_SCHEMA), 1)
+    assert jobs <= 3
+    assert len(written) == 1
+    assert len(re.findall(r"\bExchange\b", written[0])) == 1, written[0]
+    for tbl, kb in [("a", 0), ("a", 1), ("a", 2), ("b", 0)]:
+        d = os.path.join(state, f"tbl={tbl}", f"_kb={kb}")
+        assert len([f for f in os.listdir(d)
+                    if not f.startswith((".", "_"))]) == 1, d
+    expected = {("a", str(i)): i for i in range(40)}
+    expected.update({("b", str(i)): i for i in range(40) if i != 3})
+    expected.update({("a", str(i)): 100 + i for i in (1, 12, 25)})
+    assert {(r["tbl"], r["id"]): r["seq"]
+            for r in sink.read_state().collect()} == expected
+
+    def tree():
+        return sorted((root, f, os.stat(os.path.join(root, f)).st_ino)
+                      for root, _dirs, files in os.walk(state) for f in files)
+
+    before = tree()
+    written.clear()
+    empty = spark.createDataFrame(sc.parallelize([], 2), ENVELOPE_SCHEMA)
+    zero = spark.createDataFrame(sc.emptyRDD(), ENVELOPE_SCHEMA)
+    assert zero.rdd.getNumPartitions() == 0
+    for batch_id, df in ((2, empty), (3, zero)):
+        call(df, batch_id)
+    assert written == []
+    assert tree() == before
+
+
 def test_stream_static_join(spark, tmp_path):
     """Stream-static join — the schema-enrichment shape (R9): streaming events
     joined to a static dimension."""
@@ -878,7 +970,8 @@ def test_maintenance_rewrite_links_slices_without_matching_rows(
     """`MergeSink.compact` and `HistorySink.prune_closed_before` rewrite
     only the slices holding rows to drop: every other slice keeps the same
     files, inodes and mtimes (hardlink carry-forward), and the live state
-    is unchanged."""
+    is unchanged. A rewritten bucketed slice is one data file, also when
+    the slice was read from several: the rewrite clusters by slice."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
     from dumpr_spark.streaming.history import HistorySink
     from dumpr_spark.streaming.sink import KeyBucket, MergeSink
@@ -901,6 +994,21 @@ def test_maintenance_rewrite_links_slices_without_matching_rows(
         [env(op, "a", i, 100 + i) for i in range(10, 15)], ENVELOPE_SCHEMA), 1)
 
     depth = 1 if kb is None else 2
+    if kb is not None:
+        # fragment the slice the rewrite hits into two files of the same
+        # rows, alternating, so its scan has two partitions that both keep
+        # rows, to be clustered back into one file
+        import pyarrow.parquet as pq
+
+        hit_dir = os.path.join(state, "tbl=a", "_kb=1")
+        (data,) = [f for f in os.listdir(hit_dir) if not f.startswith((".", "_"))]
+        t = pq.ParquetFile(os.path.join(hit_dir, data)).read()
+        for f in os.listdir(hit_dir):
+            os.remove(os.path.join(hit_dir, f))
+        for j in (0, 1):
+            pq.write_table(t.take(list(range(j, t.num_rows, 2))),
+                           os.path.join(hit_dir, f"part-{j}.parquet"),
+                           use_deprecated_int96_timestamps=True)
 
     def slices():
         out: dict = {}
@@ -932,6 +1040,10 @@ def test_maintenance_rewrite_links_slices_without_matching_rows(
         if name != hit:
             assert after[name] == before[name], f"{name} was rewritten"
     assert after[hit] != before[hit]
+    if kb is not None:
+        assert len(before[hit]) == 2
+        assert len([f for f in after[hit]
+                    if not os.path.basename(f).startswith((".", "_"))]) == 1
     assert live() == live_before
 
 
