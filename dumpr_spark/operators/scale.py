@@ -399,12 +399,13 @@ def compact_small_files(
     ceil(bytes / target) files and atomically swap it in. Returns the new
     file count.
 
-    The operational tail of every streaming sink: micro-batches accumulate
-    many small files, and at 100 TB scan cost is driven by file count
-    (footer reads, task scheduling) as much as bytes. Run out-of-band, same
-    swap discipline as MergeSink (write aside, rename, drop old) including
-    torn-swap recovery: a crash between the two renames leaves only the
-    .compact-bak copy, restored here before anything reads. Local-FS rename
+    The operational tail of any streaming-written table: micro-batches
+    accumulate many small files, and at 100 TB scan cost is driven by file
+    count (footer reads, task scheduling) as much as bytes. Run
+    out-of-band, same swap discipline as MergeSink (write aside, rename,
+    drop old) including torn-swap recovery: a crash between the two
+    renames leaves only the .compact-bak copy, restored here before
+    anything reads. Local-FS rename
     semantics — on an object store use a rename-free committer / table
     format, same caveat as MergeSink (SCALE.md).
 
@@ -420,7 +421,10 @@ def compact_small_files(
     pin the read: without it, partition-value inference re-TYPES
     numeric-looking directory values — a table named '007' (``tbl=007``)
     reads back as int 7 and rewrites as ``tbl=7``, silently splitting keys.
-    MergeSink.compact_files always passes its envelope schema.
+    The merge sinks do not call this: `MergeSink.compact_files` rewrites
+    sink state through the sink's own `_commit`. Pointed at a sink
+    directory by hand, pass the sink's `_ext_schema()`; the sink's
+    `_recover` restores this function's ``.compact-bak``.
 
     Pass ``order_by`` to lay the rewrite out for data skipping (zone maps):
     unpartitioned data is range-repartitioned on those columns so output
@@ -464,13 +468,13 @@ def compact_small_files(
         else:
             shaped = df.repartition(n_files)
         shaped.write.format(fmt).mode("overwrite").save(tmp)
-    # carry root-level underscore marker FILES (e.g. MergeSink's
-    # _kb_policy.json) into the rewrite BEFORE the swap: a crash between
-    # the swap and any caller-side re-stamp would otherwise leave state
-    # that was cut by a known policy with no marker, and a later
-    # key_bucket="auto" restart is refused as if the layout were opaque
-    # (r14 advice item 2). Hardlink, same immutability argument as the
-    # sink's carry-forward; _SUCCESS is the writer's own and stays fresh.
+    # carry root-level underscore marker FILES (e.g. the _kb_policy.json
+    # of a sink directory this is pointed at) into the rewrite BEFORE the
+    # swap: otherwise the swap leaves state that was cut by a known policy
+    # with no marker, and a later key_bucket="auto" restart is refused as
+    # if the layout were opaque (r14 advice item 2). Hardlink, same
+    # immutability argument as the sink's carry-forward; _SUCCESS is the
+    # writer's own and stays fresh.
     # This is a GENERIC operator (not sink-only), so a filesystem that
     # refuses hardlinks (or a marker living on another device) falls back
     # to a plain copy — markers are small metadata files, and aborting

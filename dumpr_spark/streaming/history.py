@@ -18,10 +18,11 @@ recovery, both layouts (plain ``tbl=`` and bucketed ``tbl=/_kb=``; a key's
 whole history shares one bucket, since the bucket is a function of id, so
 the interval window never spans slices) and the maintenance rewrite that
 `prune_closed_before` runs. History rows are the key's change log with the
-lead(seq) interval precomputed, so re-deriving a touched slice is
-`dropDuplicates(tbl,id,seq)` over (persisted versions ∪ batch) + one keyed
-lead() window (both keyed by the slice columns too, so in the bucketed
-layout the input's clustering by slice is their only exchange) —
+lead(seq) interval precomputed, so re-deriving a touched slice is one
+keyed lead() window over (persisted versions ∪ batch) that also drops
+duplicate (tbl, id, seq) change rows (keyed by the slice columns too, so
+in the bucketed layout the input's clustering by slice is its only
+exchange, and in the plain layout the window's own is) —
 O(touched state) per batch, and deterministic, which makes
 checkpoint-replay idempotent (a replayed batch re-derives byte-identical
 intervals). Delete events persist as terminator rows (op='delete'): they
@@ -116,14 +117,24 @@ class HistorySink(MergeSink):
     def _fold(self, rows: DataFrame) -> DataFrame:
         """Re-derive the touched slices' versions from `rows`, their
         persisted change rows (valid_to is derived state, recomputed here)
-        ∪ the batch: deduplicated on the change identity (tbl, id, seq) so
-        replayed batches collapse, then valid_to = the key's next seq.
-        Both steps also key on `_kb` in the bucketed layout (a function of
-        id), which the slice-clustered input already satisfies."""
+        ∪ the batch, in one window over the key ordered by seq: a row
+        whose next row has the same seq is a duplicate of the change
+        identity (tbl, id, seq) and is dropped, so replayed batches
+        collapse; every other row's valid_to is that next row's seq.
+        ``lead(struct(seq))`` keeps "no next row" (NULL struct) apart from
+        "next seq is NULL", and the null-safe comparison collapses NULL
+        seqs as ``dropDuplicates`` would. The window also keys on `_kb` in
+        the bucketed layout (a function of id), which the slice-clustered
+        input already satisfies; in the plain layout it is the fold's one
+        exchange."""
         key = [*self._slice_cols(), "id"]
-        merged = rows.dropDuplicates([*key, "seq"])
-        w = Window.partitionBy(*key).orderBy("seq")
-        return merged.withColumn("valid_to", F.lead("seq").over(w))
+        nxt = F.lead(F.struct("seq")).over(Window.partitionBy(*key).orderBy("seq"))
+        return (
+            rows.withColumn("_next", nxt)
+            .where(F.col("_next").isNull() | ~F.col("_next.seq").eqNullSafe(F.col("seq")))
+            .withColumn("valid_to", F.col("_next.seq"))
+            .drop("_next")
+        )
 
 
 def start_history_stream(

@@ -20,9 +20,11 @@ the unit the sink rewrites: a ``tbl=X`` directory in the plain layout, or a
   slice into the next state version by hardlink (metadata-only, no data
   read or rewrite) and swaps that version in.
 
-`_merge` (one micro-batch) and `_drop_rows` (the `compact` and
-`prune_closed_before` maintenance rewrites) are its two callers, and
-neither branches on the layout. Per-batch work is O(touched slices), not
+`_commit` is the only code that writes and swaps sink state. Its four
+callers are `_merge` (one micro-batch), `_drop_rows` (the `compact` and
+`prune_closed_before` maintenance rewrites), `compact_files` and
+`migrate_key_bucket` (whole-state rewrites, nothing carried forward), and
+none of them branches on the layout. Per-batch work is O(touched slices), not
 O(state). On an ACID table format the same fold becomes a real MERGE INTO
 with file-level pruning. Idempotence (max-by-seq fold + delete
 tombstones) makes batch replay after checkpoint restart a no-op =>
@@ -57,7 +59,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
-from urllib.parse import unquote
+from urllib.parse import quote, unquote
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
@@ -647,7 +649,8 @@ class MergeSink:
     is `_touched` -> `_read_slices` -> `_clustered` -> `_fold` -> `_commit`,
     and the maintenance rewrites (`compact`,
     `HistorySink.prune_closed_before`) are `_drop_rows` over the same
-    read, clustering and commit. A subclass supplies
+    read, clustering and commit; `compact_files` commits the whole state
+    through it. A subclass supplies
     `_fold` only, plus its persisted `_schema`.
     """
 
@@ -687,17 +690,15 @@ class MergeSink:
         `migrate_key_bucket` to re-cut, stream stopped). Footer counts
         include tombstones/closed versions: the slice's REWRITE cost is
         what outgrows the policy, and every persisted row pays it.
-        Advisory only — a slice whose table name is not identity under
-        URL quoting is skipped (the merge itself handles those via the
-        `_read_touched` fallback), and so is any file whose footer cannot
+        Advisory only — a slice without a `_slice_dir` is skipped (the
+        merge itself handles those via the `_read_touched` fallback), and
+        so is any file whose footer cannot
         be read (a zero-byte/torn leftover is not evidence of growth):
         this runs AFTER `_commit` swapped the batch in, so a raise here
         would fail an already-committed batch and crash-loop the stream
         on replay (r15 advice item 1) — the signal must never throw."""
         if self._growth_warned or not self.growth_warn_rows_per_bucket:
             return
-        from urllib.parse import quote
-
         try:
             import pyarrow.parquet as pq
         except Exception:
@@ -705,10 +706,8 @@ class MergeSink:
 
         worst_pair, worst_rows = None, 0
         for tbl, kb in pairs:
-            if not tbl or kb is None or quote(str(tbl), safe="") != str(tbl):
-                continue
-            d = os.path.join(self.state_path, f"tbl={tbl}", f"_kb={kb}")
-            if not os.path.isdir(d):
+            d = self._slice_dir(tbl, kb)
+            if d is None or not os.path.isdir(d):
                 continue
             rows = 0
             for root, _dirs, files in os.walk(d):
@@ -835,20 +834,14 @@ class MergeSink:
         measurements proved load-bearing (uncompacted dirs make the
         hardlink carry-forward O(total data files) — a measured 6x LOSS
         at 4096 uncompacted dirs) is product behavior, not operator
-        memory. END-OF-BATCH is the one sanctioned in-band call site:
-        foreachBatch invocations are serial and `_commit` has already
-        completed and swapped, so the compactor's .compact-tmp/.bak swap
-        cannot interleave with a merge swap (the out-of-band warning on
-        `compact_files` targets CONCURRENT invocation, e.g. a cron job
-        racing a live stream). Replay-safe: a replayed batch re-runs a
-        value-preserving rewrite (and a crash mid-compaction recovers
-        through `_recover`'s .compact-bak discipline like any other torn
-        swap). Cadence keys off the stream's monotonically increasing
+        memory. Replay-safe: a replayed batch re-runs a value-preserving
+        rewrite, and a crash mid-compaction recovers like any other torn
+        `_commit`. Cadence keys off the stream's monotonically increasing
         batch_id — deterministic across restarts, no extra state.
 
         COST MODEL (size N against it): each pass is a FULL O(state)
-        rewrite (`compact_small_files` reads and rewrites the whole
-        directory — about one seed-write of wall time), so the amortized
+        rewrite (`compact_files` reads and rewrites the whole
+        state — about one seed-write of wall time), so the amortized
         per-batch overhead is rewrite/N. Under the r12 clustered write
         each touched slice already lands as one file, so at steady state
         the pass mostly repacks what churn fragmented — pick N so
@@ -886,33 +879,23 @@ class MergeSink:
         self._recover()
         self._validate_layout()
 
-    def _stamp_policy(self, root: str) -> None:
-        """Stamp the bucket-policy identity into `root/_kb_policy.json`
-        for `_validate_layout`'s drift check; a no-op for a plain sink or
-        an opaque callable. Hidden (underscore) file, invisible to the
-        parquet reader, and re-stamped after every rewrite that drops
-        root-level extras (`_commit`, `compact_files`,
-        `migrate_key_bucket`)."""
-        pol = self._kb_policy()
-        if pol is not None:
-            with open(os.path.join(root, "_kb_policy.json"), "w") as f:
-                json.dump(pol, f)
-
     def _recover(self) -> None:
         """Crash between the two swap renames leaves state absent + a backup
         holding the only copy — restore it before anything reads or swaps.
-        Both swap disciplines are covered: `_commit`'s ``.bak`` AND
-        `compact_small_files`' ``.compact-bak`` (a compaction crash would
-        otherwise make the next stream restart rebuild EMPTY state while a
-        later compact_files deletes the only backup).
+        Besides `_commit`'s ``.bak`` this restores ``.compact-bak`` (the
+        generic `compact_small_files` pointed at a sink directory) and
+        ``.migrate-bak`` (a migration torn by a release whose
+        `migrate_key_bucket` swapped on its own); without it the next
+        stream restart would rebuild EMPTY state while a later swap deletes
+        the only backup.
 
         A backup that COEXISTS with state is stale by construction (the swap
         completed; only the backup cleanup was lost) — delete it, or a later
-        torn swap of the OTHER discipline would restore the older backup and
+        torn swap would restore the older backup and
         silently drop every batch committed since. When state is absent and
-        both backups exist, the newer one (mtime) is the survivor of the
-        interrupted swap. Stale .next-*/.tmp-*/.compact-tmp staging dirs from
-        a crashed assembly are garbage."""
+        several backups exist, the newer one (mtime) is the survivor of the
+        interrupted swap. Stale .next-*/.tmp-*/.compact-tmp/.migrate-tmp
+        staging dirs from a crashed assembly are garbage."""
         baks = [
             b for b in (self.state_path + ".bak", self.state_path + ".compact-bak",
                         self.state_path + ".migrate-bak")
@@ -1122,17 +1105,13 @@ class MergeSink:
         schema = self._ext_schema()
         if not os.path.exists(self.state_path):
             return self.spark.createDataFrame([], schema)
-        from urllib.parse import quote
-
         dirs = []
         for tbl, kb in pairs:
-            # `not tbl` guards NULL/empty names (quote('') == '' would
-            # pass, but Spark wrote the value as __HIVE_DEFAULT_PARTITION__
-            # — the hand-built `tbl=/` path would silently read the slice
-            # as empty); the fallback's _pair_filter raises loudly on them
-            if not tbl or kb is None or quote(str(tbl), safe="") != str(tbl):
+            d = self._slice_dir(tbl, kb)
+            if d is None:
+                # the fallback's _pair_filter raises loudly on a NULL/empty
+                # name or a NULL bucket
                 return self._read_raw().where(_pair_filter(pairs))
-            d = os.path.join(self.state_path, f"tbl={tbl}", f"_kb={kb}")
             if os.path.isdir(d):
                 dirs.append(d)
         if not dirs:
@@ -1142,6 +1121,17 @@ class MergeSink:
             .option("basePath", self.state_path)
             .parquet(*dirs)
         )
+
+    def _slice_dir(self, tbl, kb) -> str | None:
+        """The directory of bucketed slice ``(tbl, kb)``, or None where a
+        hand-built path could diverge from Spark's own: a NULL bucket, a
+        table name that is not identity under URL quoting, or a NULL/empty
+        one (``quote('') == ''`` would pass, but Spark wrote the value as
+        __HIVE_DEFAULT_PARTITION__, so a ``tbl=`` path would read the
+        slice as empty)."""
+        if not tbl or kb is None or quote(str(tbl), safe="") != str(tbl):
+            return None
+        return os.path.join(self.state_path, f"tbl={tbl}", f"_kb={kb}")
 
     def _touched(self, df: DataFrame) -> list[tuple]:
         """The slices `df`'s rows fall in: ``(tbl,)`` tuples in the plain
@@ -1223,44 +1213,26 @@ class MergeSink:
         epoch rolls)."""
         self._drop_rows(F.col("op") == OP_DELETE, "compact")
 
-    def compact_files(self, target_file_mb: int = 128, order_by: list[str] | None = None) -> int:
-        """Small-files maintenance: rewrite the state directory into
-        ~target-sized files (one per tbl= partition at test scales) via
-        operators.scale.compact_small_files. The compactor preserves the
-        Hive partition layout, so `_commit`'s hardlink carry-forward keeps
-        matching untouched tables afterward. Two sanctioned call sites:
-        END-OF-BATCH via ``compact_every_n_batches`` (foreachBatch
-        invocations are serial and `_commit` has already swapped, so the
-        compactor's .compact-tmp/.bak swap cannot interleave with a merge
-        swap — see `_maybe_compact_files`), or OUT-OF-BAND with the stream
-        STOPPED. What is NOT sanctioned is a concurrent/external invocation
-        racing a live stream (e.g. a cron job): the two swap disciplines
-        would interleave and a torn pair of swaps can restore the wrong
-        backup. Cadence guidance in SCALE.md. Returns the new data-file count. The persisted
-        schema is pinned through the rewrite so partition-value inference
-        cannot re-type a numeric-looking `tbl` value (tbl=007 -> tbl=7).
-        ``order_by`` (e.g. ``["id"]``) sorts rows within each table's file
-        so point lookups on the key prune row groups via footer stats."""
-        from dumpr_spark.operators.scale import compact_small_files
-
+    def compact_files(self) -> int:
+        """Small-files maintenance: rewrite the whole state as one data
+        file per slice through `_commit` (nothing carried forward), and
+        return the data-file count. The Hive layout, the pinned persisted
+        schema (no partition-value re-typing, tbl=007 stays tbl=007) and
+        the policy marker all come through `_commit`, which stamps the
+        marker before the swap. Run it with the stream stopped, or at the
+        end of a batch via ``compact_every_n_batches``; cadence guidance
+        in SCALE.md. A sink with no state yet compacts nothing and
+        returns 0."""
         self._ready()
         if not os.path.exists(self.state_path):
-            # a maintenance call before any batch has seeded state (e.g. a
-            # cron firing against a not-yet-started stream) compacts
-            # nothing — prefer the honest no-op over compact_small_files'
-            # FileNotFoundError from its size walk
             return 0
-        schema = self._ext_schema() if self.key_bucket else self._schema
-        n = compact_small_files(
-            self.spark, self.state_path, target_file_mb=target_file_mb,
-            schema=schema, order_by=order_by,
-        )
-        # re-stamp so a drifted sink started in the compact-to-next-batch
-        # window is still refused
-        self._stamp_policy(self.state_path)
-        return n
+        cols = self._slice_cols()
+        self._commit(self._read_raw().repartition(*[F.col(c) for c in cols]),
+                     None, "compact-files")
+        return sum(1 for _root, _dirs, files in os.walk(self.state_path)
+                   for f in files if not f.startswith(("_", ".")))
 
-    def _commit(self, next_touched: DataFrame, touched: list[tuple],
+    def _commit(self, next_touched: DataFrame, touched: list[tuple] | None,
                 batch_id) -> None:
         """Write the folded touched slices, assemble the next state version
         (hardlinking every untouched slice), and atomically swap it in.
@@ -1268,7 +1240,12 @@ class MergeSink:
         `touched` lists slice tuples (see `_touched`) and `next_touched`
         carries the slice columns, clustered by `_clustered`. An untouched
         table links as one tree; inside a touched table of the bucketed
-        layout only its untouched buckets link."""
+        layout only its untouched buckets link. ``touched=None`` means
+        `next_touched` is the whole next state, so nothing links forward.
+
+        The bucket-policy identity is stamped into the next version's
+        hidden ``_kb_policy.json`` before the swap, for `_validate_layout`'s
+        drift check (none for a plain sink or an opaque callable)."""
         tmp = f"{self.state_path}.tmp-{batch_id}"
         nxt = f"{self.state_path}.next-{batch_id}"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1279,7 +1256,7 @@ class MergeSink:
         next_touched.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
 
         os.makedirs(nxt)
-        if os.path.exists(self.state_path):
+        if touched is not None and os.path.exists(self.state_path):
             # carry forward untouched slices without reading a byte
             keys = {tuple(str(v) for v in t) for t in touched}
             inner = {k[:i] for k in keys for i in range(1, len(k))}
@@ -1289,7 +1266,10 @@ class MergeSink:
             if d.startswith("tbl="):
                 _move_into(os.path.join(tmp, d), os.path.join(nxt, d))
         shutil.rmtree(tmp, ignore_errors=True)
-        self._stamp_policy(nxt)
+        pol = self._kb_policy()
+        if pol is not None:
+            with open(os.path.join(nxt, "_kb_policy.json"), "w") as f:
+                json.dump(pol, f)
 
         # atomic-enough swap for local FS; object stores use rename-free commit.
         # After _recover(), a .bak that coexists with state is stale — drop it.
@@ -1299,7 +1279,7 @@ class MergeSink:
             os.rename(self.state_path, bak)
         os.rename(nxt, self.state_path)
         shutil.rmtree(bak, ignore_errors=True)
-        if self.key_bucket:
+        if self.key_bucket and touched:
             # post-commit growth signal over the slices just written —
             # metadata-only (parquet footers), warns once per instance
             self._check_bucket_growth(touched)
@@ -1353,10 +1333,10 @@ def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
                        schema=ENVELOPE_SCHEMA) -> None:
     """Full-rewrite migration between sink state layouts: plain -> bucketed
     (`key_bucket` callable), bucketed -> plain (`key_bucket=None`), or a
-    CHANGED bucket function over an existing bucketed layout. Run
-    OUT-OF-BAND with the stream stopped — like `compact_files`, the swap
-    discipline here (.migrate-tmp/.migrate-bak, crash-recovered by
-    `_recover`) must not interleave with `_commit`'s.
+    CHANGED bucket function over an existing bucketed layout. Run it with
+    the stream stopped. The rewrite is one `_commit` of the whole state by
+    a sink of the target layout, so the swap, its crash recovery and the
+    policy marker are the merge path's own.
 
     This is the one sanctioned way to change `key_bucket` over existing
     state: an in-place flip is refused by `_validate_layout` because the
@@ -1374,53 +1354,18 @@ def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
         )
     if not os.path.exists(state_path):
         raise ValueError(f"no state directory at {state_path} to migrate")
-    # recovery only (no layout validation — a migration EXPECTS the
-    # mismatch); the throwaway sink shares the real recovery discipline
-    scratch = MergeSink(spark, state_path)
-    scratch._schema = schema
-    scratch._recover()
+    sink = MergeSink(spark, state_path, key_bucket=key_bucket)
+    sink._schema = schema
+    # recovery only (no layout validation — a migration EXPECTS the mismatch)
+    sink._recover()
     # read through the EXTENDED schema: bucketed dirs bind _kb from the
-    # partition value, plain files read _kb=NULL — dropped either way
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    ext = StructType(list(schema.fields) + [StructField("_kb", IntegerType())])
-    df = spark.read.schema(ext).parquet(state_path).drop("_kb")
-    tmp = state_path + ".migrate-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    if key_bucket is None:
-        df.write.mode("overwrite").partitionBy("tbl").parquet(tmp)
-    else:
-        out = df.withColumn("_kb", key_bucket(F.col("id")).cast("int"))
-        # same loud NULL-bucket rejection as the merge path, BEFORE the swap
-        null_tbls = [
-            r["tbl"] for r in
-            out.where(F.col("_kb").isNull()).select("tbl").distinct().collect()
-        ]
-        if null_tbls:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(
-                f"key_bucket produced a NULL bucket for table(s) "
-                f"{sorted(null_tbls)}: the bucket function must be TOTAL "
-                "over ids — use a policy object (KeyBucket / HashKeyBucket, "
-                "both total by construction) or wrap yours, e.g. "
-                "coalesce(<bucket expr>, lit(-1))"
-            )
-        # cluster by slice before the partitioned write, as every bucketed
-        # sink write is (`MergeSink._clustered`): unclustered, every task
-        # writes into every dir (tasks x n_buckets small files + a
-        # committer walk over all of them — at the 4096-bucket auto layout
-        # the 2M smoke measured the unclustered form >5 min vs ~1 min for
-        # one clustered seed write of the same rows). Clustered, each
-        # slice lands as exactly one file and the write parallelism is the
-        # shuffle width.
-        sink = MergeSink(spark, state_path, key_bucket=key_bucket)
-        sink._clustered(out).write.mode("overwrite").partitionBy("tbl", "_kb").parquet(tmp)
-        sink._stamp_policy(tmp)
-    bak = state_path + ".migrate-bak"
-    shutil.rmtree(bak, ignore_errors=True)
-    os.rename(state_path, bak)
-    os.rename(tmp, state_path)
-    shutil.rmtree(bak, ignore_errors=True)
+    # partition value, plain files read _kb=NULL — re-keyed either way
+    rows = sink._keyed(
+        spark.read.schema(sink._ext_schema()).parquet(state_path).drop("_kb"))
+    if key_bucket is not None:
+        # the merge path's NULL-bucket refusal, before anything is written
+        _check_pairs(sink._touched(rows))
+    sink._commit(sink._clustered(rows), None, "migrate")
 
 
 def _start_sink_stream(sink_cls, changes: DataFrame, state_path: str,

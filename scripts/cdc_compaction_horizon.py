@@ -200,7 +200,7 @@ def run_variant(spark, staging, work, compact_between: bool,
             t0 = time.time()
             sink = MergeSink(spark, state, key_bucket=key_bucket)
             sink.compact()
-            sink.compact_files(target_file_mb=128)
+            sink.compact_files()
             compact_secs.append(round(time.time() - t0, 2))
     sink = MergeSink(spark, state, key_bucket=key_bucket)
     return {
@@ -251,7 +251,7 @@ def run_history_variant(spark, staging, work, prune_between: bool,
             horizon = hi - retention_segments * seg_span
             if horizon > lo:
                 sink.prune_closed_before(horizon)
-            sink.compact_files(target_file_mb=128)
+            sink.compact_files()
             prune_secs.append(round(time.time() - t0, 2))
     sink = HistorySink(spark, state, key_bucket=key_bucket)
     return {

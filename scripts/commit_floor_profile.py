@@ -65,7 +65,7 @@ def main():
 
     sink = MergeSink(spark, os.path.join(work, "state"), key_bucket="auto")
     sink(env(spark.range(n_rows).select(F.col("id").alias("k")), 0), 0)
-    sink.compact_files(target_file_mb=128)
+    sink.compact_files()
 
     # wrap the metadata syscalls with counting timers
     meta = {"s": 0.0, "link": 0, "listdir": 0, "scandir": 0}

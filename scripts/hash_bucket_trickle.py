@@ -131,7 +131,7 @@ def main():
         # alone dwarfs the rewrite it saves (measured in the r12 smoke:
         # 8.8 s/batch at 4096 uncompacted dirs vs 1.4 s plain). One
         # compact_files pass -> 1 file/dir, links become O(n_buckets).
-        sink.compact_files(target_file_mb=128)
+        sink.compact_files()
         seed_s = time.monotonic() - t0
         per = []
         for b in range(1, n_batches + 1):

@@ -105,7 +105,7 @@ def main():
         )
         t0 = time.monotonic()
         sink(seed, 0)
-        sink.compact_files(target_file_mb=128)
+        sink.compact_files()
         seed_s = time.monotonic() - t0
         per, fires = [], {}
         for b in range(1, n_batches + 1):

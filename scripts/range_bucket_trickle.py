@@ -86,7 +86,7 @@ def main():
         sink(seed, 0)
         # one compact pass before the trickle, same discipline as the
         # hash probe: 1 file/slice keeps the carry-forward O(n_buckets)
-        sink.compact_files(target_file_mb=128)
+        sink.compact_files()
         seed_s = time.monotonic() - t0
         per = []
         for b in range(1, n_batches + 1):

@@ -504,14 +504,16 @@ def test_sink_computes_tx_filter_batch_once(spark, tmp_path, kind):
     assert persisted_rdds() == before
 
 
-@pytest.mark.parametrize("kind", ["merge_bucketed", "history_bucketed"])
+@pytest.mark.parametrize("kind", ["merge_bucketed", "history_bucketed",
+                                  "history_plain"])
 def test_bucketed_sink_batch_is_one_pass_and_one_shuffle(spark, tmp_path,
                                                          monkeypatch, kind):
     """A bucketed sink call runs one pass over the batch (the observed
     `noop` write that names the touched slices) and one shuffle that
     folds and writes them: at most 3 jobs, one Exchange in the written
     plan, and one data file in every touched slice dir. An empty batch
-    and a zero-partition batch write nothing and return."""
+    and a zero-partition batch write nothing and return. The plain
+    history fold also runs on one shuffle, its window's."""
     import re
     import threading
     import uuid
@@ -524,8 +526,9 @@ def test_bucketed_sink_batch_is_one_pass_and_one_shuffle(spark, tmp_path,
 
     sc = spark.sparkContext
     state = str(tmp_path / "state")
+    bucketed = kind.endswith("bucketed")
     sink = (HistorySink if kind.startswith("history") else MergeSink)(
-        spark, state, key_bucket=KeyBucket(width=10))
+        spark, state, key_bucket=KeyBucket(width=10) if bucketed else None)
 
     def env(op, tbl, i, seq):
         return (op, tbl, str(i), json.dumps({"id": i, "v": seq}), None, "f1", seq, seq)
@@ -571,7 +574,7 @@ def test_bucketed_sink_batch_is_one_pass_and_one_shuffle(spark, tmp_path,
     assert jobs <= 3
     assert len(written) == 1
     assert len(re.findall(r"\bExchange\b", written[0])) == 1, written[0]
-    for tbl, kb in [("a", 0), ("a", 1), ("a", 2), ("b", 0)]:
+    for tbl, kb in [("a", 0), ("a", 1), ("a", 2), ("b", 0)] if bucketed else []:
         d = os.path.join(state, f"tbl={tbl}", f"_kb={kb}")
         assert len([f for f in os.listdir(d)
                     if not f.startswith((".", "_"))]) == 1, d
@@ -1181,10 +1184,17 @@ def test_merge_sink_key_bucketed_survives_file_compaction(spark, tmp_path):
         sink(batch([up(i, 100 * b + i) for i in range(0, 150, 7)]), b)
     before = {(r["tbl"], r["id"], r["seq"]) for r in sink.read_state().collect()}
 
-    n_files = sink.compact_files(target_file_mb=128)
-    assert n_files > 0
+    n_files = sink.compact_files()
     kb_dirs = os.listdir(os.path.join(state, "tbl=orders"))
     assert all(d.startswith(("_kb=", ".", "_")) for d in kb_dirs), kb_dirs
+    # one data file per slice, and the returned count is their total
+    per_slice = [
+        len([f for f in os.listdir(os.path.join(state, "tbl=orders", d))
+             if not f.startswith((".", "_"))])
+        for d in kb_dirs if d.startswith("_kb=")
+    ]
+    assert per_slice and set(per_slice) == {1}
+    assert n_files == len(per_slice)
     assert {(r["tbl"], r["id"], r["seq"]) for r in sink.read_state().collect()} == before
 
     sink(batch([up(1, 999)]), 99)  # fold still works on the compacted layout
@@ -1670,6 +1680,87 @@ def test_migrate_key_bucket_crash_recovery(spark, tmp_path):
     got = sorted(r["id"] for r in MergeSink(
         spark, bstate, key_bucket=KeyBucket(width=2)).read_state().collect())
     assert got == ["1", "2"]
+
+
+def test_torn_compact_files_and_migration_restore_prior_state(
+        spark, tmp_path, monkeypatch):
+    """`compact_files` and `migrate_key_bucket` swap through `_commit`, so
+    a crash between its two renames (state moved to .bak, the next
+    version not yet in place) is recovered like a torn batch: a fresh
+    sink reads exactly the state from before the call, with no backup or
+    staging dir left behind."""
+    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
+    from dumpr_spark.streaming.history import HISTORY_SCHEMA, HistorySink
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink, migrate_key_bucket
+
+    def batch(rows):
+        return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
+
+    up = lambda i, seq: ("upsert", "w", str(i), json.dumps({"id": i, "s": seq}), None, "f1", seq, seq)  # noqa: E731
+    rename = os.rename
+
+    def tear_second_rename(state):
+        moved = []
+
+        def flaky(src, dst):
+            if moved:
+                moved.clear()
+                raise OSError("torn swap")
+            rename(src, dst)
+            if src == state and dst == state + ".bak":
+                moved.append(src)
+
+        monkeypatch.setattr(os, "rename", flaky)
+
+    kb = KeyBucket(width=4)
+    for cls, schema in ((MergeSink, ENVELOPE_SCHEMA), (HistorySink, HISTORY_SCHEMA)):
+        state = str(tmp_path / f"torn_{cls.__name__}")
+        sink = cls(spark, state, key_bucket=kb)
+        for b in range(3):
+            sink(batch([up(i, 10 * b + i) for i in range(0, 12, 1 + b)]), b)
+
+        def snap():
+            fresh = cls(spark, state, key_bucket=kb)
+            rows = fresh.read_history() if cls is HistorySink else fresh.read_state()
+            return sorted(tuple(r) for r in rows.collect())
+
+        want = snap()
+        for op in (sink.compact_files,
+                   lambda: migrate_key_bucket(spark, state, None, schema=schema)):
+            tear_second_rename(state)
+            with pytest.raises(OSError, match="torn swap"):
+                op()
+            monkeypatch.undo()
+            assert not os.path.exists(state)
+            assert snap() == want
+            # no backup or staging dir (.bak, .next-*) is left behind
+            assert [d for d in os.listdir(tmp_path) if "." in d] == []
+
+
+def test_migrate_key_bucket_null_bucket_leaves_state_unchanged(spark, tmp_path):
+    """A migration to a bucket function that is not total over the ids
+    refuses with the merge path's NULL-bucket message before anything is
+    written: the state tree (files and inodes) and its parent dir are
+    unchanged."""
+    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
+    from dumpr_spark.streaming.sink import MergeSink, migrate_key_bucket
+    from pyspark.sql import functions as F
+
+    state = str(tmp_path / "nullmig")
+    rows = [("upsert", "w", i, json.dumps({"k": n}), None, "f1", n, n)
+            for n, i in enumerate(["1", "user_42", "7"])]
+    MergeSink(spark, state)(spark.createDataFrame(rows, ENVELOPE_SCHEMA), 0)
+
+    def tree():
+        return (sorted(os.listdir(tmp_path)),
+                sorted((root, f, os.stat(os.path.join(root, f)).st_ino)
+                       for root, _dirs, files in os.walk(state) for f in files))
+
+    before = tree()
+    with pytest.raises(ValueError, match="NULL bucket"):
+        migrate_key_bucket(spark, state,
+                           lambda c: (c.try_cast("long") / F.lit(3)).cast("int"))
+    assert tree() == before
 
 
 def test_streaming_incremental_rollup(spark, tmp_path):
@@ -4268,12 +4359,14 @@ def test_suggest_migration_rederives_when_outgrown(spark, tmp_path):
         plain.suggest_migration()
 
 
-def test_compactor_preserves_policy_marker_through_swap(spark, tmp_path):
+def test_compactor_preserves_policy_marker_through_swap(spark, tmp_path,
+                                                    monkeypatch):
     """r14 ADVICE item 2 (the compaction crash window): the generic
-    compactor itself now carries root-level underscore marker files into
-    its rewrite BEFORE the swap, so there is no instant at which bucketed
-    state exists without its _kb_policy.json — a crash between the swap
-    and MergeSink.compact_files' re-stamp can no longer strand an auto
+    compactor itself carries root-level underscore marker files into its
+    rewrite BEFORE the swap, and MergeSink.compact_files commits through
+    `_commit`, which stamps the marker into the next state version before
+    its swap — so there is no instant at which bucketed state exists
+    without its _kb_policy.json, and no crash can strand an auto
     restart."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
     from dumpr_spark.operators.scale import compact_small_files
@@ -4297,6 +4390,24 @@ def test_compactor_preserves_policy_marker_through_swap(spark, tmp_path):
     auto = MergeSink(spark, state, key_bucket="auto")
     auto(batch([up(3, 99)]), 1)
     assert auto.key_bucket == KeyBucket(width=10, origin=0)
+    # the sink's own compact_files stamps the marker into the next state
+    # version before its swap, so it survives that rewrite too
+    swapped_in = []
+    rename = os.rename
+
+    def watch(src, dst):
+        if dst == state:
+            swapped_in.append(os.path.exists(os.path.join(src, "_kb_policy.json")))
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", watch)
+    auto.compact_files()
+    monkeypatch.undo()
+    assert swapped_in == [True]
+    assert os.path.exists(marker)
+    again = MergeSink(spark, state, key_bucket="auto")
+    again(batch([up(4, 100)]), 2)
+    assert again.key_bucket == KeyBucket(width=10, origin=0)
 
 
 def test_stream_restart_into_auto_adopts_seeded_policy(spark, tmp_path):
