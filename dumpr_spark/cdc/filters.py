@@ -57,8 +57,9 @@ def filter_committed_txs(events: DataFrame, seq_col: str = "seq", type_col: str 
       the streaming fold which keeps it buffered);
     - out-of-tx rows always survive; markers are stripped.
 
-    The streaming twin (`streaming.state._fold_tx_rows`) must agree on every
-    event sequence — pinned by a hypothesis property test.
+    The streaming twins, the JVM fold (`dumpr_spark/jvm/TxFilter.java`)
+    and its pandas fallback (`streaming.state._fold_tx_rows`), must agree
+    with it on every event sequence — pinned by a hypothesis property test.
 
     Scale shape (r4: replaced the single-partition global windows): the two
     running quantities over the total order — last-marker-strictly-before

@@ -1,0 +1,143 @@
+package dumpr_spark.jvm;
+
+import static org.apache.spark.sql.functions.col;
+
+import java.io.ByteArrayInputStream;
+import java.io.ByteArrayOutputStream;
+import java.io.DataInputStream;
+import java.io.DataOutputStream;
+import java.io.IOException;
+import java.nio.charset.StandardCharsets;
+import java.util.ArrayList;
+import java.util.Comparator;
+import java.util.Iterator;
+import java.util.List;
+
+import org.apache.spark.api.java.function.FlatMapGroupsWithStateFunction;
+import org.apache.spark.sql.Dataset;
+import org.apache.spark.sql.Encoders;
+import org.apache.spark.sql.Row;
+import org.apache.spark.sql.RowFactory;
+import org.apache.spark.sql.streaming.GroupState;
+import org.apache.spark.sql.streaming.GroupStateTimeout;
+import org.apache.spark.sql.streaming.OutputMode;
+import org.apache.spark.sql.types.DataTypes;
+import org.apache.spark.sql.types.StructType;
+
+/**
+ * The streaming transaction filter as a {@code flatMapGroupsWithState} fold
+ * keyed by {@code source}: the state machine of
+ * {@code streaming.state._fold_tx_rows}, run in the JVM so a micro-batch's
+ * rows never leave it. State per source is {@code (in_tx, buffer)}, the rows
+ * of the open transaction.
+ *
+ * <p>The buffer is stored as bytes ({@link #encode}), not as an
+ * {@code array<struct>}: Spark resolves the state deserializer anew for every
+ * micro-batch, and an array in it gets a fresh lambda variable id each time,
+ * so every batch would generate and compile a new projection class.
+ */
+public class TxFilter implements FlatMapGroupsWithStateFunction<String, Row, Row, Row> {
+  /** {@code streaming.state.TX_OUT_SCHEMA}: the input columns and the output rows. */
+  static final StructType ROW = new StructType()
+      .add("source", DataTypes.StringType)
+      .add("event_type", DataTypes.StringType)
+      .add("tbl", DataTypes.StringType)
+      .add("payload", DataTypes.StringType)
+      .add("seq", DataTypes.LongType);
+  static final StructType STATE = new StructType()
+      .add("in_tx", DataTypes.BooleanType)
+      .add("buffer", DataTypes.BinaryType);
+  private static final int EVENT_TYPE = 1;
+  private static final int SEQ = 4;
+  // pandas' sort_values("seq") order: ascending, a NULL seq last
+  private static final Comparator<Row> BY_SEQ = Comparator.comparing(
+      (Row r) -> r.isNullAt(SEQ) ? null : r.getLong(SEQ),
+      Comparator.nullsLast(Comparator.naturalOrder()));
+
+  /** {@code events}' committed and out-of-transaction rows, markers stripped. */
+  public static Dataset<Row> apply(Dataset<Row> events) {
+    Dataset<Row> rows = events.select(
+        col("source").cast("string").as("source"),
+        col("event_type").cast("string").as("event_type"),
+        col("tbl").cast("string").as("tbl"),
+        col("payload").cast("string").as("payload"),
+        col("seq").cast("long").as("seq"));
+    return rows.groupBy("source").as(Encoders.STRING(), Encoders.row(ROW))
+        .flatMapGroupsWithState(new TxFilter(), OutputMode.Append(), Encoders.row(STATE),
+            Encoders.row(ROW), GroupStateTimeout.NoTimeout());
+  }
+
+  @Override
+  public Iterator<Row> call(String source, Iterator<Row> input, GroupState<Row> state)
+      throws IOException {
+    boolean inTx = state.exists() && state.get().getBoolean(0);
+    List<Row> buf = state.exists() ? decode(state.get().getAs(1)) : new ArrayList<>();
+    List<Row> rows = new ArrayList<>();
+    input.forEachRemaining(rows::add);
+    rows.sort(BY_SEQ);
+    List<Row> out = new ArrayList<>();
+    for (Row r : rows) {
+      String et = r.getString(EVENT_TYPE);
+      if ("tx-begin".equals(et)) {
+        // a nested begin keeps the already-buffered rows (stream.clj:36)
+        inTx = true;
+      } else if ("tx-commit".equals(et)) {
+        out.addAll(buf);
+        inTx = false;
+        buf.clear();
+      } else if ("tx-rollback".equals(et)) {
+        inTx = false;
+        buf.clear();
+      } else if (inTx) {
+        buf.add(r);
+      } else {
+        // out-of-tx events pass straight through (stream.clj:52)
+        out.add(r);
+      }
+    }
+    state.update(RowFactory.create(inTx, encode(buf)));
+    return out.iterator();
+  }
+
+  /** The buffered rows as a count, then per row four nullable strings and a nullable seq. */
+  static byte[] encode(List<Row> rows) throws IOException {
+    ByteArrayOutputStream bytes = new ByteArrayOutputStream();
+    try (DataOutputStream out = new DataOutputStream(bytes)) {
+      out.writeInt(rows.size());
+      for (Row r : rows) {
+        for (int i = 0; i < SEQ; i++) {
+          byte[] s = r.isNullAt(i) ? null : r.getString(i).getBytes(StandardCharsets.UTF_8);
+          out.writeInt(s == null ? -1 : s.length);
+          if (s != null) {
+            out.write(s);
+          }
+        }
+        out.writeBoolean(r.isNullAt(SEQ));
+        if (!r.isNullAt(SEQ)) {
+          out.writeLong(r.getLong(SEQ));
+        }
+      }
+    }
+    return bytes.toByteArray();
+  }
+
+  static List<Row> decode(byte[] bytes) throws IOException {
+    DataInputStream in = new DataInputStream(new ByteArrayInputStream(bytes));
+    int n = in.readInt();
+    List<Row> rows = new ArrayList<>(n);
+    for (int k = 0; k < n; k++) {
+      Object[] fields = new Object[SEQ + 1];
+      for (int i = 0; i < SEQ; i++) {
+        int len = in.readInt();
+        if (len >= 0) {
+          byte[] s = new byte[len];
+          in.readFully(s);
+          fields[i] = new String(s, StandardCharsets.UTF_8);
+        }
+      }
+      fields[SEQ] = in.readBoolean() ? null : in.readLong();
+      rows.add(RowFactory.create(fields));
+    }
+    return rows;
+  }
+}

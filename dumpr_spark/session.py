@@ -16,8 +16,9 @@ task calls `importlib.invalidate_caches()`, and on CPython 3.11 each
 zipimporter then re-reads its archive's whole central directory: 16-18
 importers over pyspark.zip (1,328 entries), the spark-core jar (5,359) and
 the py4j zip. Measured on a 4-vCPU host, that call took 115-274 ms CPU
-per task (0.06-0.14 ms stat-checked), where the streaming tx-filter fold
-takes 2-3 ms per group. The daemon re-reads an archive only when its stat
+per task (0.06-0.14 ms stat-checked), where the pandas tx-filter fold,
+the fallback when the engine jar (below) cannot be built, takes 2-3 ms
+per group. The daemon re-reads an archive only when its stat
 stamp (mtime_ns, size, inode) changed, so a rewritten or newly added
 `addPyFile` archive still imports its new contents. The daemon has to be
 importable from wherever the JVM runs Python, so the package's parent
@@ -41,6 +42,22 @@ costs about 110 MB heap plus 34 MB non-heap, about 40 KB per entry, so 4096
 holds the whole registry for about 2% of the 8 GB driver heap, and a
 working set as small as the mix costs only what it uses.
 
+Engine jar: `engine_jar` compiles the Java sources in `dumpr_spark/jvm`
+into one jar on the driver classpath, which in `local[N]` is the executors'
+too: the `file:` filesystem classes (below) and `TxFilter`, the streaming
+transaction filter as a `flatMapGroupsWithState` fold, which
+`streaming.state.streaming_tx_filter` uses whenever the class loads, so a
+CDC micro-batch's rows stay in the JVM instead of crossing to a Python
+worker and back through Arrow. The jar is compiled once per version of its
+sources and of the jars they compile against (Hadoop's client API and Spark
+SQL) into `$XDG_CACHE_HOME/dumpr_spark` (default `~/.cache`; the first
+build takes a few seconds). On a non-local master the executors do not see
+the driver classpath: pass the jar (`engine_jar()`) with `--jars` or
+`spark.jars`, or the filter's tasks fail to load `TxFilter`. Without a
+`javac` (`$JAVA_HOME/bin`, then `PATH`) the session logs one WARNING and
+keeps Hadoop's classes and the pandas tx filter: results are the same, only
+the forks and the Python round trip return.
+
 Local files: without libhadoop (the session logs "Unable to load
 native-hadoop library"), Hadoop's `file:` filesystem forks a `chmod`
 process on every create, mkdir and setPermission, and a `readlink` on
@@ -49,18 +66,31 @@ micro-batch commits its offset, commit and source logs, the RocksDB state
 upload and the sink's files through it: in a `cdc_replicate` tail on a
 4-vCPU host that was 95 forks per batch, about 1.8 ms of CPU each, 0.17 s
 per batch that shows only in the JVM's reaped-children time. `get_spark`
-points the scheme at the three classes in `dumpr_spark/jvm`, which make
-the same `chmod(2)` and `lstat(2)` calls in-process and are Hadoop's
-classes otherwise (`.crc` sidecars, file modes, a FileContext rename that
-refuses an existing target). They are compiled once per version of their
-sources and of Hadoop's client API into `$XDG_CACHE_HOME/dumpr_spark`
-(default `~/.cache`; the first build takes about 3.5 s) and put on the
-driver classpath, which in `local[N]` is the executors' too. The tail then
-forks only Spark's `rm -rf` of RocksDB's local checkpoint dirs, 4-5 per
-batch, 0.010 s. Without a `javac` (`$JAVA_HOME/bin`, then `PATH`) the
-session logs one WARNING and keeps Hadoop's classes: results are the same,
-only the forks return. An `extra_conf` value for `spark.hadoop.fs.file.impl`
-wins over the engine's.
+points the scheme at the jar's three filesystem classes, which make the
+same `chmod(2)` and `lstat(2)` calls in-process and are Hadoop's classes
+otherwise (`.crc` sidecars, file modes, a FileContext rename that refuses
+an existing target). The tail then forks only Spark's `rm -rf` of
+RocksDB's local checkpoint dirs, 4-5 per batch, 0.010 s. An `extra_conf`
+value for `spark.hadoop.fs.file.impl` wins over the engine's.
+
+Call sites: PySpark 4.1 wraps `F.col` and every classic `Column` method
+(`alias`, `cast`, `isin`, the operators) in `_with_origin`
+(`pyspark/errors/utils.py`) while
+`spark.python.sql.dataFrameDebugging.enabled` is on, its default. Each
+wrapped call then walks the Python stack for the first frame outside
+pyspark and makes about four extra py4j round trips (looking up the JVM's
+`PySparkCurrentOrigin`, reading `spark.sql.stackTracesInDataFrameContext`,
+setting and clearing the origin). Over 2,000 calls on a warm `local[2]`
+session on a 4-vCPU host, `F.col` took 578 µs of wall time per call with it
+and 186 µs without, `col * col` 479 and 49 µs, `.cast` 492 and 101 µs.
+Every query and every merge micro-batch builds its plan from Python anew,
+so `session_conf` turns it off. What is lost is the Python line in the
+DataFrame query context of analysis and runtime errors: the
+`== DataFrame ==` section of, say, a failed ANSI cast no longer names the
+line that built the expression. To get it back, pass
+`extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`;
+PySpark reads the flag once per Python process, at the first wrapped call
+with an active session.
 """
 
 from __future__ import annotations
@@ -80,7 +110,7 @@ from pyspark.sql import SparkSession
 _LOG = logging.getLogger(__name__)
 # the directory `dumpr_spark` is imported from, for the worker path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# sources of the engine's `file:` classes, and the Hadoop keys they serve
+# sources of the engine jar, and the Hadoop keys its `file:` classes serve
 _JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 _LOCAL_FS = {
     "spark.hadoop.fs.file.impl": "dumpr_spark.jvm.NoForkLocalFileSystem",
@@ -99,22 +129,24 @@ def _javac() -> str | None:
     return shutil.which("javac")
 
 
-def localfs_jar() -> str | None:
-    """The jar of the engine's `file:` classes (`dumpr_spark/jvm`), compiled
-    once per version of their sources and of Hadoop's client API into the
-    user cache dir (not TMPDIR, which a caller may delete). None, after one
-    WARNING, when it cannot be built."""
+def engine_jar() -> str | None:
+    """The jar of the engine's JVM classes (`dumpr_spark/jvm`: the `file:`
+    filesystem classes and the streaming tx filter), compiled once per
+    version of their sources and of the jars they compile against, Hadoop's
+    client API and Spark SQL, into the user cache dir (not TMPDIR, which a
+    caller may delete). None, after one WARNING, when it cannot be built."""
     jars = os.path.join(_find_spark_home(), "jars")
     sources = sorted(glob.glob(os.path.join(_JVM_SRC, "*.java")))
     digest = hashlib.sha256()
-    for api in sorted(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))):
+    for api in sorted(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))
+                      + glob.glob(os.path.join(jars, "spark-sql*.jar"))):
         digest.update(os.path.basename(api).encode())
     for src in sources:
         with open(src, "rb") as f:
             digest.update(os.path.basename(src).encode() + b"\0" + f.read())
     cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
                          "dumpr_spark")
-    jar = os.path.join(cache, f"localfs-{digest.hexdigest()[:16]}.jar")
+    jar = os.path.join(cache, f"engine-{digest.hexdigest()[:16]}.jar")
     if os.path.exists(jar):
         return jar
     try:
@@ -127,7 +159,7 @@ def localfs_jar() -> str | None:
             subprocess.run([javac, "--release", "17", "-cp", os.path.join(jars, "*"),
                             "-d", classes, *sources],
                            check=True, capture_output=True, text=True)
-            part = os.path.join(tmp, "localfs.jar")
+            part = os.path.join(tmp, "engine.jar")
             with zipfile.ZipFile(part, "w") as z:
                 for root, _, files in os.walk(classes):
                     for name in files:
@@ -135,9 +167,9 @@ def localfs_jar() -> str | None:
                         z.write(path, os.path.relpath(path, classes))
             os.replace(part, jar)
     except (OSError, subprocess.CalledProcessError) as e:
-        _LOG.warning("cannot build the engine's local filesystem classes, keeping "
-                     "Hadoop's (a chmod or readlink fork per local file): %s",
-                     getattr(e, "stderr", None) or e)
+        _LOG.warning("cannot build the engine's JVM classes, keeping Hadoop's "
+                     "local filesystem (a chmod or readlink fork per local file) "
+                     "and the pandas tx filter: %s", getattr(e, "stderr", None) or e)
         return None
     return jar
 
@@ -157,7 +189,7 @@ def session_conf(
     """Every conf `get_spark` sets besides the master and app name:
     `extra_conf` wins over the engine's values, and the two path lists are
     merged with it."""
-    jar = localfs_jar()
+    jar = engine_jar()
     conf = {
         # semantics
         "spark.sql.session.timeZone": "UTC",
@@ -175,6 +207,7 @@ def session_conf(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         "spark.sql.codegen.cache.maxEntries": "4096",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",  # see "Call sites"
         "spark.ui.enabled": "false",
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

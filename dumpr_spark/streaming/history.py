@@ -151,8 +151,8 @@ def start_history_stream(
 ):
     """Start the SCD2-materializing stream (R18/R19 lifecycle, temporal).
     output_mode: same contract as start_merge_stream — foreachBatch itself
-    is mode-agnostic, but an upstream applyInPandasWithState declared in
-    append mode (the streaming tx filter) requires output_mode="append".
+    is mode-agnostic, but an upstream stateful operator declared in append
+    mode (the streaming tx filter) requires output_mode="append".
     key_bucket: optional (tbl, bucket)-sliced layout — a policy object,
     or "auto" to derive one from the first non-empty batch via the
     certified sizing helpers; see MergeSink.

@@ -1406,8 +1406,9 @@ def start_merge_stream(
 
     output_mode: foreachBatch itself is mode-agnostic (the sink merges
     whatever the batch carries), but upstream stateful operators constrain
-    the legal mode — applyInPandasWithState declared in append mode (the
-    streaming tx filter) requires output_mode="append".
+    the legal mode — the streaming tx filter, `flatMapGroupsWithState` in
+    the JVM or its `applyInPandasWithState` fallback, is declared in append
+    mode and requires output_mode="append".
     key_bucket: optional (tbl, bucket)-sliced state layout — a policy
     object, or "auto" to derive one from the first non-empty batch via
     the certified sizing helpers; see MergeSink.

@@ -1,6 +1,6 @@
-"""Arbitrary stateful streaming ops (SURVEY §2.2-H): the transaction filter
-as applyInPandasWithState — the streaming twin of the reference's stateful
-transducer (R4, stream.clj:22-54).
+"""Arbitrary stateful streaming ops (SURVEY §2.2-H). First the transaction
+filter, the streaming twin of the reference's stateful transducer (R4,
+stream.clj:22-54).
 
 State per source key: (in_tx, buffered rows). tx-begin opens a buffer,
 tx-commit releases it downstream, tx-rollback discards it, markers are
@@ -9,6 +9,24 @@ boolean semantics, stream.clj:22-54) — and a transaction that spans
 micro-batches survives in the state store (the reference's channel
 transducer gets this for free from ordering; here the state store +
 checkpoint make it restart-safe).
+
+The filter runs in one of two folds with the same state machine. When the
+engine jar (`session.engine_jar`) is on the session's classpath it is
+`dumpr_spark.jvm.TxFilter`, a `flatMapGroupsWithState` plan node with
+state `(in_tx boolean, buffer binary)`: a micro-batch runs scan, shuffle
+by source, fold and sink in the JVM and starts no Python worker. (The
+buffer is bytes, not an `array<struct>`, because Spark re-resolves the
+state deserializer every micro-batch and an array in it compiles a new
+projection class each time.) Otherwise (no JDK to build the jar, or a cluster
+session started without it) it is `_fold_tx_rows` under
+`applyInPandasWithState`, with the buffer as a JSON string, which ships
+each batch's rows to a Python worker and back through Arrow; that fold is
+also the reference the tests hold the JVM one to. Which fold runs is a
+property of the session, not an option. A checkpoint written by one fold
+does not restart under the other: Spark refuses the query with
+STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA (the operator
+names differ) and never re-folds the stream silently, so a stream moved to
+a session without the jar, or back, starts from a fresh checkpoint.
 
 Scale note: the filter is keyed by `source` (connection/shard id). One key is
 inherently serial — exactly as serial as the binlog itself; many sources
@@ -22,7 +40,8 @@ import json
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from py4j.java_gateway import JavaClass
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
@@ -56,11 +75,30 @@ def _tx_filter_fn(
     yield pd.DataFrame(out, columns=[f.name for f in TX_OUT_SCHEMA.fields])
 
 
+def _tx_filter_class(spark: SparkSession):
+    """The engine jar's `TxFilter` class in `spark`'s JVM, or None when the
+    class does not load there (no jar on the classpath, or no JVM)."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
+    cls = jvm.dumpr_spark.jvm.TxFilter
+    return cls if isinstance(cls, JavaClass) else None
+
+
 def streaming_tx_filter(events: DataFrame) -> DataFrame:
     """events: streaming frame with (source, event_type, tbl, payload, seq).
     Returns rows of committed transactions PLUS rows arriving outside any
     transaction (non-transactional events pass straight through, matching
-    the reference transducer and the batch form); markers stripped."""
+    the reference transducer and the batch form); markers stripped.
+
+    The fold is the JVM's `TxFilter` when that class loads in the session's
+    JVM, else `_fold_tx_rows` under `applyInPandasWithState`; both are
+    declared in append mode, and neither restarts from the other's
+    checkpoint (see the module docstring)."""
+    spark = events.sparkSession
+    jvm_fold = _tx_filter_class(spark)
+    if jvm_fold is not None:
+        return DataFrame(jvm_fold.apply(events._jdf), spark)
     return (
         events.groupBy("source")
         .applyInPandasWithState(

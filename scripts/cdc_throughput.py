@@ -7,7 +7,7 @@ land within a second-scale timeout), not measured. This script measures the
 real number for the full streaming path on the sf1-local change stream:
 
     file-feed ingest (maxFilesPerTrigger pacing)
-      -> streaming_tx_filter (applyInPandasWithState, per-source state)
+      -> streaming_tx_filter (flatMapGroupsWithState, per-source state)
       -> envelope shaping -> MergeSink materialize (foreachBatch)
 
 Feed construction (from .sf1_local/orders.parquet — run

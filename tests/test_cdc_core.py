@@ -219,11 +219,21 @@ def test_tx_filter_commit_rollback(spark):
     assert out == [1, 2, 8]
 
 
+def _jvm_fold_rows(df):
+    """The rows the JVM tx fold (`dumpr_spark/jvm/TxFilter.java`) releases
+    from the batch frame `df`, as tuples in seq order."""
+    from dumpr_spark.streaming.state import _tx_filter_class, streaming_tx_filter
+
+    assert _tx_filter_class(df.sparkSession) is not None
+    return sorted((tuple(r) for r in streaming_tx_filter(df).collect()), key=lambda t: t[-1])
+
+
 def test_tx_filter_passes_out_of_tx_rows_like_streaming(spark):
     """Rows BETWEEN transactions (after a commit/rollback, before the next
     begin) pass straight through — the reference releases out-of-tx input
     immediately (stream.clj:52, `(rf result input)`; non-transactional
-    binlog events like DDL must survive). Batch and streaming agree."""
+    binlog events like DDL must survive). Batch and both streaming folds,
+    pandas and JVM, agree."""
     import pandas as pd
 
     from dumpr_spark.streaming.state import _fold_tx_rows
@@ -241,19 +251,21 @@ def test_tx_filter_passes_out_of_tx_rows_like_streaming(spark):
     released, _, _ = _fold_tx_rows(pdf, False, [])
     stream_seqs = sorted(r["seq"] for r in released)
     assert batch_seqs == stream_seqs == [1, 3, 5]
+    assert _jvm_fold_rows(df) == [tuple(r.values()) for r in released]
 
 
 def test_tx_filter_batch_equals_streaming_fold_property(spark):
     """Property (r2 VERDICT #8): on RANDOM marker/row sequences the batch
-    window form (`filter_committed_txs`) and the streaming fold
-    (`_fold_tx_rows`) release exactly the same row set — commits release,
+    window form (`filter_committed_txs`), the pandas streaming fold
+    (`_fold_tx_rows`) and the JVM one (`TxFilter`, run over the same batch
+    frame) release exactly the same row set — commits release,
     rollbacks discard, rows outside any tx pass straight through, a nested
     re-begin keeps the open buffer (reference start-tx only flips the flag),
     and a trailing open tx releases nothing (the streaming side keeps it
     buffered; the batch side sees no commit). Reference semantics:
     stream.clj:22-54."""
     import pandas as pd
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from dumpr_spark.cdc.filters import _TX_MARKERS
@@ -263,6 +275,7 @@ def test_tx_filter_batch_equals_streaming_fold_property(spark):
     markers = set(_TX_MARKERS)
 
     @settings(max_examples=40, deadline=None)
+    @example(types=["tx-begin", "write", "tx-begin", "tx-commit"])  # nested begin
     @given(
         types=st.lists(
             st.sampled_from(["tx-begin", "tx-commit", "tx-rollback", "write", "update"]),
@@ -282,6 +295,10 @@ def test_tx_filter_batch_equals_streaming_fold_property(spark):
         released, in_tx, buf = _fold_tx_rows(pd.DataFrame(rows, columns=cols), False, [])
         stream_seqs = sorted(r["seq"] for r in released)
         assert batch_seqs == stream_seqs, (types, batch_seqs, stream_seqs)
+        # the JVM fold releases the pandas fold's rows, field for field
+        jvm_rows = _jvm_fold_rows(df)
+        assert jvm_rows == sorted((tuple(r.values()) for r in released),
+                                  key=lambda t: t[-1]), (types, jvm_rows)
         # the streaming buffer only ever holds rows of the one open tx
         assert in_tx or buf == []
 

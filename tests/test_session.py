@@ -1,12 +1,13 @@
-"""Session settings that only show over many queries in one JVM, and the
-engine's `file:` filesystem classes with the jar `get_spark` builds them
-into."""
+"""Session settings that only show over many queries in one JVM or per
+Column call, and the engine jar `get_spark` builds: its `file:` filesystem
+classes and the streaming tx filter."""
 
 from __future__ import annotations
 
 import logging
 import os
 import shutil
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,7 +31,33 @@ def test_codegen_cache_holds_a_cyclic_query_set(spark):
     assert compiled.getCount() - before == 0
 
 
-# --- the engine's `file:` classes (dumpr_spark/jvm) ---------------------------
+# --- call-site capture (spark.python.sql.dataFrameDebugging.enabled) ---------
+
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_session_conf_turns_call_site_capture_off():
+    assert session.session_conf(2, 2)[DEBUGGING] == "false"
+    assert session.session_conf(2, 2, {DEBUGGING: "true"})[DEBUGGING] == "true"
+
+
+def test_column_calls_capture_no_call_site(spark, monkeypatch):
+    """A Column op in an engine session walks no Python stack for its call
+    site. PySpark caches the flag per process, so the cache is cleared
+    first and re-read from the session."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get(DEBUGGING) == "false"
+    calls = []
+    capture = utils._capture_call_site
+    monkeypatch.setattr(utils, "_capture_call_site",
+                        lambda depth: calls.append(depth) or capture(depth))
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    (F.col("x") * F.col("y")).cast("long").alias("z")
+    assert calls == []
+
+
+# --- the engine jar (dumpr_spark/jvm) -----------------------------------------
 
 ENGINE_FS = "dumpr_spark.jvm.NoForkLocalFileSystem"
 ENGINE_FC = "dumpr_spark.jvm.NoForkLocalFs"
@@ -154,7 +181,7 @@ def jar_cache(tmp_path_factory):
     cache = str(tmp_path_factory.mktemp("xdg_cache"))
     with pytest.MonkeyPatch.context() as mp:
         mp.setenv("XDG_CACHE_HOME", cache)
-        jar = session.localfs_jar()
+        jar = session.engine_jar()
     assert jar is not None and jar.startswith(cache) and os.path.isfile(jar)
     return cache, jar
 
@@ -166,8 +193,15 @@ def _no_javac(monkeypatch, tmp_path):
     monkeypatch.setenv("JAVA_HOME", str(empty))
 
 
-def test_localfs_jar_is_reused_and_keyed_by_its_sources(jar_cache, tmp_path, monkeypatch,
-                                                        caplog):
+def test_engine_jar_holds_the_tx_filter(jar_cache):
+    with zipfile.ZipFile(jar_cache[1]) as z:
+        names = set(z.namelist())
+    assert "dumpr_spark/jvm/TxFilter.class" in names
+    assert "dumpr_spark/jvm/NoForkLocalFileSystem.class" in names
+
+
+def test_engine_jar_is_reused_and_keyed_by_its_sources(jar_cache, tmp_path, monkeypatch,
+                                                       caplog):
     cache, jar = jar_cache
     monkeypatch.setenv("XDG_CACHE_HOME", cache)
     src = tmp_path / "jvm"
@@ -176,12 +210,24 @@ def test_localfs_jar_is_reused_and_keyed_by_its_sources(jar_cache, tmp_path, mon
         f.write("// edited\n")
     with monkeypatch.context() as mp:
         mp.setattr(session, "_JVM_SRC", str(src))
-        edited = session.localfs_jar()
+        edited = session.engine_jar()
     assert edited != jar and os.path.isfile(edited)
+
+    # TxFilter compiles against Spark SQL: another Spark SQL jar, another key
+    real = os.path.join(session._find_spark_home(), "jars")
+    jars = tmp_path / "spark" / "jars"
+    jars.mkdir(parents=True)
+    for name in os.listdir(real):
+        os.symlink(os.path.join(real, name), jars / name.replace("spark-sql_", "spark-sql_next-"))
+    assert any(n.startswith("spark-sql_next-") for n in os.listdir(jars))
+    with monkeypatch.context() as mp:
+        mp.setattr(session, "_find_spark_home", lambda: str(tmp_path / "spark"))
+        respun = session.engine_jar()
+    assert respun not in (jar, edited) and os.path.isfile(respun)
 
     _no_javac(monkeypatch, tmp_path)
     with caplog.at_level(logging.WARNING, logger="dumpr_spark.session"):
-        assert session.localfs_jar() == jar  # the cached jar, no javac needed
+        assert session.engine_jar() == jar  # the cached jar, no javac needed
     assert not caplog.records
 
 

@@ -13,7 +13,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from dumpr_spark.streaming import state as tx_state
+
 pytestmark = pytest.mark.streaming
+
+_JVM_TX_CLASS = tx_state._tx_filter_class  # before any test pins a fold
 
 
 def write_events(path, events, file_name="part-000.json"):
@@ -405,12 +409,41 @@ def test_streaming_dedup_with_watermark(spark, tmp_path):
     assert [(r["k"], r["seq"]) for r in rows] == [("a", 1), ("a", 2)]
 
 
-def test_streaming_tx_filter_across_batches(spark, tmp_path):
+TX_FEED_SCHEMA = "source string, event_type string, tbl string, payload string, seq long"
+TX_FIELDS = ["source", "event_type", "tbl", "payload", "seq"]
+
+
+def _pin_tx_fold(spark, monkeypatch, path):
+    """Make `streaming_tx_filter` run one fold: "jvm", the engine jar's
+    `TxFilter` (which must load in the test session), or "pandas", the
+    `applyInPandasWithState` fold a session without the jar runs."""
+    fold = _JVM_TX_CLASS if path == "jvm" else (lambda spark: None)
+    monkeypatch.setattr(tx_state, "_tx_filter_class", fold)
+    assert (fold(spark) is not None) == (path == "jvm")
+
+
+def _run_tx_filter(spark, src, out, ckpt, schema=TX_FEED_SCHEMA, one_file_per_batch=False):
+    """Run `streaming_tx_filter` over the JSON feed in `src` into parquet
+    at `out` until the feed is drained; returns the stopped query."""
+    reader = spark.readStream.schema(schema)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    q = (tx_state.streaming_tx_filter(reader.json(src)).writeStream.format("parquet")
+         .option("path", out).option("checkpointLocation", ckpt)
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return q
+
+
+@pytest.mark.parametrize("path", ["jvm", "pandas"])
+def test_streaming_tx_filter_across_batches(spark, tmp_path, monkeypatch, path):
     """Stateful tx filter: a transaction spanning two micro-batches commits in
     the second — its rows must be released then (state store carries the
-    buffer across batches)."""
+    buffer across batches). Both folds."""
     from dumpr_spark.streaming.state import streaming_tx_filter
 
+    _pin_tx_fold(spark, monkeypatch, path)
     src = str(tmp_path / "tx_src")
     # batch 1 file: begin + one row (no commit yet)
     write_events(src, [
@@ -427,18 +460,181 @@ def test_streaming_tx_filter_across_batches(spark, tmp_path):
     ], file_name="b2.json")
 
     events = (
-        spark.readStream.schema("source string, event_type string, tbl string, payload string, seq long")
+        spark.readStream.schema(TX_FEED_SCHEMA)
         .option("maxFilesPerTrigger", "1")  # force two micro-batches
         .json(src)
     )
     out = streaming_tx_filter(events)
     q = (
-        out.writeStream.format("memory").queryName("tx_test")
+        out.writeStream.format("memory").queryName(f"tx_test_{path}")
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination(120)
-    rows = spark.sql("SELECT payload, seq FROM tx_test ORDER BY seq").collect()
+    rows = spark.sql(f"SELECT payload, seq FROM tx_test_{path} ORDER BY seq").collect()
     assert [(r["payload"], r["seq"]) for r in rows] == [("r1", 2), ("r2", 3)]
+
+
+@pytest.mark.parametrize("path", ["jvm", "pandas"])
+def test_streaming_tx_filter_random_sources_match_fold(spark, tmp_path, monkeypatch, path):
+    """20 sources, each a seeded random marker/row sequence split over 3
+    feed files (one micro-batch each, lines shuffled within a file, `seq`
+    read as int): the stream releases exactly the rows `_fold_tx_rows`
+    releases batch by batch, field for field. Source s0 is scripted to
+    carry an out-of-tx row, a transaction spanning files, a nested begin,
+    a rollback and an open tail."""
+    import random
+
+    import pandas as pd
+
+    from dumpr_spark.streaming.state import _fold_tx_rows
+
+    _pin_tx_fold(spark, monkeypatch, path)
+    rng = random.Random(20261019)
+    kinds = ["tx-begin", "tx-commit", "tx-rollback", "write", "update", "delete"]
+    scripts = {"s0": [["write", "tx-begin", "write"],
+                      ["tx-begin", "update", "tx-commit", "tx-begin", "write"],
+                      ["tx-rollback", "delete", "tx-begin", "write"]]}
+    for s in range(1, 20):
+        scripts[f"s{s}"] = [rng.choices(kinds, weights=[3, 2, 1, 4, 3, 1],
+                                        k=rng.randint(0, 12)) for _ in range(3)]
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    seq, batches = 0, []
+    for f in range(3):
+        rows = []
+        for source, script in scripts.items():
+            for et in script[f]:
+                marker = et.startswith("tx-")
+                rows.append((source, et, None if marker else "w",
+                             None if marker else f"{source}-{seq}", seq))
+                seq += 1
+        batches.append(rows)
+        rng.shuffle(rows)
+        write_json_batch(src, f"f{f}.json", rows, TX_FIELDS, 1_000_000 + 100 * f)
+
+    expected, state = [], {}
+    for rows in batches:
+        pdf = pd.DataFrame(rows, columns=TX_FIELDS)
+        for source, group in pdf.groupby("source"):
+            out, in_tx, buf = _fold_tx_rows(group, *state.get(source, (False, [])))
+            state[source] = (in_tx, buf)
+            expected += [tuple(r.values()) for r in out]
+    s0 = [r[1] for r in expected if r[0] == "s0"]
+    assert s0 == ["write", "write", "update", "delete"]  # nested begin kept the buffer
+    assert state["s0"][0] and len(state["s0"][1]) == 1  # the open tail
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = _run_tx_filter(spark, src, out, ckpt, schema=TX_FEED_SCHEMA.replace("seq long", "seq int"),
+                       one_file_per_batch=True)
+    assert len(q.recentProgress) == 3
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == len(state)
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == sorted(expected)
+    assert len(expected) > 40
+
+
+def test_streaming_tx_filter_plan_runs_no_python(spark, tmp_path):
+    """With the engine jar the filter is a `FlatMapGroupsWithState` node:
+    no pandas state operator and no other Python node in the micro-batch
+    plan, so a batch starts no Python worker."""
+    import re
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    write_json_batch(src, "f0.json", [("s1", "tx-begin", None, None, 1),
+                                      ("s1", "write", "w", "r1", 2),
+                                      ("s1", "tx-commit", None, None, 3)], TX_FIELDS, 1_000_000)
+    q = _run_tx_filter(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    plan = q._jsq.explainInternal(False)
+    assert "FlatMapGroupsWithState" in plan, plan
+    assert not re.search(r"Pandas|Python|Arrow", plan), plan
+
+
+@pytest.mark.parametrize("path", ["jvm", "pandas"])
+def test_tx_filter_checkpoint_restarts_only_under_its_fold(spark, tmp_path, monkeypatch,
+                                                          path):
+    """A transaction opens in file 1, the query stops, and a restart under
+    the same fold reads file 2, which commits it: the buffered rows come
+    back from the state store and are released exactly once. A restart of
+    that checkpoint under the other fold is refused by Spark's state
+    metadata check instead of re-folding the stream."""
+    from pyspark.errors import StreamingQueryException
+
+    other = {"jvm": "pandas", "pandas": "jvm"}[path]
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    write_json_batch(src, "f1.json", [
+        ("s1", "write", "w", "pre", 1),  # outside any tx
+        ("s1", "tx-begin", None, None, 2), ("s1", "write", "w", "r1", 3),
+        ("s2", "tx-begin", None, None, 4), ("s2", "write", "w", "gone", 5),
+    ], TX_FIELDS, 1_000_000)
+    _pin_tx_fold(spark, monkeypatch, path)
+    _run_tx_filter(spark, src, out, ckpt)
+    write_json_batch(src, "f2.json", [
+        ("s1", "write", "w", "r2", 6), ("s1", "tx-commit", None, None, 7),
+        ("s2", "tx-rollback", None, None, 8), ("s2", "write", "w", "post", 9),
+    ], TX_FIELDS, 1_000_100)
+    q = _run_tx_filter(spark, src, out, ckpt)
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 2
+    rows = spark.read.parquet(out).orderBy("seq").collect()
+    assert [(r["source"], r["payload"], r["seq"]) for r in rows] == [
+        ("s1", "pre", 1), ("s1", "r1", 3), ("s1", "r2", 6), ("s2", "post", 9)]
+
+    write_json_batch(src, "f3.json", [("s1", "write", "w", "late", 10)], TX_FIELDS, 1_000_200)
+    _pin_tx_fold(spark, monkeypatch, other)
+    with pytest.raises(StreamingQueryException,
+                       match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"):
+        _run_tx_filter(spark, src, out, ckpt)
+    assert spark.read.parquet(out).count() == 4
+
+
+def test_tx_filter_merge_stream_warm_batches_compile_no_code(spark, tmp_path):
+    """Two warm micro-batches of a tx-filter -> `MergeSink` stream, each of
+    the same shape as the last, add nothing to Spark's codegen compile
+    count: the per-batch plans hit the codegen cache, and what the JIT
+    compiles in a long tail is warm-up, not classes generated per batch."""
+    from dumpr_spark.streaming.sink import KeyBucket, start_merge_stream
+    from dumpr_spark.streaming.state import streaming_tx_filter
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    os.makedirs(src)
+    changes = streaming_tx_filter(spark.readStream.schema(TX_FEED_SCHEMA).json(src)).select(
+        F.when(F.col("event_type") == "delete", "delete").otherwise("upsert").alias("op"),
+        "tbl", F.get_json_object("payload", "$.id").alias("id"),
+        F.col("payload").alias("content"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        F.lit(None).cast("string").alias("next_file"),
+        F.col("seq").alias("next_position"), "seq")
+    q = start_merge_stream(changes, state, ckpt, trigger_available_now=False,
+                           output_mode="append", key_bucket=KeyBucket(width=10))
+    seq = 0
+
+    def land(i):
+        nonlocal seq
+        rows = []
+        for s in ("s0", "s1"):
+            rows.append((s, "tx-begin", None, None, seq))
+            for k in range(5):
+                seq += 1
+                rows.append((s, "update", "a", json.dumps({"id": k, "v": seq}), seq))
+            rows.append((s, "tx-commit", None, None, seq + 1))
+            seq += 2
+        write_json_batch(src, f"f{i}.json", rows, TX_FIELDS, 1_000_000 + 100 * i)
+        q.processAllAvailable()
+
+    try:
+        for i in range(3):
+            land(i)
+        before = compiled.getCount()
+        for i in range(3, 5):
+            land(i)
+        assert compiled.getCount() - before == 0
+        assert q.lastProgress["batchId"] == 4
+    finally:
+        q.stop()
+    assert q.exception() is None
 
 
 @pytest.mark.parametrize("kind", ["merge_plain", "merge_bucketed",
