@@ -35,8 +35,13 @@ import org.apache.spark.sql.types.StructType;
  * {@code array<struct>}: Spark resolves the state deserializer anew for every
  * micro-batch, and an array in it gets a fresh lambda variable id each time,
  * so every batch would generate and compile a new projection class.
+ *
+ * <p>{@code session.engine_jar} compiles this file with Spark's own Janino,
+ * which has no lambdas or method references, treats a generic interface as
+ * raw (hence {@code call}'s {@code Object} signature and casts), and cannot
+ * see a try-with-resources variable.
  */
-public class TxFilter implements FlatMapGroupsWithStateFunction<String, Row, Row, Row> {
+public class TxFilter implements FlatMapGroupsWithStateFunction {
   /** {@code streaming.state.TX_OUT_SCHEMA}: the input columns and the output rows. */
   static final StructType ROW = new StructType()
       .add("source", DataTypes.StringType)
@@ -49,10 +54,19 @@ public class TxFilter implements FlatMapGroupsWithStateFunction<String, Row, Row
       .add("buffer", DataTypes.BinaryType);
   private static final int EVENT_TYPE = 1;
   private static final int SEQ = 4;
-  // pandas' sort_values("seq") order: ascending, a NULL seq last
-  private static final Comparator<Row> BY_SEQ = Comparator.comparing(
-      (Row r) -> r.isNullAt(SEQ) ? null : r.getLong(SEQ),
-      Comparator.nullsLast(Comparator.naturalOrder()));
+
+  /** pandas' {@code sort_values("seq")} order: ascending, a NULL seq last. */
+  static class BySeq implements Comparator {
+    @Override
+    public int compare(Object a, Object b) {
+      Row x = (Row) a;
+      Row y = (Row) b;
+      if (x.isNullAt(SEQ) || y.isNullAt(SEQ)) {
+        return Boolean.compare(x.isNullAt(SEQ), y.isNullAt(SEQ));
+      }
+      return Long.compare(x.getLong(SEQ), y.getLong(SEQ));
+    }
+  }
 
   /** {@code events}' committed and out-of-transaction rows, markers stripped. */
   public static Dataset<Row> apply(Dataset<Row> events) {
@@ -68,14 +82,16 @@ public class TxFilter implements FlatMapGroupsWithStateFunction<String, Row, Row
   }
 
   @Override
-  public Iterator<Row> call(String source, Iterator<Row> input, GroupState<Row> state)
-      throws IOException {
-    boolean inTx = state.exists() && state.get().getBoolean(0);
-    List<Row> buf = state.exists() ? decode(state.get().getAs(1)) : new ArrayList<>();
-    List<Row> rows = new ArrayList<>();
-    input.forEachRemaining(rows::add);
-    rows.sort(BY_SEQ);
-    List<Row> out = new ArrayList<>();
+  public Iterator call(Object source, Iterator input, GroupState state) throws IOException {
+    Row prior = state.exists() ? (Row) state.get() : null;
+    boolean inTx = prior != null && prior.getBoolean(0);
+    List<Row> buf = prior != null ? decode((byte[]) prior.get(1)) : new ArrayList<Row>();
+    List<Row> rows = new ArrayList<Row>();
+    while (input.hasNext()) {
+      rows.add((Row) input.next());
+    }
+    rows.sort(new BySeq());
+    List<Row> out = new ArrayList<Row>();
     for (Row r : rows) {
       String et = r.getString(EVENT_TYPE);
       if ("tx-begin".equals(et)) {
@@ -102,22 +118,22 @@ public class TxFilter implements FlatMapGroupsWithStateFunction<String, Row, Row
   /** The buffered rows as a count, then per row four nullable strings and a nullable seq. */
   static byte[] encode(List<Row> rows) throws IOException {
     ByteArrayOutputStream bytes = new ByteArrayOutputStream();
-    try (DataOutputStream out = new DataOutputStream(bytes)) {
-      out.writeInt(rows.size());
-      for (Row r : rows) {
-        for (int i = 0; i < SEQ; i++) {
-          byte[] s = r.isNullAt(i) ? null : r.getString(i).getBytes(StandardCharsets.UTF_8);
-          out.writeInt(s == null ? -1 : s.length);
-          if (s != null) {
-            out.write(s);
-          }
-        }
-        out.writeBoolean(r.isNullAt(SEQ));
-        if (!r.isNullAt(SEQ)) {
-          out.writeLong(r.getLong(SEQ));
+    DataOutputStream out = new DataOutputStream(bytes);
+    out.writeInt(rows.size());
+    for (Row r : rows) {
+      for (int i = 0; i < SEQ; i++) {
+        byte[] s = r.isNullAt(i) ? null : r.getString(i).getBytes(StandardCharsets.UTF_8);
+        out.writeInt(s == null ? -1 : s.length);
+        if (s != null) {
+          out.write(s);
         }
       }
+      out.writeBoolean(r.isNullAt(SEQ));
+      if (!r.isNullAt(SEQ)) {
+        out.writeLong(r.getLong(SEQ));
+      }
     }
+    out.flush();
     return bytes.toByteArray();
   }
 

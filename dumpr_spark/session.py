@@ -16,10 +16,10 @@ task calls `importlib.invalidate_caches()`, and on CPython 3.11 each
 zipimporter then re-reads its archive's whole central directory: 16-18
 importers over pyspark.zip (1,328 entries), the spark-core jar (5,359) and
 the py4j zip. Measured on a 4-vCPU host, that call took 115-274 ms CPU
-per task (0.06-0.14 ms stat-checked), where the pandas tx-filter fold,
-the fallback when the engine jar (below) cannot be built, takes 2-3 ms
-per group. The daemon re-reads an archive only when its stat
-stamp (mtime_ns, size, inode) changed, so a rewritten or newly added
+per task (0.06-0.14 ms stat-checked), against 2-3 ms per group for the
+fold of a pandas stateful operator (measured on the tx filter's). The
+daemon re-reads an archive only when its stat stamp (mtime_ns, size,
+inode) changed, so a rewritten or newly added
 `addPyFile` archive still imports its new contents. The daemon has to be
 importable from wherever the JVM runs Python, so the package's parent
 directory goes on the workers' path through `spark.executorEnv.PYTHONPATH`,
@@ -45,18 +45,19 @@ working set as small as the mix costs only what it uses.
 Engine jar: `engine_jar` compiles the Java sources in `dumpr_spark/jvm`
 into one jar on the driver classpath, which in `local[N]` is the executors'
 too: the `file:` filesystem classes (below) and `TxFilter`, the streaming
-transaction filter as a `flatMapGroupsWithState` fold, which
-`streaming.state.streaming_tx_filter` uses whenever the class loads, so a
-CDC micro-batch's rows stay in the JVM instead of crossing to a Python
-worker and back through Arrow. The jar is compiled once per version of its
-sources and of the jars they compile against (Hadoop's client API and Spark
-SQL) into `$XDG_CACHE_HOME/dumpr_spark` (default `~/.cache`; the first
-build takes a few seconds). On a non-local master the executors do not see
-the driver classpath: pass the jar (`engine_jar()`) with `--jars` or
-`spark.jars`, or the filter's tasks fail to load `TxFilter`. Without a
-`javac` (`$JAVA_HOME/bin`, then `PATH`) the session logs one WARNING and
-keeps Hadoop's classes and the pandas tx filter: results are the same, only
-the forks and the Python round trip return.
+transaction filter as a `flatMapGroupsWithState` fold
+(`streaming.state.streaming_tx_filter`), so a CDC micro-batch's rows stay
+in the JVM instead of crossing to a Python worker and back through Arrow.
+The compiler is the Janino that Spark ships in `$SPARK_HOME/jars`, run by
+the `java` that launches the session (`$JAVA_HOME/bin/java`, else `java`
+on `PATH`, spark-class's rule), so the jar builds wherever a session can
+start, with or without a JDK. It is compiled once per version of its
+sources and of the jar names in `$SPARK_HOME/jars`, its classpath, into
+`$XDG_CACHE_HOME/dumpr_spark` (default `~/.cache`; the first build takes
+about a second). A build that fails raises with the compiler's message.
+On a non-local master the executors do not see the driver classpath: pass
+the jar (`engine_jar()`) with `--jars` or `spark.jars`, or the filter's
+tasks fail to load `TxFilter`.
 
 Local files: without libhadoop (the session logs "Unable to load
 native-hadoop library"), Hadoop's `file:` filesystem forks a `chmod`
@@ -97,9 +98,7 @@ from __future__ import annotations
 
 import glob
 import hashlib
-import logging
 import os
-import shutil
 import subprocess
 import tempfile
 import zipfile
@@ -107,7 +106,6 @@ import zipfile
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-_LOG = logging.getLogger(__name__)
 # the directory `dumpr_spark` is imported from, for the worker path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # sources of the engine jar, and the Hadoop keys its `file:` classes serve
@@ -122,25 +120,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _javac() -> str | None:
-    java_home = os.environ.get("JAVA_HOME")
-    if java_home and os.access(os.path.join(java_home, "bin", "javac"), os.X_OK):
-        return os.path.join(java_home, "bin", "javac")
-    return shutil.which("javac")
-
-
-def engine_jar() -> str | None:
+def engine_jar() -> str:
     """The jar of the engine's JVM classes (`dumpr_spark/jvm`: the `file:`
-    filesystem classes and the streaming tx filter), compiled once per
-    version of their sources and of the jars they compile against, Hadoop's
-    client API and Spark SQL, into the user cache dir (not TMPDIR, which a
-    caller may delete). None, after one WARNING, when it cannot be built."""
-    jars = os.path.join(_find_spark_home(), "jars")
+    filesystem classes and the streaming tx filter), compiled by Spark's
+    Janino once per version of their sources and of the jar names in
+    `$SPARK_HOME/jars`, their classpath, into the user cache dir (not
+    TMPDIR, which a caller may delete). Raises RuntimeError, with the
+    compiler's message, when the sources do not compile."""
+    classpath = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "*.jar")))
     sources = sorted(glob.glob(os.path.join(_JVM_SRC, "*.java")))
     digest = hashlib.sha256()
-    for api in sorted(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))
-                      + glob.glob(os.path.join(jars, "spark-sql*.jar"))):
-        digest.update(os.path.basename(api).encode())
+    for lib in classpath:
+        digest.update(os.path.basename(lib).encode() + b"\0")
     for src in sources:
         with open(src, "rb") as f:
             digest.update(os.path.basename(src).encode() + b"\0" + f.read())
@@ -149,36 +140,36 @@ def engine_jar() -> str | None:
     jar = os.path.join(cache, f"engine-{digest.hexdigest()[:16]}.jar")
     if os.path.exists(jar):
         return jar
-    try:
-        javac = _javac()
-        if javac is None:
-            raise OSError("no javac in $JAVA_HOME/bin or on PATH")
-        os.makedirs(cache, exist_ok=True)
-        with tempfile.TemporaryDirectory(dir=cache) as tmp:
-            classes = os.path.join(tmp, "classes")
-            subprocess.run([javac, "--release", "17", "-cp", os.path.join(jars, "*"),
-                            "-d", classes, *sources],
-                           check=True, capture_output=True, text=True)
-            part = os.path.join(tmp, "engine.jar")
-            with zipfile.ZipFile(part, "w") as z:
-                for root, _, files in os.walk(classes):
-                    for name in files:
-                        path = os.path.join(root, name)
-                        z.write(path, os.path.relpath(path, classes))
-            os.replace(part, jar)
-    except (OSError, subprocess.CalledProcessError) as e:
-        _LOG.warning("cannot build the engine's JVM classes, keeping Hadoop's "
-                     "local filesystem (a chmod or readlink fork per local file) "
-                     "and the pandas tx filter: %s", getattr(e, "stderr", None) or e)
-        return None
+    java_home = os.environ.get("JAVA_HOME")  # spark-class's rule for its `java`
+    java = os.path.join(java_home, "bin", "java") if java_home else "java"
+    janino = [p for p in classpath
+              if os.path.basename(p).startswith(("janino-", "commons-compiler-"))]
+    os.makedirs(cache, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        classes = os.path.join(tmp, "classes")
+        # Janino's one command-line entry point; its -classpath is a plain
+        # path list, with no `*` wildcard
+        built = subprocess.run(
+            [java, "-cp", os.pathsep.join(janino),
+             "org.codehaus.commons.compiler.samples.CompilerDemo",
+             "-d", classes, "-classpath", os.pathsep.join(classpath), *sources],
+            capture_output=True, text=True)
+        if built.returncode:
+            raise RuntimeError(f"cannot compile the engine's JVM classes in {_JVM_SRC}: "
+                               + built.stderr.strip())
+        part = os.path.join(tmp, "engine.jar")
+        with zipfile.ZipFile(part, "w") as z:
+            for root, _, files in os.walk(classes):
+                for name in files:
+                    path = os.path.join(root, name)
+                    z.write(path, os.path.relpath(path, classes))
+        os.replace(part, jar)
     return jar
 
 
-def _prepend(conf: dict[str, str], key: str, entry: str | None) -> None:
+def _prepend(conf: dict[str, str], key: str, entry: str) -> None:
     """Put `entry` first on the path-list conf `key`, keeping a caller's value."""
-    value = os.pathsep.join(p for p in (entry, conf.get(key)) if p)
-    if value:
-        conf[key] = value
+    conf[key] = os.pathsep.join(p for p in (entry, conf.get(key)) if p)
 
 
 def session_conf(
@@ -189,7 +180,6 @@ def session_conf(
     """Every conf `get_spark` sets besides the master and app name:
     `extra_conf` wins over the engine's values, and the two path lists are
     merged with it."""
-    jar = engine_jar()
     conf = {
         # semantics
         "spark.sql.session.timeZone": "UTC",
@@ -212,12 +202,12 @@ def session_conf(
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         "spark.python.daemon.module": "dumpr_spark.worker_daemon",
-        **(_LOCAL_FS if jar else {}),
+        **_LOCAL_FS,
         **(extra_conf or {}),
     }
     _prepend(conf, "spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     # the master is local[N], so the driver's classpath is the executors' too
-    _prepend(conf, "spark.driver.extraClassPath", jar)
+    _prepend(conf, "spark.driver.extraClassPath", engine_jar())
     return conf
 
 

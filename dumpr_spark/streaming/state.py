@@ -10,23 +10,20 @@ micro-batches survives in the state store (the reference's channel
 transducer gets this for free from ordering; here the state store +
 checkpoint make it restart-safe).
 
-The filter runs in one of two folds with the same state machine. When the
-engine jar (`session.engine_jar`) is on the session's classpath it is
-`dumpr_spark.jvm.TxFilter`, a `flatMapGroupsWithState` plan node with
-state `(in_tx boolean, buffer binary)`: a micro-batch runs scan, shuffle
-by source, fold and sink in the JVM and starts no Python worker. (The
-buffer is bytes, not an `array<struct>`, because Spark re-resolves the
-state deserializer every micro-batch and an array in it compiles a new
-projection class each time.) Otherwise (no JDK to build the jar, or a cluster
-session started without it) it is `_fold_tx_rows` under
-`applyInPandasWithState`, with the buffer as a JSON string, which ships
-each batch's rows to a Python worker and back through Arrow; that fold is
-also the reference the tests hold the JVM one to. Which fold runs is a
-property of the session, not an option. A checkpoint written by one fold
-does not restart under the other: Spark refuses the query with
-STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA (the operator
-names differ) and never re-folds the stream silently, so a stream moved to
-a session without the jar, or back, starts from a fresh checkpoint.
+The filter is `dumpr_spark.jvm.TxFilter`, from the engine jar
+(`session.engine_jar`), a `flatMapGroupsWithState` plan node with state
+`(in_tx boolean, buffer binary)`: a micro-batch runs scan, shuffle by
+source, fold and sink in the JVM and starts no Python worker. (The buffer
+is bytes, not an `array<struct>`, because Spark re-resolves the state
+deserializer every micro-batch and an array in it compiles a new
+projection class each time.) `_fold_tx_rows` is the same state machine in
+Python, the reference the tests hold `TxFilter` to. Migration: in a
+session without a JDK, earlier builds ran that fold as a pandas state
+operator (`FlatMapGroupsInPandasWithState`). Spark refuses to restart such
+a checkpoint under `TxFilter`
+(STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA: the operator
+names differ), so a stream checkpointed by the pandas fold needs a fresh
+checkpoint.
 
 Scale note: the filter is keyed by `source` (connection/shard id). One key is
 inherently serial — exactly as serial as the binlog itself; many sources
@@ -41,7 +38,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from py4j.java_gateway import JavaClass
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
@@ -57,33 +54,6 @@ TX_OUT_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("in_tx", BooleanType(), True),
-        StructField("buffer", StringType(), True),  # JSON list of row dicts
-    ]
-)
-
-
-def _tx_filter_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    in_tx, buffer = (state.get if state.exists else (False, "[]"))
-    buf: list[dict] = json.loads(buffer)
-    out, in_tx, buf = _fold_tx_rows(pd.concat(list(pdfs)), in_tx, buf)
-    state.update((in_tx, json.dumps(buf)))
-    yield pd.DataFrame(out, columns=[f.name for f in TX_OUT_SCHEMA.fields])
-
-
-def _tx_filter_class(spark: SparkSession):
-    """The engine jar's `TxFilter` class in `spark`'s JVM, or None when the
-    class does not load there (no jar on the classpath, or no JVM)."""
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        return None
-    cls = jvm.dumpr_spark.jvm.TxFilter
-    return cls if isinstance(cls, JavaClass) else None
-
 
 def streaming_tx_filter(events: DataFrame) -> DataFrame:
     """events: streaming frame with (source, event_type, tbl, payload, seq).
@@ -91,24 +61,17 @@ def streaming_tx_filter(events: DataFrame) -> DataFrame:
     transaction (non-transactional events pass straight through, matching
     the reference transducer and the batch form); markers stripped.
 
-    The fold is the JVM's `TxFilter` when that class loads in the session's
-    JVM, else `_fold_tx_rows` under `applyInPandasWithState`; both are
-    declared in append mode, and neither restarts from the other's
-    checkpoint (see the module docstring)."""
+    The fold is the engine jar's `TxFilter`, declared in append mode. A
+    session whose JVM cannot load it (one not built by `get_spark`) raises:
+    put `session.engine_jar()` on its classpath, with `--jars` on a
+    cluster."""
     spark = events.sparkSession
-    jvm_fold = _tx_filter_class(spark)
-    if jvm_fold is not None:
-        return DataFrame(jvm_fold.apply(events._jdf), spark)
-    return (
-        events.groupBy("source")
-        .applyInPandasWithState(
-            _tx_filter_fn,
-            outputStructType=TX_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    fold = spark._jvm.dumpr_spark.jvm.TxFilter
+    if not isinstance(fold, JavaClass):
+        raise RuntimeError(
+            "dumpr_spark.jvm.TxFilter does not load in this session's JVM: start the "
+            "session with get_spark, or pass dumpr_spark.session.engine_jar() with --jars")
+    return DataFrame(fold.apply(events._jdf), spark)
 
 
 def _fold_tx_rows(rows: pd.DataFrame, in_tx: bool, buf: list[dict]):

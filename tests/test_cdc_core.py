@@ -222,9 +222,8 @@ def test_tx_filter_commit_rollback(spark):
 def _jvm_fold_rows(df):
     """The rows the JVM tx fold (`dumpr_spark/jvm/TxFilter.java`) releases
     from the batch frame `df`, as tuples in seq order."""
-    from dumpr_spark.streaming.state import _tx_filter_class, streaming_tx_filter
+    from dumpr_spark.streaming.state import streaming_tx_filter
 
-    assert _tx_filter_class(df.sparkSession) is not None
     return sorted((tuple(r) for r in streaming_tx_filter(df).collect()), key=lambda t: t[-1])
 
 
@@ -232,8 +231,8 @@ def test_tx_filter_passes_out_of_tx_rows_like_streaming(spark):
     """Rows BETWEEN transactions (after a commit/rollback, before the next
     begin) pass straight through — the reference releases out-of-tx input
     immediately (stream.clj:52, `(rf result input)`; non-transactional
-    binlog events like DDL must survive). Batch and both streaming folds,
-    pandas and JVM, agree."""
+    binlog events like DDL must survive). The batch form, the reference
+    fold (`_fold_tx_rows`) and the JVM one agree."""
     import pandas as pd
 
     from dumpr_spark.streaming.state import _fold_tx_rows
@@ -256,7 +255,7 @@ def test_tx_filter_passes_out_of_tx_rows_like_streaming(spark):
 
 def test_tx_filter_batch_equals_streaming_fold_property(spark):
     """Property (r2 VERDICT #8): on RANDOM marker/row sequences the batch
-    window form (`filter_committed_txs`), the pandas streaming fold
+    window form (`filter_committed_txs`), the reference fold
     (`_fold_tx_rows`) and the JVM one (`TxFilter`, run over the same batch
     frame) release exactly the same row set — commits release,
     rollbacks discard, rows outside any tx pass straight through, a nested
@@ -295,7 +294,7 @@ def test_tx_filter_batch_equals_streaming_fold_property(spark):
         released, in_tx, buf = _fold_tx_rows(pd.DataFrame(rows, columns=cols), False, [])
         stream_seqs = sorted(r["seq"] for r in released)
         assert batch_seqs == stream_seqs, (types, batch_seqs, stream_seqs)
-        # the JVM fold releases the pandas fold's rows, field for field
+        # the JVM fold releases the reference fold's rows, field for field
         jvm_rows = _jvm_fold_rows(df)
         assert jvm_rows == sorted((tuple(r.values()) for r in released),
                                   key=lambda t: t[-1]), (types, jvm_rows)

@@ -4,6 +4,7 @@ classes and the streaming tx filter."""
 
 from __future__ import annotations
 
+import glob
 import logging
 import os
 import shutil
@@ -61,6 +62,9 @@ def test_column_calls_capture_no_call_site(spark, monkeypatch):
 
 ENGINE_FS = "dumpr_spark.jvm.NoForkLocalFileSystem"
 ENGINE_FC = "dumpr_spark.jvm.NoForkLocalFs"
+ENGINE_CLASSES = {f"dumpr_spark/jvm/{name}.class" for name in (
+    "TxFilter", "TxFilter$BySeq", "NoForkLocalFileSystem", "NoForkRawLocalFileSystem",
+    "NoForkLocalFs", "NoForkLocalFs$Raw")}
 
 
 @pytest.fixture(scope="module")
@@ -182,22 +186,31 @@ def jar_cache(tmp_path_factory):
     with pytest.MonkeyPatch.context() as mp:
         mp.setenv("XDG_CACHE_HOME", cache)
         jar = session.engine_jar()
-    assert jar is not None and jar.startswith(cache) and os.path.isfile(jar)
+    assert jar.startswith(cache) and os.path.isfile(jar)
     return cache, jar
 
 
-def _no_javac(monkeypatch, tmp_path):
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    monkeypatch.setenv("PATH", str(empty))
-    monkeypatch.setenv("JAVA_HOME", str(empty))
+def _jar_classes(jar):
+    with zipfile.ZipFile(jar) as z:
+        return set(z.namelist())
 
 
 def test_engine_jar_holds_the_tx_filter(jar_cache):
+    assert _jar_classes(jar_cache[1]) == ENGINE_CLASSES
     with zipfile.ZipFile(jar_cache[1]) as z:
-        names = set(z.namelist())
-    assert "dumpr_spark/jvm/TxFilter.class" in names
-    assert "dumpr_spark/jvm/NoForkLocalFileSystem.class" in names
+        head = z.read("dumpr_spark/jvm/TxFilter.class")[:8]
+    assert head[:4] == b"\xca\xfe\xba\xbe" and head[6:] == b"\x00\x32"  # class version 50: Janino
+
+
+def _renamed_spark_home(tmp_path, old, new):
+    """A Spark home whose jars are the real ones, with `old` in a name read as `new`."""
+    real = os.path.join(session._find_spark_home(), "jars")
+    jars = tmp_path / f"spark_{new}" / "jars"
+    jars.mkdir(parents=True)
+    for name in os.listdir(real):
+        os.symlink(os.path.join(real, name), jars / name.replace(old, new))
+    assert any(n.startswith(new) for n in os.listdir(jars))
+    return str(jars.parent)
 
 
 def test_engine_jar_is_reused_and_keyed_by_its_sources(jar_cache, tmp_path, monkeypatch,
@@ -213,21 +226,25 @@ def test_engine_jar_is_reused_and_keyed_by_its_sources(jar_cache, tmp_path, monk
         edited = session.engine_jar()
     assert edited != jar and os.path.isfile(edited)
 
-    # TxFilter compiles against Spark SQL: another Spark SQL jar, another key
-    real = os.path.join(session._find_spark_home(), "jars")
-    jars = tmp_path / "spark" / "jars"
-    jars.mkdir(parents=True)
-    for name in os.listdir(real):
-        os.symlink(os.path.join(real, name), jars / name.replace("spark-sql_", "spark-sql_next-"))
-    assert any(n.startswith("spark-sql_next-") for n in os.listdir(jars))
-    with monkeypatch.context() as mp:
-        mp.setattr(session, "_find_spark_home", lambda: str(tmp_path / "spark"))
-        respun = session.engine_jar()
-    assert respun not in (jar, edited) and os.path.isfile(respun)
+    # every jar in $SPARK_HOME/jars is the compile classpath: TxFilter compiles
+    # against Spark SQL, and Janino's version shapes the bytecode
+    built = {jar, edited}
+    for old, new in (("spark-sql_", "spark-sql_next-"), ("janino-", "janino-next-")):
+        home = _renamed_spark_home(tmp_path, old, new)
+        with monkeypatch.context() as mp:
+            mp.setattr(session, "_find_spark_home", lambda: home)
+            respun = session.engine_jar()
+        assert respun not in built and os.path.isfile(respun)
+        built.add(respun)
 
-    _no_javac(monkeypatch, tmp_path)
-    with caplog.at_level(logging.WARNING, logger="dumpr_spark.session"):
-        assert session.engine_jar() == jar  # the cached jar, no javac needed
+    # no java reachable: the cached jar comes back, and no compiler runs
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    monkeypatch.setenv("PATH", str(empty))
+    monkeypatch.setenv("JAVA_HOME", str(empty))
+    monkeypatch.setattr(session.subprocess, "run", None)
+    with caplog.at_level(logging.DEBUG, logger="dumpr_spark"):
+        assert session.engine_jar() == jar
     assert not caplog.records
 
 
@@ -244,12 +261,32 @@ def test_session_conf_merges_the_jar_with_the_callers_classpath(jar_cache, monke
     assert conf["spark.driver.extraClassPath"] == jar
 
 
-def test_without_javac_one_warning_and_stock_classes(tmp_path, monkeypatch, caplog):
+def test_engine_jar_builds_without_javac(tmp_path, monkeypatch):
+    """A JRE is enough: with only `java` in `$JAVA_HOME/bin` and on PATH,
+    Spark's Janino builds the whole jar, and the session runs its classes."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    cache = tmp_path / "cache"
+    bin_dir = tmp_path / "jre" / "bin"
+    bin_dir.mkdir(parents=True)
+    os.symlink(os.path.realpath(java), bin_dir / "java")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
+    monkeypatch.setenv("JAVA_HOME", str(bin_dir.parent))
+    monkeypatch.setenv("PATH", str(bin_dir))
+    conf = session.session_conf(2, 2)
+    jar = conf["spark.driver.extraClassPath"]
+    assert jar.startswith(str(cache)) and _jar_classes(jar) == ENGINE_CLASSES
+    assert conf["spark.hadoop.fs.file.impl"] == ENGINE_FS
+    assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] == ENGINE_FC
+
+
+def test_engine_jar_build_failure_raises_and_writes_no_jar(tmp_path, monkeypatch):
+    src = tmp_path / "jvm"
+    shutil.copytree(session._JVM_SRC, src)
+    with open(src / "TxFilter.java", "a") as f:
+        f.write("class Broken {\n")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
-    _no_javac(monkeypatch, tmp_path)
-    with caplog.at_level(logging.WARNING, logger="dumpr_spark.session"):
-        conf = session.session_conf(2, 2, {"spark.driver.extraClassPath": "lib/extra.jar"})
-    assert [r.levelno for r in caplog.records] == [logging.WARNING]
-    assert "spark.hadoop.fs.file.impl" not in conf
-    assert "spark.hadoop.fs.AbstractFileSystem.file.impl" not in conf
-    assert conf["spark.driver.extraClassPath"] == "lib/extra.jar"
+    monkeypatch.setattr(session, "_JVM_SRC", str(src))
+    with pytest.raises(RuntimeError, match=r"CompileException: File '.*TxFilter\.java'"):
+        session.engine_jar()
+    assert glob.glob(str(tmp_path / "cache" / "**" / "*.jar"), recursive=True) == []

@@ -17,8 +17,6 @@ from dumpr_spark.streaming import state as tx_state
 
 pytestmark = pytest.mark.streaming
 
-_JVM_TX_CLASS = tx_state._tx_filter_class  # before any test pins a fold
-
 
 def write_events(path, events, file_name="part-000.json"):
     os.makedirs(path, exist_ok=True)
@@ -413,15 +411,6 @@ TX_FEED_SCHEMA = "source string, event_type string, tbl string, payload string, 
 TX_FIELDS = ["source", "event_type", "tbl", "payload", "seq"]
 
 
-def _pin_tx_fold(spark, monkeypatch, path):
-    """Make `streaming_tx_filter` run one fold: "jvm", the engine jar's
-    `TxFilter` (which must load in the test session), or "pandas", the
-    `applyInPandasWithState` fold a session without the jar runs."""
-    fold = _JVM_TX_CLASS if path == "jvm" else (lambda spark: None)
-    monkeypatch.setattr(tx_state, "_tx_filter_class", fold)
-    assert (fold(spark) is not None) == (path == "jvm")
-
-
 def _run_tx_filter(spark, src, out, ckpt, schema=TX_FEED_SCHEMA, one_file_per_batch=False):
     """Run `streaming_tx_filter` over the JSON feed in `src` into parquet
     at `out` until the feed is drained; returns the stopped query."""
@@ -436,14 +425,12 @@ def _run_tx_filter(spark, src, out, ckpt, schema=TX_FEED_SCHEMA, one_file_per_ba
     return q
 
 
-@pytest.mark.parametrize("path", ["jvm", "pandas"])
-def test_streaming_tx_filter_across_batches(spark, tmp_path, monkeypatch, path):
+def test_streaming_tx_filter_across_batches(spark, tmp_path):
     """Stateful tx filter: a transaction spanning two micro-batches commits in
     the second — its rows must be released then (state store carries the
-    buffer across batches). Both folds."""
+    buffer across batches)."""
     from dumpr_spark.streaming.state import streaming_tx_filter
 
-    _pin_tx_fold(spark, monkeypatch, path)
     src = str(tmp_path / "tx_src")
     # batch 1 file: begin + one row (no commit yet)
     write_events(src, [
@@ -465,17 +452,17 @@ def test_streaming_tx_filter_across_batches(spark, tmp_path, monkeypatch, path):
         .json(src)
     )
     out = streaming_tx_filter(events)
+    assert out.schema == tx_state.TX_OUT_SCHEMA
     q = (
-        out.writeStream.format("memory").queryName(f"tx_test_{path}")
+        out.writeStream.format("memory").queryName("tx_test")
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination(120)
-    rows = spark.sql(f"SELECT payload, seq FROM tx_test_{path} ORDER BY seq").collect()
+    rows = spark.sql("SELECT payload, seq FROM tx_test ORDER BY seq").collect()
     assert [(r["payload"], r["seq"]) for r in rows] == [("r1", 2), ("r2", 3)]
 
 
-@pytest.mark.parametrize("path", ["jvm", "pandas"])
-def test_streaming_tx_filter_random_sources_match_fold(spark, tmp_path, monkeypatch, path):
+def test_streaming_tx_filter_random_sources_match_fold(spark, tmp_path):
     """20 sources, each a seeded random marker/row sequence split over 3
     feed files (one micro-batch each, lines shuffled within a file, `seq`
     read as int): the stream releases exactly the rows `_fold_tx_rows`
@@ -488,7 +475,6 @@ def test_streaming_tx_filter_random_sources_match_fold(spark, tmp_path, monkeypa
 
     from dumpr_spark.streaming.state import _fold_tx_rows
 
-    _pin_tx_fold(spark, monkeypatch, path)
     rng = random.Random(20261019)
     kinds = ["tx-begin", "tx-commit", "tx-rollback", "write", "update", "delete"]
     scripts = {"s0": [["write", "tx-begin", "write"],
@@ -534,9 +520,9 @@ def test_streaming_tx_filter_random_sources_match_fold(spark, tmp_path, monkeypa
 
 
 def test_streaming_tx_filter_plan_runs_no_python(spark, tmp_path):
-    """With the engine jar the filter is a `FlatMapGroupsWithState` node:
-    no pandas state operator and no other Python node in the micro-batch
-    plan, so a batch starts no Python worker."""
+    """The filter is a `FlatMapGroupsWithState` node: no pandas state
+    operator and no other Python node in the micro-batch plan, so a batch
+    starts no Python worker."""
     import re
 
     src = str(tmp_path / "src")
@@ -550,17 +536,24 @@ def test_streaming_tx_filter_plan_runs_no_python(spark, tmp_path):
     assert not re.search(r"Pandas|Python|Arrow", plan), plan
 
 
-@pytest.mark.parametrize("path", ["jvm", "pandas"])
-def test_tx_filter_checkpoint_restarts_only_under_its_fold(spark, tmp_path, monkeypatch,
-                                                          path):
-    """A transaction opens in file 1, the query stops, and a restart under
-    the same fold reads file 2, which commits it: the buffered rows come
-    back from the state store and are released exactly once. A restart of
-    that checkpoint under the other fold is refused by Spark's state
-    metadata check instead of re-folding the stream."""
-    from pyspark.errors import StreamingQueryException
+def test_streaming_tx_filter_names_the_engine_jar_when_its_class_is_missing():
+    """A JVM without the engine jar (its `TxFilter` is no class, only a py4j
+    package name) gets an error naming the jar, not a fallback fold."""
+    from types import SimpleNamespace
 
-    other = {"jvm": "pandas", "pandas": "jvm"}[path]
+    from py4j.java_gateway import JavaPackage
+
+    jvm = SimpleNamespace(dumpr_spark=SimpleNamespace(jvm=SimpleNamespace(
+        TxFilter=JavaPackage("dumpr_spark.jvm.TxFilter", None))))
+    events = SimpleNamespace(sparkSession=SimpleNamespace(_jvm=jvm))
+    with pytest.raises(RuntimeError, match=r"engine_jar\(\) with --jars"):
+        tx_state.streaming_tx_filter(events)
+
+
+def test_tx_filter_checkpoint_restart_releases_buffered_rows_once(spark, tmp_path):
+    """A transaction opens in file 1, the query stops, and a restart from
+    its checkpoint reads file 2, which commits it: the buffered rows come
+    back from the state store and are released exactly once."""
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     os.makedirs(src)
     write_json_batch(src, "f1.json", [
@@ -568,7 +561,6 @@ def test_tx_filter_checkpoint_restarts_only_under_its_fold(spark, tmp_path, monk
         ("s1", "tx-begin", None, None, 2), ("s1", "write", "w", "r1", 3),
         ("s2", "tx-begin", None, None, 4), ("s2", "write", "w", "gone", 5),
     ], TX_FIELDS, 1_000_000)
-    _pin_tx_fold(spark, monkeypatch, path)
     _run_tx_filter(spark, src, out, ckpt)
     write_json_batch(src, "f2.json", [
         ("s1", "write", "w", "r2", 6), ("s1", "tx-commit", None, None, 7),
@@ -579,13 +571,6 @@ def test_tx_filter_checkpoint_restarts_only_under_its_fold(spark, tmp_path, monk
     rows = spark.read.parquet(out).orderBy("seq").collect()
     assert [(r["source"], r["payload"], r["seq"]) for r in rows] == [
         ("s1", "pre", 1), ("s1", "r1", 3), ("s1", "r2", 6), ("s2", "post", 9)]
-
-    write_json_batch(src, "f3.json", [("s1", "write", "w", "late", 10)], TX_FIELDS, 1_000_200)
-    _pin_tx_fold(spark, monkeypatch, other)
-    with pytest.raises(StreamingQueryException,
-                       match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"):
-        _run_tx_filter(spark, src, out, ckpt)
-    assert spark.read.parquet(out).count() == 4
 
 
 def test_tx_filter_merge_stream_warm_batches_compile_no_code(spark, tmp_path):
