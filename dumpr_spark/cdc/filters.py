@@ -57,8 +57,8 @@ def filter_committed_txs(events: DataFrame, seq_col: str = "seq", type_col: str 
       the streaming fold which keeps it buffered);
     - out-of-tx rows always survive; markers are stripped.
 
-    The streaming twins, the JVM fold (`dumpr_spark/jvm/TxFilter.java`)
-    and its pandas fallback (`streaming.state._fold_tx_rows`), must agree
+    The streaming fold (`dumpr_spark/jvm/TxFilter.java`) and the tests'
+    Python reference fold (`streaming.state._fold_tx_rows`) must agree
     with it on every event sequence — pinned by a hypothesis property test.
 
     Scale shape (r4: replaced the single-partition global windows): the two

@@ -472,7 +472,7 @@ def compact_small_files(
     # of a sink directory this is pointed at) into the rewrite BEFORE the
     # swap: otherwise the swap leaves state that was cut by a known policy
     # with no marker, and a later key_bucket="auto" restart is refused as
-    # if the layout were opaque (r14 advice item 2). Hardlink, same
+    # a legacy marker-less layout (r14 advice item 2). Hardlink, same
     # immutability argument as the sink's carry-forward; _SUCCESS is the
     # writer's own and stays fresh.
     # This is a GENERIC operator (not sink-only), so a filesystem that

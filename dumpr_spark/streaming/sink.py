@@ -9,7 +9,12 @@ the unit the sink rewrites: a ``tbl=X`` directory in the plain layout, or a
 
 - `MergeSink._touched` names the slices a frame's rows fall in, as
   ``(tbl,)`` or ``(tbl, _kb)`` tuples;
-- `MergeSink._read_slices` reads the persisted rows of those slices;
+- `MergeSink._read_slices` reads the persisted rows of those slices by
+  path: it lists the state root, and in the bucketed layout each touched
+  table's dir, maps every ``col=value`` entry to its unescaped value
+  (`_walk_slices`) and reads only the dirs of touched slices, so the
+  listing is O(tables + touched tables' buckets), never a partition
+  discovery of the whole state;
 - `MergeSink._clustered` hash-partitions rows by slice in the bucketed
   layout, so the fold below needs no exchange of its own and each touched
   slice is written by one task, as one file;
@@ -59,7 +64,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
-from urllib.parse import quote, unquote
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
@@ -94,7 +99,7 @@ class KeyBucket:
     """A pinned range-bucket policy: ``bucket = floor((id - origin) / width)``.
 
     TOTAL over ids (a non-integer id lands in bucket -1 instead of NULL —
-    the NULL bucket poisons the layout, see `_pair_filter`) and
+    the NULL bucket poisons the layout, see `_check_pairs`) and
     DETERMINISTIC in (width, origin) alone, so persisting these two ints
     (the repr is enough) reproduces the exact same layout across stream
     restarts. Derive one from observed state with `suggest_key_bucket`;
@@ -158,7 +163,7 @@ class HashKeyBucket:
     `KeyBucket` (via `suggest_key_bucket`) instead.
 
     TOTAL over ids (NULL id lands in bucket -1, never NULL — see
-    `_pair_filter`), DETERMINISTIC in n_buckets alone, and carries a
+    `_check_pairs`), DETERMINISTIC in n_buckets alone, and carries a
     persistable identity so `_validate_layout` catches a drifted
     n_buckets exactly like a drifted range policy. Size n_buckets from
     observed state with `suggest_hash_bucket_count` (r13) rather than
@@ -186,19 +191,18 @@ def policy_from_identity(identity: dict):
     in auto mode over an existing bucketed state must adopt EXACTLY the
     layout that cut it, and the stamped identity is the only durable
     record of that. Raises on an identity no shipped policy class claims
-    (a user policy object's custom kb_identity) — auto cannot guess a
-    bucket function it does not ship; pass the original object.
+    (a subclass's custom kb_identity) — auto cannot guess a bucket
+    function it does not ship; pass the original object.
 
-    CONTRACT (the identity SHAPE is a semantic claim): a custom policy
-    object whose kb_identity() (or duck-typed width/origin ints, see
-    `_kb_policy`) collides with a shipped class's shape is DECLARING its
-    bucket arithmetic identical to that class's — `_validate_layout`'s
-    drift check already treats equal identities as equal functions, and
-    this reconstructs under the same rule. A custom policy with
-    different arithmetic must emit a distinguishable identity (add any
-    extra key); one that mimics KeyBucket's {width, origin} while
-    bucketing differently corrupts state under an EXPLICIT restart just
-    as it would under auto."""
+    CONTRACT (the identity SHAPE is a semantic claim): a policy subclass
+    whose kb_identity() collides with a shipped class's shape is
+    DECLARING its bucket arithmetic identical to that class's —
+    `_validate_layout`'s drift check already treats equal identities as
+    equal functions, and this reconstructs under the same rule. A
+    subclass with different arithmetic must emit a distinguishable
+    identity (add any extra key); one that keeps KeyBucket's {width,
+    origin} while bucketing differently corrupts state under an EXPLICIT
+    restart just as it would under auto."""
     if isinstance(identity, dict) and set(identity) == {"width", "origin"}:
         return KeyBucket(width=int(identity["width"]),
                          origin=int(identity["origin"]))
@@ -290,9 +294,9 @@ def suggest_hash_bucket_count(state_df: DataFrame,
       (a + b - 1) // b, same as suggest_key_bucket's);
     - too MANY buckets (n_buckets driven up): per-batch METADATA terms
       are O(n_buckets), not O(touched) — the local-FS partition
-      discovery floor (~1.7 ms/dir measured; `_read_touched` removed it
-      from the merge read, but any plain ``spark.read`` over the state
-      and every `compact_files` pass still lists all dirs) and
+      discovery floor (~1.7 ms/dir measured; the merge read lists only
+      the touched tables' bucket dirs, but any plain ``spark.read`` over
+      the state and every `compact_files` pass still lists all dirs) and
       `_commit`'s carry-forward listdir + per-file hardlink walk (~1
       file/slice under the clustered write) — bounded by ``max_buckets``.
       The default cap of 4096 keeps the worst measured term under ~7 s
@@ -325,7 +329,7 @@ def suggest_hash_bucket_count(state_df: DataFrame,
     # empty/non-numeric raises): a zero/negative rows target breaks the
     # ceiling arithmetic, max_buckets=0 would mint a HashKeyBucket whose
     # pmod-by-zero yields NULL buckets (caught only much later by
-    # _pair_filter), and a share outside (0, 1] is either a
+    # _check_pairs), and a share outside (0, 1] is either a
     # ZeroDivisionError or a negative floor
     if target_rows_per_bucket < 1:
         raise ValueError(
@@ -493,9 +497,9 @@ def _check_tbls(tbls) -> None:
     """Reject NULL / empty-string table names loudly BEFORE any state
     mutates (every caller collects its touched list first). Either value
     round-trips through the Hive partition layout as
-    __HIVE_DEFAULT_PARTITION__ and reads back NULL, so the touched
-    filter (`tbl = ''` / `isin`) can never match the persisted rows —
-    the slice reads as empty and `_commit`'s carry-forward-vs-fresh-write
+    __HIVE_DEFAULT_PARTITION__ and reads back NULL, so the touched-slice
+    lookup (`_walk_slices`) can never find the persisted rows — the
+    slice reads as empty and `_commit`'s carry-forward-vs-fresh-write
     rename collision wedges the stream on every checkpoint replay. A
     table genuinely named the empty string is not representable in this
     layout; upstream should rename or drop such envelopes (R20's error
@@ -514,40 +518,23 @@ def _check_tbls(tbls) -> None:
 def _check_pairs(pairs) -> None:
     """Reject NULL buckets and NULL/empty table names in a (tbl, _kb) pair
     list loudly: every caller collects its pair list BEFORE writing, so
-    these raises fire before any state mutates. A key_bucket function that
-    can yield NULL (e.g. try_cast on a non-numeric id) would otherwise
-    poison the layout — the NULL bucket writes as
-    __HIVE_DEFAULT_PARTITION__, `isin([None])` never matches it on the
-    read side (open intervals never close / deleted keys resurrect), and
-    the carry-forward vs fresh-write collision wedges the stream on every
-    checkpoint replay; an empty tbl is the same hazard one level up (see
-    `_check_tbls`)."""
+    these raises fire before any state mutates. The shipped policies are
+    total, but a policy subclass whose bucket can be NULL (e.g. try_cast
+    on a non-numeric id) would otherwise poison the layout — the NULL
+    bucket writes as __HIVE_DEFAULT_PARTITION__, the read side's slice
+    lookup never finds it (open intervals never close / deleted keys
+    resurrect), and the carry-forward vs fresh-write collision wedges
+    the stream on every checkpoint replay; an empty tbl is the same
+    hazard one level up (see `_check_tbls`)."""
     _check_tbls(tbl for tbl, _kb in pairs)
     null_tbls = sorted({tbl for tbl, kb in pairs if kb is None})
     if null_tbls:
         raise ValueError(
             f"key_bucket produced a NULL bucket for table(s) {null_tbls}: "
-            "the bucket function must be TOTAL over ids — use a policy "
-            "object (KeyBucket / HashKeyBucket, both total by construction) "
-            "or wrap yours, e.g. coalesce(<bucket expr>, lit(-1))"
+            "the bucket function must be TOTAL over ids — KeyBucket and "
+            "HashKeyBucket are total by construction; a subclass's "
+            "__call__ must be too, e.g. coalesce(<bucket expr>, lit(-1))"
         )
-
-
-def _pair_filter(pairs):
-    """Partition-prunable predicate for a (tbl, _kb) pair list: one
-    `tbl = t AND _kb IN (...)` disjunct per table — simple comparisons on
-    partition columns, so the scan reads ONLY the touched bucket dirs
-    (a concat/isin over both would defeat pruning). Raises as
-    `_check_pairs` does."""
-    _check_pairs(pairs)
-    by_tbl: dict = {}
-    for tbl, kb in pairs:
-        by_tbl.setdefault(tbl, []).append(kb)
-    cond = None
-    for tbl, kbs in by_tbl.items():
-        c = (F.col("tbl") == tbl) & F.col("_kb").isin(kbs)
-        cond = c if cond is None else (cond | c)
-    return cond
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -562,23 +549,53 @@ def _link_tree(src: str, dst: str) -> None:
             os.link(os.path.join(root, f), os.path.join(troot, f))
 
 
-def _link_untouched(src: str, dst: str, cols: list, touched: set,
-                    inner: set, key: tuple = ()) -> None:
-    """Hardlink every slice dir under `src` whose key tuple is not in
-    `touched` into the same place under `dst`. `cols` are the slice
-    columns, one directory level each; a dir whose key is in `inner` (a
-    proper prefix of a touched slice, i.e. a touched table of the
-    bucketed layout) is descended into instead of linked whole."""
-    prefix = cols[len(key)] + "="
-    for d in os.listdir(src):
-        if not d.startswith(prefix):
-            continue
-        k = key + (unquote(d[len(prefix):]),)
-        if k in inner:
-            _link_untouched(os.path.join(src, d), os.path.join(dst, d),
-                            cols, touched, inner, k)
-        elif k not in touched:
-            _link_tree(os.path.join(src, d), os.path.join(dst, d))
+def _entries(path: str, col: str):
+    """Yield ``(value, name)`` for each ``col=value`` entry of directory
+    `path` (none where `path` does not exist), the value unescaped with
+    `unquote`: the inverse of Spark's partition-dir escaping for every
+    string value, so a ``tbl`` such as ``a b``, ``x/y`` or ``007`` comes
+    back as written."""
+    prefix = col + "="
+    if os.path.isdir(path):
+        for name in os.listdir(path):
+            if name.startswith(prefix):
+                yield unquote(name[len(prefix):]), name
+
+
+def _walk_slices(root: str, cols: list, touched) -> list[tuple]:
+    """Every slice dir under `root` as ``(path relative to root, key,
+    touched?)``. `cols` are the slice columns, one directory level each;
+    a dir's key is the tuple of its unescaped values, and `touched` holds
+    slice tuples, compared as strings. A table dir of the bucketed layout
+    that holds a touched slice is descended into; every other dir is one
+    slice. The listings are the state root plus each touched table's dir,
+    so the walk costs O(tables + the touched tables' buckets)."""
+    want = {tuple(str(v) for v in t) for t in touched}
+    inner = {k[:i] for k in want for i in range(1, len(k))}
+    out = []
+
+    def walk(rel: str, key: tuple) -> None:
+        for value, name in _entries(os.path.join(root, rel), cols[len(key)]):
+            k, r = key + (value,), os.path.join(rel, name)
+            if k in inner:
+                walk(r, k)
+            else:
+                out.append((r, k, k in want))
+
+    walk("", ())
+    return out
+
+
+def _table_layouts(state: str) -> dict:
+    """Each ``tbl=`` dir of `state` mapped to ``(holds a _kb= dir, holds
+    a visible entry outside one)``: the on-disk layout probe of
+    `_resolve_auto` and `_validate_layout`."""
+    out = {}
+    for _tbl, name in _entries(state, "tbl"):
+        es = os.listdir(os.path.join(state, name))
+        out[name] = (any(e.startswith("_kb=") for e in es),
+                     any(not e.startswith(("_kb=", ".", "_")) for e in es))
+    return out
 
 
 def _move_into(src: str, dst: str) -> None:
@@ -600,9 +617,10 @@ class MergeSink:
     parquet table instead of silently vanishing — the reference's in-band
     error channel (R20, row_format.clj:15, stream.clj:179-191) made durable.
 
-    With `key_bucket` (a callable mapping the id Column to an INT bucket
-    Column, e.g. ``lambda c: (c.cast("long") / 100000).cast("int")``),
-    state is SUBPARTITIONED ``tbl=X/_kb=N`` and each batch folds +
+    With `key_bucket` (a policy object mapping the id Column to an INT
+    bucket Column: a `KeyBucket` range policy, e.g.
+    ``KeyBucket(width=100_000)``, or a `HashKeyBucket`), state is
+    SUBPARTITIONED ``tbl=X/_kb=N`` and each batch folds +
     rewrites only the (tbl, bucket) slices it touches; untouched buckets
     carry forward by hardlink exactly like untouched tables. This is the
     at-volume remedy the r10 compaction-horizon measurement names: the
@@ -612,14 +630,15 @@ class MergeSink:
     (the normal CDC shape: autoincrement PKs cluster recent writes into
     the top range bucket; a HASH bucketing spreads every batch over all
     buckets and buys nothing — pick the policy to match the workload;
-    the mechanism is policy-agnostic — `suggest_key_bucket` derives a
-    range width from observed state so the caller doesn't guess). The
-    bucket function must be DETERMINISTIC in the id (it is recomputed for
-    every batch) and stable across the stream's lifetime —
-    changing it over an existing state directory splits keys across
-    buckets, and enabling/disabling it over existing state is refused up
-    front (`_validate_layout`); both migrate through the full-rewrite
-    `migrate_key_bucket` instead. Default None: the r9 tbl-partitioned layout,
+    `suggest_key_bucket` derives a range width from observed state so the
+    caller doesn't guess). A policy is DETERMINISTIC in the id (the
+    bucket is recomputed for every batch) and carries its identity
+    (`kb_identity`), which `_commit` stamps into the state: changing the
+    policy over an existing state directory splits keys across buckets
+    and is refused up front, as is enabling/disabling bucketing over
+    existing state (`_validate_layout`); both migrate through the
+    full-rewrite `migrate_key_bucket` instead. Any other `key_bucket`
+    value raises `TypeError`. Default None: the r9 tbl-partitioned layout,
     byte-identical behavior. HistorySink supports the same option (a
     key's whole history shares one bucket, so the validity-interval
     window never spans buckets).
@@ -634,8 +653,9 @@ class MergeSink:
     and refuses drift exactly as an explicit policy would; a RESTART over
     existing bucketed state adopts the stamped identity
     (`policy_from_identity`) so the layout is pinned for the stream's
-    lifetime. Auto over an existing PLAIN or opaque-callable-cut state is
-    refused loudly (`_resolve_auto`) — those remain migration events.
+    lifetime. Auto over an existing PLAIN state, or a bucketed one without
+    the marker, is refused loudly (`_resolve_auto`) — those remain
+    migration events.
 
     The pinned layout gets a GROWTH SIGNAL (r15): after each bucketed
     commit the sink reads the touched slices' parquet-footer row counts
@@ -662,6 +682,12 @@ class MergeSink:
                  compact_every_n_batches: int | None = None,
                  growth_warn_rows_per_bucket: int | None =
                  GROWTH_WARN_FACTOR * AUTO_TARGET_ROWS_PER_BUCKET):
+        if (not isinstance(key_bucket, (KeyBucket, HashKeyBucket, type(None)))
+                and key_bucket != "auto"):
+            raise TypeError(
+                "key_bucket must be None, \"auto\" or a KeyBucket / "
+                f"HashKeyBucket policy object, got {key_bucket!r}"
+            )
         self.spark = spark
         self.state_path = state_path
         self.errors_path = errors_path
@@ -690,10 +716,8 @@ class MergeSink:
         `migrate_key_bucket` to re-cut, stream stopped). Footer counts
         include tombstones/closed versions: the slice's REWRITE cost is
         what outgrows the policy, and every persisted row pays it.
-        Advisory only — a slice without a `_slice_dir` is skipped (the
-        merge itself handles those via the `_read_touched` fallback), and
-        so is any file whose footer cannot
-        be read (a zero-byte/torn leftover is not evidence of growth):
+        Advisory only — any file whose footer cannot be read is skipped
+        (a zero-byte/torn leftover is not evidence of growth):
         this runs AFTER `_commit` swapped the batch in, so a raise here
         would fail an already-committed batch and crash-loop the stream
         on replay (r15 advice item 1) — the signal must never throw."""
@@ -705,12 +729,12 @@ class MergeSink:
             return
 
         worst_pair, worst_rows = None, 0
-        for tbl, kb in pairs:
-            d = self._slice_dir(tbl, kb)
-            if d is None or not os.path.isdir(d):
+        for rel, pair, hit in _walk_slices(self.state_path, self._slice_cols(),
+                                           pairs):
+            if not hit:
                 continue
             rows = 0
-            for root, _dirs, files in os.walk(d):
+            for root, _dirs, files in os.walk(os.path.join(self.state_path, rel)):
                 for f in files:
                     if f.startswith(("_", ".")):
                         continue
@@ -720,7 +744,7 @@ class MergeSink:
                     except Exception:
                         continue
             if rows > worst_rows:
-                worst_pair, worst_rows = (tbl, kb), rows
+                worst_pair, worst_rows = pair, rows
         if worst_rows > self.growth_warn_rows_per_bucket:
             import warnings
 
@@ -925,10 +949,10 @@ class MergeSink:
         1. RESTART: an existing state's `_kb_policy.json` identity wins —
            the stream must keep the exact layout that cut the state
            (`policy_from_identity`; an existing bucketed state WITHOUT a
-           marker was cut by an opaque callable and is refused — auto
-           cannot reconstruct it, and adopting a guessed policy would
+           marker, a legacy state, is refused — auto cannot reconstruct
+           its bucket function, and adopting a guessed policy would
            merge with mismatched pruning). An existing PLAIN state is a
-           migration event, refused with the same message
+           migration event, refused with the same remedy
            `_validate_layout` gives an explicit policy.
         2. SEED: with no state yet, the first NON-EMPTY batch is the
            observation `derive_auto_policy` dispatches on; the derived
@@ -943,52 +967,29 @@ class MergeSink:
             with open(marker) as f:
                 self.key_bucket = policy_from_identity(json.load(f))
             return
-        if os.path.isdir(self.state_path):
-            for d in os.listdir(self.state_path):
-                if not d.startswith("tbl="):
-                    continue
-                if any(e.startswith("_kb=")
-                       for e in os.listdir(os.path.join(self.state_path, d))):
-                    raise ValueError(
-                        f"state at {self.state_path} is bucketed but carries "
-                        "no _kb_policy.json marker — either it was cut by an "
-                        "opaque key_bucket callable whose identity "
-                        "key_bucket=\"auto\" cannot reconstruct (pass the "
-                        "original callable), or a pre-r15 compact_files pass "
-                        "crashed between its swap and the marker re-stamp "
-                        "(recover by passing the known policy OBJECT once — "
-                        "the next commit re-stamps it — then restart in auto)"
-                    )
-                raise ValueError(
-                    f"state at {self.state_path} has a plain (tbl=) layout: "
-                    "key_bucket=\"auto\" derives a BUCKETED policy at seed "
-                    "time and cannot adopt plain state — migrate via "
-                    "migrate_key_bucket(spark, state_path, key_bucket) with "
-                    "the stream stopped, then restart the sink"
-                )
+        layouts = _table_layouts(self.state_path)
+        if any(kb for kb, _flat in layouts.values()):
+            raise ValueError(
+                f"state at {self.state_path} is bucketed but carries no "
+                "_kb_policy.json marker (a legacy state, or a pre-r15 "
+                "compact_files pass that crashed between its swap and the "
+                "marker re-stamp): key_bucket=\"auto\" cannot reconstruct "
+                "its bucket function — pass the policy object that cut it "
+                "once (the next commit re-stamps the marker), then restart "
+                "in auto"
+            )
+        if layouts:
+            raise ValueError(
+                f"state at {self.state_path} has a plain (tbl=) layout: "
+                "key_bucket=\"auto\" derives a BUCKETED policy at seed "
+                "time and cannot adopt plain state — migrate via "
+                "migrate_key_bucket(spark, state_path, key_bucket) with "
+                "the stream stopped, then restart the sink"
+            )
         if batch is not None:
             pol = derive_auto_policy(batch)
             if pol is not None:
                 self.key_bucket = pol
-
-    def _kb_policy(self) -> dict | None:
-        """The persistable identity of the bucket function, when it has
-        one: a `kb_identity()` method (KeyBucket, HashKeyBucket, or any
-        user policy object) or duck-typed (width, origin) ints. Arbitrary
-        callables return None — no drift detection is possible for them,
-        which is one more reason to prefer a policy object (and why
-        `_validate_layout` refuses an opaque callable over a state whose
-        marker proves it was cut by a policy object)."""
-        ident = getattr(self.key_bucket, "kb_identity", None)
-        if callable(ident):
-            p = ident()
-            if isinstance(p, dict):
-                return p
-        w = getattr(self.key_bucket, "width", None)
-        o = getattr(self.key_bucket, "origin", None)
-        if isinstance(w, int) and isinstance(o, int):
-            return {"width": w, "origin": o}
-        return None
 
     def _validate_layout(self) -> None:
         """Refuse to operate on a state directory whose on-disk layout does
@@ -996,8 +997,8 @@ class MergeSink:
         BEFORE any read or write.
 
         Enabling key_bucket over an existing plain (tbl-only) state would
-        otherwise silently destroy it: legacy data files read back with
-        _kb=NULL so `_pair_filter` never matches them (deleted keys
+        otherwise silently destroy it: legacy data files sit outside every
+        ``_kb=`` dir, so the slice read never finds them (deleted keys
         resurrect, updates are lost), and `_commit`'s carry-forward links
         only _kb= subdirs, dropping every legacy data file of any touched
         table in one batch. The reverse (a plain sink over a bucketed
@@ -1006,24 +1007,13 @@ class MergeSink:
         migration events, not merge events — `migrate_key_bucket` is the
         full-rewrite path. Metadata-only (one listdir per table), same
         cost class as `_commit`'s carry-forward walk."""
-        if not os.path.isdir(self.state_path):
-            return
-        offenders = []
-        for d in os.listdir(self.state_path):
-            if not d.startswith("tbl="):
-                continue
-            for e in os.listdir(os.path.join(self.state_path, d)):
-                if self.key_bucket is not None:
-                    # bucketed sink: only _kb= dirs (and hidden/marker
-                    # files) may live under a table dir
-                    if not e.startswith(("_kb=", ".", "_")):
-                        offenders.append(d)
-                        break
-                elif e.startswith("_kb="):
-                    offenders.append(d)
-                    break
+        bucketed = self.key_bucket is not None
+        # a bucketed sink allows only _kb= dirs (and hidden/marker files)
+        # under a table dir, a plain one no _kb= dir
+        offenders = [d for d, (kb, flat) in _table_layouts(self.state_path).items()
+                     if (flat if bucketed else kb)]
         if offenders:
-            want = "bucketed (tbl=/_kb=)" if self.key_bucket else "plain (tbl=)"
+            want = "bucketed (tbl=/_kb=)" if bucketed else "plain (tbl=)"
             raise ValueError(
                 f"state at {self.state_path} does not match this sink's "
                 f"{want} layout (mismatched table dirs: {sorted(offenders)}). "
@@ -1033,34 +1023,16 @@ class MergeSink:
                 "restart the sink."
             )
         # a CHANGED bucket function over a same-shape bucketed layout is
-        # the mode-flip hazard's quieter sibling (_pair_filter would prune
-        # to the WRONG bucket dirs — deletes resurrect, updates fork):
-        # when the function carries a persistable identity (KeyBucket),
-        # _commit stamps it into the state and this compares it. Hidden
-        # (underscore) file, invisible to the parquet reader.
-        if self.key_bucket is not None:
+        # the mode-flip hazard's quieter sibling (the slice read would find
+        # the WRONG bucket dirs — deletes resurrect, updates fork): _commit
+        # stamps the policy's identity into the state and this compares
+        # it. Hidden (underscore) file, invisible to the parquet reader.
+        if bucketed:
             marker = os.path.join(self.state_path, "_kb_policy.json")
             if os.path.exists(marker):
                 with open(marker) as f:
                     persisted = json.load(f)
-                pol = self._kb_policy()
-                if pol is None:
-                    # the marker PROVES this layout was cut by a specific
-                    # policy object; an opaque callable offers no identity
-                    # to compare, so a DIFFERENT bucket function would pass
-                    # silently and merge with mismatched pruning (deletes
-                    # resurrect, updates fork). A properly migrated
-                    # opaque-callable state has no marker, so legitimate
-                    # opaque users never hit this.
-                    raise ValueError(
-                        f"state at {self.state_path} was bucketed with "
-                        f"policy {persisted} but this sink carries an "
-                        "opaque key_bucket callable whose identity cannot "
-                        "be checked against it — pass the original policy "
-                        "object, or migrate via migrate_key_bucket(spark, "
-                        "state_path, new_key_bucket) with the stream "
-                        "stopped."
-                    )
+                pol = self.key_bucket.kb_identity()
                 if persisted != pol:
                     raise ValueError(
                         f"state at {self.state_path} was bucketed with "
@@ -1076,62 +1048,23 @@ class MergeSink:
         partition column in bucketed mode — internal, dropped by
         read_state)."""
         self._ready()
+        return self._read_dirs(
+            [self.state_path] if os.path.exists(self.state_path) else [])
+
+    def _read_dirs(self, dirs: list[str]) -> DataFrame:
+        """The persisted rows under `dirs`, each the state root or a slice
+        dir, with partition columns taken relative to the state root."""
         schema = self._ext_schema() if self.key_bucket else self._schema
-        if not os.path.exists(self.state_path):
+        if not dirs:
             return self.spark.createDataFrame([], schema)
         # explicit schema: an all-deleted state dir has no data files to infer
         # from, and partition-column inference must not re-type a numeric-
         # looking `tbl` value (schema pins it to STRING)
-        return self.spark.read.schema(schema).parquet(self.state_path)
-
-    def _read_touched(self, pairs) -> DataFrame:
-        """Bucketed-mode scan of ONLY the touched (tbl, bucket) slice
-        dirs, read as explicit paths under a basePath — O(touched)
-        driver-side listing instead of `spark.read.parquet(state)`'s
-        O(all bucket dirs) partition discovery (measured ~1.7 ms/dir:
-        at 2048 bucket dirs the discovery alone cost 3.5 s of a 5.6 s
-        micro-batch, state-independent — the r12 trickle profile). The
-        per-batch merge term is O(touched slices) only if the SCAN SETUP
-        is too.
-
-        Falls back to the full pruned read when a table name is not
-        identity under URL quoting (exotic names) so hand-built paths
-        can never diverge from Spark's own partition-dir escaping; new
-        buckets with no dir yet simply don't contribute rows. The paths
-        are exactly the touched slices, so no predicate goes on top; the
-        caller runs `_check_pairs` first for its loud NULL-bucket and
-        empty-table raises."""
-        self._ready()
-        schema = self._ext_schema()
-        if not os.path.exists(self.state_path):
-            return self.spark.createDataFrame([], schema)
-        dirs = []
-        for tbl, kb in pairs:
-            d = self._slice_dir(tbl, kb)
-            if d is None:
-                # the fallback's _pair_filter raises loudly on a NULL/empty
-                # name or a NULL bucket
-                return self._read_raw().where(_pair_filter(pairs))
-            if os.path.isdir(d):
-                dirs.append(d)
-        if not dirs:
-            return self.spark.createDataFrame([], schema)
         return (
             self.spark.read.schema(schema)
             .option("basePath", self.state_path)
             .parquet(*dirs)
         )
-
-    def _slice_dir(self, tbl, kb) -> str | None:
-        """The directory of bucketed slice ``(tbl, kb)``, or None where a
-        hand-built path could diverge from Spark's own: a NULL bucket, a
-        table name that is not identity under URL quoting, or a NULL/empty
-        one (``quote('') == ''`` would pass, but Spark wrote the value as
-        __HIVE_DEFAULT_PARTITION__, so a ``tbl=`` path would read the
-        slice as empty)."""
-        if not tbl or kb is None or quote(str(tbl), safe="") != str(tbl):
-            return None
-        return os.path.join(self.state_path, f"tbl={tbl}", f"_kb={kb}")
 
     def _touched(self, df: DataFrame) -> list[tuple]:
         """The slices `df`'s rows fall in: ``(tbl,)`` tuples in the plain
@@ -1149,16 +1082,23 @@ class MergeSink:
 
     def _read_slices(self, touched: list[tuple]) -> DataFrame:
         """The persisted rows (tombstones and `_kb` included) of the
-        `touched` slices. Raises on a NULL/empty table name or a NULL
-        bucket, before any state mutates."""
+        `touched` slices, read as explicit dirs under a basePath in both
+        layouts. The dirs come from `_walk_slices`, which lists the state
+        root and the touched tables' dirs only; `spark.read.parquet(state)`
+        would discover every slice dir of the state instead (measured ~1.7
+        ms/dir: at 2048 bucket dirs the discovery alone cost 3.5 s of a
+        5.6 s micro-batch, the r12 trickle profile). A touched slice with
+        no dir yet contributes no rows. Raises on a NULL/empty table name
+        or a NULL bucket, before any state mutates."""
         if self.key_bucket:
-            # touched-dirs scan: O(touched) listing, not O(all buckets) —
-            # see _read_touched
             _check_pairs(touched)
-            return self._read_touched(touched)
-        tbls = [tbl for (tbl,) in touched]
-        _check_tbls(tbls)
-        return self._read_raw().where(F.col("tbl").isin(tbls))
+        else:
+            _check_tbls(tbl for (tbl,) in touched)
+        self._ready()
+        return self._read_dirs(
+            [os.path.join(self.state_path, rel) for rel, _key, hit
+             in _walk_slices(self.state_path, self._slice_cols(), touched)
+             if hit])
 
     def _clustered(self, df: DataFrame) -> DataFrame:
         """`df` hash-partitioned by slice, ``(tbl, _kb)``, in the bucketed
@@ -1245,7 +1185,7 @@ class MergeSink:
 
         The bucket-policy identity is stamped into the next version's
         hidden ``_kb_policy.json`` before the swap, for `_validate_layout`'s
-        drift check (none for a plain sink or an opaque callable)."""
+        drift check (none for a plain sink)."""
         tmp = f"{self.state_path}.tmp-{batch_id}"
         nxt = f"{self.state_path}.next-{batch_id}"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1256,20 +1196,20 @@ class MergeSink:
         next_touched.write.mode("overwrite").partitionBy(*part_cols).parquet(tmp)
 
         os.makedirs(nxt)
-        if touched is not None and os.path.exists(self.state_path):
+        if touched is not None:
             # carry forward untouched slices without reading a byte
-            keys = {tuple(str(v) for v in t) for t in touched}
-            inner = {k[:i] for k in keys for i in range(1, len(k))}
-            _link_untouched(self.state_path, nxt, part_cols, keys, inner)
+            for rel, _key, hit in _walk_slices(self.state_path, part_cols, touched):
+                if not hit:
+                    _link_tree(os.path.join(self.state_path, rel),
+                               os.path.join(nxt, rel))
         for d in os.listdir(tmp):
             # a touched slice that folded to zero rows simply has no dir
             if d.startswith("tbl="):
                 _move_into(os.path.join(tmp, d), os.path.join(nxt, d))
         shutil.rmtree(tmp, ignore_errors=True)
-        pol = self._kb_policy()
-        if pol is not None:
+        if self.key_bucket:
             with open(os.path.join(nxt, "_kb_policy.json"), "w") as f:
-                json.dump(pol, f)
+                json.dump(self.key_bucket.kb_identity(), f)
 
         # atomic-enough swap for local FS; object stores use rename-free commit.
         # After _recover(), a .bak that coexists with state is stale — drop it.
@@ -1332,8 +1272,8 @@ class MergeSink:
 def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
                        schema=ENVELOPE_SCHEMA) -> None:
     """Full-rewrite migration between sink state layouts: plain -> bucketed
-    (`key_bucket` callable), bucketed -> plain (`key_bucket=None`), or a
-    CHANGED bucket function over an existing bucketed layout. Run it with
+    (`key_bucket` a policy object), bucketed -> plain (`key_bucket=None`),
+    or a CHANGED bucket policy over an existing bucketed layout. Run it with
     the stream stopped. The rewrite is one `_commit` of the whole state by
     a sink of the target layout, so the swap, its crash recovery and the
     policy marker are the merge path's own.
@@ -1344,7 +1284,7 @@ def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
     Cost is one full read + rewrite of the table — O(state), paid once,
     which is the honest price of a layout change; pass the HistorySink's
     HISTORY_SCHEMA as `schema` when migrating an SCD2 state directory."""
-    if isinstance(key_bucket, str):
+    if key_bucket == "auto":
         raise ValueError(
             "key_bucket=\"auto\" is a SEED-TIME convenience (derive from the "
             "first observed batch); a migration re-cuts existing state and "
@@ -1352,9 +1292,9 @@ def migrate_key_bucket(spark: SparkSession, state_path: str, key_bucket,
             "(suggest_key_bucket / suggest_hash_bucket_count / "
             "derive_auto_policy) and pass the returned object"
         )
+    sink = MergeSink(spark, state_path, key_bucket=key_bucket)
     if not os.path.exists(state_path):
         raise ValueError(f"no state directory at {state_path} to migrate")
-    sink = MergeSink(spark, state_path, key_bucket=key_bucket)
     sink._schema = schema
     # recovery only (no layout validation — a migration EXPECTS the mismatch)
     sink._recover()
@@ -1406,9 +1346,9 @@ def start_merge_stream(
 
     output_mode: foreachBatch itself is mode-agnostic (the sink merges
     whatever the batch carries), but upstream stateful operators constrain
-    the legal mode — the streaming tx filter, `flatMapGroupsWithState` in
-    the JVM or its `applyInPandasWithState` fallback, is declared in append
-    mode and requires output_mode="append".
+    the legal mode — the streaming tx filter, a `flatMapGroupsWithState`
+    fold in the JVM, is declared in append mode and requires
+    output_mode="append".
     key_bucket: optional (tbl, bucket)-sliced state layout — a policy
     object, or "auto" to derive one from the first non-empty batch via
     the certified sizing helpers; see MergeSink.

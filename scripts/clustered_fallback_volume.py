@@ -68,7 +68,7 @@ def main():
         out["auto_seed_s"] = round(time.monotonic() - t0, 1)
     hits = [str(x.message) for x in w if "growth threshold" in str(x.message)]
     out["seed_warn_fired"] = len(hits) == 1
-    out["seed_policy"] = sink._kb_policy()
+    out["seed_policy"] = sink.key_bucket.kb_identity()
 
     t0 = time.monotonic()
     pol = sink.suggest_migration()

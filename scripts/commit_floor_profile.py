@@ -117,7 +117,7 @@ def main():
     finally:
         os.link, os.listdir, os.scandir = real_link, real_listdir, real_scandir
 
-    pol = sink._kb_policy()
+    pol = sink.key_bucket.kb_identity()
     print(json.dumps({
         "metric": "commit_floor_profile",
         "state_rows": n_rows, "keys_per_batch": per_batch,

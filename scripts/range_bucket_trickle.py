@@ -94,9 +94,8 @@ def main():
             sink(trickle(b), b)
             per.append(round((time.monotonic() - t1) * 1000))
         live = sink.read_state()
-        pol = sink._kb_policy()
         results[name] = {
-            **({"derived_policy": pol} if kb else {}),
+            **({"derived_policy": sink.key_bucket.kb_identity()} if kb else {}),
             "seed_s": round(seed_s, 1),
             "per_batch_ms": per,
             "mean_ms": round(sum(per) / len(per)),

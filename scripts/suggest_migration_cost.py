@@ -65,7 +65,7 @@ def main():
     sink(env(spark.range(n).select(F.col("id").alias("k")), 0), 0)
     out = {"metric": "suggest_migration_cost", "state_rows": n,
            "auto_seed_s": round(time.monotonic() - t0, 1),
-           "policy": sink._kb_policy()}
+           "policy": sink.key_bucket.kb_identity()}
 
     # KEEP path (generous target: worst slice <= 4x target) — the pure
     # per-slice census, twice for a warm repeat

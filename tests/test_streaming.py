@@ -36,6 +36,21 @@ def write_json_batch(src, name, rows, names, mtime):
     return fp
 
 
+def _nullable_key_bucket(width: int):
+    """`KeyBucket(width)` without its ``coalesce``: the bucket of a
+    non-numeric id is NULL, so a test reaches the sink's NULL-bucket
+    refusal through a policy object."""
+    from dumpr_spark.streaming.sink import KeyBucket
+
+    class NullableKeyBucket(KeyBucket):
+        def __call__(self, c):
+            d = c.try_cast("long") - F.lit(self.origin).cast("long")
+            w = F.lit(self.width).cast("long")
+            return F.call_function("div", d - F.pmod(d, w), w).cast("int")
+
+    return NullableKeyBucket(width=width)
+
+
 def test_stream_ingest_to_merge_sink_and_resume(spark, tmp_path):
     """End-to-end live path: JSON event feed -> envelope -> foreachBatch merge
     -> state table; then new events arrive and the SAME checkpoint resumes
@@ -1065,14 +1080,11 @@ def test_merge_sink_key_bucketed_equals_plain(spark, tmp_path):
     multi-batch fold with updates, deletes, out-of-order replay, and
     tombstone compaction — the layout is an implementation detail."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import MergeSink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
     plain = MergeSink(spark, str(tmp_path / "p_state"))
-    bucketed = MergeSink(
-        spark, str(tmp_path / "b_state"),
-        key_bucket=lambda c: (c.cast("long") / F.lit(3)).cast("int"),
-    )
+    bucketed = MergeSink(spark, str(tmp_path / "b_state"),
+                         key_bucket=KeyBucket(width=3))
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -1114,14 +1126,10 @@ def test_merge_sink_key_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
     O(table). (With range bucketing on an autoincrement key this is the
     normal CDC shape: recent writes land in the top bucket.)"""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import MergeSink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
     state = str(tmp_path / "kb_state")
-    sink = MergeSink(
-        spark, state,
-        key_bucket=lambda c: (c.cast("long") / F.lit(100)).cast("int"),
-    )
+    sink = MergeSink(spark, state, key_bucket=KeyBucket(width=100))
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -1238,13 +1246,11 @@ def test_history_sink_key_bucketed_equals_plain(spark, tmp_path):
     buckets."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
     from dumpr_spark.streaming.history import HistorySink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket
 
     plain = HistorySink(spark, str(tmp_path / "hp_state"))
-    bucketed = HistorySink(
-        spark, str(tmp_path / "hb_state"),
-        key_bucket=lambda c: (c.cast("long") / F.lit(3)).cast("int"),
-    )
+    bucketed = HistorySink(spark, str(tmp_path / "hb_state"),
+                           key_bucket=KeyBucket(width=3))
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -1290,15 +1296,12 @@ def test_merge_sink_key_bucketed_randomized_sequence(spark, tmp_path):
     import random
 
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import MergeSink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
     rng = random.Random(1031)
     plain = MergeSink(spark, str(tmp_path / "rp_state"))
-    bucketed = MergeSink(
-        spark, str(tmp_path / "rb_state"),
-        key_bucket=lambda c: (c.try_cast("long") / F.lit(4)).cast("int"),
-    )
+    bucketed = MergeSink(spark, str(tmp_path / "rb_state"),
+                         key_bucket=KeyBucket(width=4))
     seqs = list(range(1, 400))
     rng.shuffle(seqs)  # out-of-order delivery baked in
     emitted = []
@@ -1348,14 +1351,10 @@ def test_merge_sink_key_bucketed_survives_file_compaction(spark, tmp_path):
     the pair-predicate pruning and hardlink carry-forward), state must
     read back identically, and a post-compaction batch must still fold."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import MergeSink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
     state = str(tmp_path / "kbc_state")
-    sink = MergeSink(
-        spark, state,
-        key_bucket=lambda c: (c.cast("long") / F.lit(50)).cast("int"),
-    )
+    sink = MergeSink(spark, state, key_bucket=KeyBucket(width=50))
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -1387,21 +1386,20 @@ def test_merge_sink_key_bucketed_survives_file_compaction(spark, tmp_path):
 
 
 def test_key_bucket_null_bucket_rejected_before_any_write(spark, tmp_path):
-    """A bucket function that yields NULL for some id (try_cast on a
-    non-numeric key — exactly what ANSI-mode error messages steer users
-    toward) must fail LOUDLY before any state mutates: a NULL bucket
-    would persist as __HIVE_DEFAULT_PARTITION__, the read-side
-    isin([None]) would never match it (open intervals never close,
-    deleted keys resurrect), and the carry-forward/fresh-write collision
-    wedges checkpoint replay. Both sinks; state dir must stay absent."""
+    """A policy subclass whose bucket is NULL for some id (try_cast on a
+    non-numeric key without KeyBucket's coalesce) must fail LOUDLY before
+    any state mutates: a NULL bucket would persist as
+    __HIVE_DEFAULT_PARTITION__, the read side's slice lookup would never
+    find it (open intervals never close, deleted keys resurrect), and the
+    carry-forward/fresh-write collision wedges checkpoint replay. Both
+    sinks; state dir must stay absent."""
     import pytest
 
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
     from dumpr_spark.streaming.history import HistorySink
-    from dumpr_spark.streaming.sink import MergeSink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
-    kb = lambda c: (c.try_cast("long") / F.lit(3)).cast("int")  # noqa: E731
+    kb = _nullable_key_bucket(3)
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -1417,12 +1415,8 @@ def test_key_bucket_null_bucket_rejected_before_any_write(spark, tmp_path):
             sink(batch(rows), 0)
         assert not os.path.exists(state)  # nothing written, nothing poisoned
         # a TOTAL bucket function over the same ids works
-        total = cls(
-            spark, str(tmp_path / f"{sub}_totkb"),
-            key_bucket=lambda c: F.coalesce(
-                (c.try_cast("long") / F.lit(3)).cast("int"), F.lit(-1)
-            ),
-        )
+        total = cls(spark, str(tmp_path / f"{sub}_totkb"),
+                    key_bucket=KeyBucket(width=3))
         total(batch(rows), 0)
         assert {r["id"] for r in total.read_state().collect()} == {"user_42", "7"}
 
@@ -1430,12 +1424,9 @@ def test_key_bucket_null_bucket_rejected_before_any_write(spark, tmp_path):
 def test_empty_or_null_tbl_rejected_before_any_write(spark, tmp_path):
     """NULL / empty-string table names are unrepresentable in the Hive
     partition layout (both write as __HIVE_DEFAULT_PARTITION__ and read
-    back NULL, so the touched-slice filter — isin(['']) in plain mode,
-    the tbl= disjunct in bucketed mode — can never match the persisted
+    back NULL, so the touched-slice lookup can never find the persisted
     rows; the slice reads as empty and _commit's carry-forward vs
     fresh-write rename collision wedges every checkpoint replay). The
-    r12 advice traced the bucketed hand-built-path variant
-    (quote('') == '' slipped past _read_touched's identity guard); the
     fix is a loud pre-write raise in BOTH layouts, before any state
     mutates."""
     import pytest
@@ -1463,9 +1454,9 @@ def test_empty_or_null_tbl_rejected_before_any_write(spark, tmp_path):
 
 def test_key_bucket_layout_flip_refused_both_directions(spark, tmp_path):
     """Enabling key_bucket over an existing PLAIN state directory must be
-    refused before any read or write: legacy files would read back with
-    _kb=NULL (the pair filter never matches them — deletes resurrect,
-    updates vanish) and _commit's carry-forward links only _kb= subdirs,
+    refused before any read or write: legacy files sit outside every _kb=
+    dir (the slice read never finds them — deletes resurrect, updates
+    vanish) and _commit's carry-forward links only _kb= subdirs,
     dropping every legacy data file of a touched table in one batch. The
     reverse flip (plain sink over a bucketed directory) would leave a
     mixed layout. Both directions raise, point at migrate_key_bucket,
@@ -1473,14 +1464,13 @@ def test_key_bucket_layout_flip_refused_both_directions(spark, tmp_path):
     import pytest
 
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import MergeSink
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
 
     up = lambda tbl, i, seq: ("upsert", tbl, str(i), json.dumps({"id": i}), None, "f1", seq, seq)  # noqa: E731
-    kb = lambda c: F.coalesce((c.try_cast("long") / F.lit(3)).cast("int"), F.lit(-1))  # noqa: E731
+    kb = KeyBucket(width=3)
 
     def tree(path):
         return {
@@ -1566,13 +1556,12 @@ def test_migrate_key_bucket_roundtrip_preserves_state(spark, tmp_path):
 
 def test_key_bucket_policy_drift_refused(spark, tmp_path):
     """A CHANGED bucket function over a same-shape bucketed layout is the
-    mode-flip hazard's quieter sibling: _pair_filter would prune to the
-    wrong bucket dirs (deletes resurrect, updates fork). With the
-    KeyBucket policy object the identity (width, origin) is stamped into
-    the state at commit time and a drifted sink is refused before any
-    read or write; migrate_key_bucket re-stamps, after which the new
-    policy is accepted. (Opaque lambdas carry no identity — no drift
-    check is possible for them, which the docstring says.)"""
+    mode-flip hazard's quieter sibling: the slice read would find the
+    wrong bucket dirs (deletes resurrect, updates fork). The KeyBucket
+    policy's identity (width, origin) is stamped into the state at commit
+    time and a drifted sink is refused before any read or write;
+    migrate_key_bucket re-stamps, after which the new policy is
+    accepted."""
     import pytest
 
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
@@ -1925,7 +1914,6 @@ def test_migrate_key_bucket_null_bucket_leaves_state_unchanged(spark, tmp_path):
     unchanged."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
     from dumpr_spark.streaming.sink import MergeSink, migrate_key_bucket
-    from pyspark.sql import functions as F
 
     state = str(tmp_path / "nullmig")
     rows = [("upsert", "w", i, json.dumps({"k": n}), None, "f1", n, n)
@@ -1939,8 +1927,7 @@ def test_migrate_key_bucket_null_bucket_leaves_state_unchanged(spark, tmp_path):
 
     before = tree()
     with pytest.raises(ValueError, match="NULL bucket"):
-        migrate_key_bucket(spark, state,
-                           lambda c: (c.try_cast("long") / F.lit(3)).cast("int"))
+        migrate_key_bucket(spark, state, _nullable_key_bucket(3))
     assert tree() == before
 
 
@@ -4011,58 +3998,14 @@ def test_hash_key_bucket_recipe_for_string_keys(spark, tmp_path):
         )
 
 
-def test_opaque_callable_over_policy_marker_refused(spark, tmp_path):
-    """The drift check's blind spot, closed (r11 advice, medium): a state
-    directory whose _kb_policy.json proves it was cut by a policy object
-    must refuse an OPAQUE callable sink — same tbl=/_kb= shape, no
-    identity to compare, so a DIFFERENT bucket function would otherwise
-    merge with mismatched pruning (deletes resurrect, updates fork). A
-    properly migrated opaque-callable state has no marker and keeps
-    working."""
-    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import (
-        KeyBucket, MergeSink, migrate_key_bucket,
-    )
-
-    def batch(rows):
-        return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
-
-    up = lambda tbl, i, seq: ("upsert", tbl, str(i), json.dumps({"id": i}), None, "f1", seq, seq)  # noqa: E731
-    opaque = lambda c: F.coalesce(  # same MATH as KeyBucket(3), no identity  # noqa: E731
-        F.call_function(
-            "div",
-            c.try_cast("long") - F.pmod(c.try_cast("long"), F.lit(3).cast("long")),
-            F.lit(3).cast("long"),
-        ), F.lit(-1),
-    ).cast("int")
-
-    state = str(tmp_path / "opq_state")
-    MergeSink(spark, state, key_bucket=KeyBucket(width=3))(
-        batch([up("orders", i, i) for i in range(9)]), 0
-    )
-    assert os.path.exists(os.path.join(state, "_kb_policy.json"))
-    opq = MergeSink(spark, state, key_bucket=opaque)
-    with pytest.raises(ValueError, match="opaque"):
-        opq.read_state()
-    with pytest.raises(ValueError, match="migrate_key_bucket"):
-        opq(batch([up("orders", 99, 99)]), 1)
-    # the sanctioned path: migrate to the opaque callable — the fresh
-    # layout carries no marker, and the opaque sink then operates
-    migrate_key_bucket(spark, state, opaque)
-    assert not os.path.exists(os.path.join(state, "_kb_policy.json"))
-    after = MergeSink(spark, state, key_bucket=opaque)
-    after(batch([up("orders", 99, 99)]), 1)
-    assert {r["id"] for r in after.read_state().collect()} == {str(i) for i in range(9)} | {"99"}
-
-
 def test_history_sink_policy_migration_parity(spark, tmp_path):
     """The r11 policy/migration surface works end-to-end on an SCD2 state
     directory too (r11 verdict item 6): HistorySink shares MergeSink's
     `_validate_layout`/_kb_policy.json/`migrate_key_bucket` machinery,
     but until now no test exercised a HISTORY migration (extra valid_to
     column, delete rows as interval terminators rather than tombstones).
-    Covers: flip refusal both directions, policy-drift refusal, the
-    opaque-callable-over-marker refusal, migration with HISTORY_SCHEMA
+    Covers: flip refusal both directions, policy-drift refusal,
+    migration with HISTORY_SCHEMA
     preserving every interval (including terminator rows), continued
     folding + untouched-bucket carry-forward after migration, and crash
     recovery of a torn history migration."""
@@ -4113,13 +4056,9 @@ def test_history_sink_policy_migration_parity(spark, tmp_path):
     assert raw(bucketed) == want_raw
     assert os.path.exists(os.path.join(state, "_kb_policy.json"))
 
-    # drift + opaque refusals hold on the history directory
+    # drift refusal holds on the history directory
     with pytest.raises(ValueError, match="migrate_key_bucket"):
         HistorySink(spark, state, key_bucket=KeyBucket(width=9)).read_history()
-    with pytest.raises(ValueError, match="opaque"):
-        HistorySink(
-            spark, state, key_bucket=lambda c: (c.try_cast("long") % 4).cast("int")
-        ).read_history()
     # ...and the reverse flip (plain sink over the bucketed directory)
     with pytest.raises(ValueError, match="migrate_key_bucket"):
         HistorySink(spark, state)(batch([up("w", 99, 99)]), 2)
@@ -4146,18 +4085,22 @@ def test_history_sink_policy_migration_parity(spark, tmp_path):
     assert os.path.exists(state) and not os.path.exists(state + ".migrate-bak")
 
 
-def test_read_touched_fast_path_matches_full_read(spark, tmp_path):
-    """The r12 touched-dirs scan (`_read_touched`): the bucketed merge
-    path lists only the touched (tbl, bucket) slice dirs — O(touched)
-    driver listing instead of spark.read's O(all bucket dirs) partition
-    discovery (measured ~1.7 ms/dir, 3.5 s of a 5.6 s batch at 2048
-    dirs). Must be ROW-IDENTICAL to the full pruned read, including
-    tombstones, for any pair list — touched-only, a not-yet-existing
-    bucket, a missing table — and must FALL BACK to the full read for a
-    table name that is not identity under URL quoting, so hand-built
-    paths can never diverge from Spark's own dir escaping."""
+def test_read_slices_by_path_matches_full_read(spark, tmp_path):
+    """`_read_slices` reads the touched slices' dirs by path in both
+    layouts, found by one lookup that lists the state root (and a touched
+    table's dir in the bucketed layout) and unescapes each entry name:
+    O(touched) driver listing instead of spark.read's partition discovery
+    of every slice dir (measured ~1.7 ms/dir, 3.5 s of a 5.6 s batch at
+    2048 dirs). Must be ROW-IDENTICAL to the full read filtered to the
+    same slices, tombstones included, for any slice list — touched-only,
+    a not-yet-existing bucket, cross-table, a missing table — also for
+    table names that Spark escapes in its dir names (``x/y`` as
+    ``tbl=x%2Fy``, ``p%41`` as ``tbl=p%2541``), that it writes as they
+    are though URL quoting would change them (``a b``, ``é``) or that look
+    numeric (``007``), folded through two merge batches so the second
+    READS the dirs the first wrote."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import KeyBucket, MergeSink, _pair_filter
+    from dumpr_spark.streaming.sink import KeyBucket, MergeSink
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -4165,40 +4108,88 @@ def test_read_touched_fast_path_matches_full_read(spark, tmp_path):
     up = lambda tbl, i, seq: ("upsert", tbl, str(i), json.dumps({"id": i}), None, "f1", seq, seq)  # noqa: E731
     dele = lambda tbl, i, seq: ("delete", tbl, str(i), None, None, "f1", seq, seq)  # noqa: E731
 
-    kb = KeyBucket(width=3)
-    state = str(tmp_path / "rt_state")
-    sink = MergeSink(spark, state, key_bucket=kb)
-    sink(batch([up("orders", i, i) for i in range(12)]
-               + [up("parts", 2, 2), dele("orders", 4, 40)]), 0)
+    for kb in (None, KeyBucket(width=3)):
 
-    def rows(df):
-        return {
-            (r["tbl"], r["id"], r["op"], r["seq"], r["_kb"]) for r in df.collect()
-        }
+        def sl(tbl, bucket):  # the slice tuple of this layout
+            return (tbl, bucket) if kb else (tbl,)
 
-    cases = [
-        [("orders", 0), ("orders", 1)],           # touched subset
-        [("orders", 0), ("orders", 99)],           # bucket dir that never existed
-        [("parts", 0), ("orders", 2)],             # cross-table
-        [("nope", 0)],                             # missing table entirely
-    ]
-    for pairs in cases:
-        fast = rows(sink._read_touched(pairs).where(_pair_filter(pairs)))
-        full = rows(sink._read_raw().where(_pair_filter(pairs)))
-        assert fast == full, pairs
-    # tombstones flow through the fast path (the fold depends on them)
-    t = rows(sink._read_touched([("orders", 1)]).where(
-        _pair_filter([("orders", 1)])))
-    assert ("orders", "4", "delete", 40, 1) in t
+        def rows(df):
+            return {(r["tbl"], r["id"], r["op"], r["seq"], *([r["_kb"]] if kb else []))
+                    for r in df.collect()}
 
-    # exotic table name (space: not identity under URL quoting) exercises
-    # the fallback end-to-end through the merge path — two batches so the
-    # second one READS the escaped dir it wrote
-    ex = MergeSink(spark, str(tmp_path / "rt_exotic"), key_bucket=kb)
-    ex(batch([up("a b", 1, 1), up("a b", 7, 2)]), 0)
-    ex(batch([up("a b", 1, 10)]), 1)
-    live = {(r["tbl"], r["id"], r["seq"]) for r in ex.read_state().collect()}
-    assert live == {("a b", "1", 10), ("a b", "7", 2)}
+        def check(sink, slices):
+            want = {tuple(str(v) for v in t) for t in slices}
+            full = {r for r in rows(sink._read_raw())
+                    if tuple(str(v) for v in (r[0], *r[4:])) in want}
+            got = rows(sink._read_slices(slices))
+            assert got == full, slices
+            return got
+
+        sink = MergeSink(spark, str(tmp_path / f"rs_state_{bool(kb)}"), key_bucket=kb)
+        sink(batch([up("orders", i, i) for i in range(12)]
+                   + [up("parts", 2, 2), dele("orders", 4, 40)]), 0)
+        cases = [
+            [sl("orders", 0), sl("orders", 1)],        # touched subset
+            [sl("orders", 0), sl("orders", 99)],       # bucket dir that never existed
+            [sl("parts", 0), sl("orders", 2)],         # cross-table
+            [sl("nope", 0)],                           # missing table entirely
+        ]
+        for slices in cases:
+            check(sink, sorted(set(slices)))
+        # tombstones flow through the by-path read (the fold depends on them)
+        assert ("orders", "4", "delete", 40, *([1] if kb else [])) in check(
+            sink, [sl("orders", 1)])
+
+        names = ["a b", "x/y", "007", "é", "p%41"]
+        ex = MergeSink(spark, str(tmp_path / f"rs_exotic_{bool(kb)}"), key_bucket=kb)
+        ex(batch([r for n in names for r in (up(n, 1, 1), up(n, 7, 2))]), 0)
+        ex(batch([r for n in names for r in (up(n, 1, 10), dele(n, 7, 11))]), 1)
+        live = {(r["tbl"], r["id"], r["seq"]) for r in ex.read_state().collect()}
+        assert live == {(n, "1", 10) for n in names}
+        got = check(ex, sorted({sl(n, b) for n in names for b in (0, 2)}))
+        assert {(r[0], r[1], r[2], r[3]) for r in got} == (
+            {(n, "1", "upsert", 10) for n in names}
+            | {(n, "7", "delete", 11) for n in names})
+
+
+def test_read_slices_plain_layout_reads_only_touched_table_dirs(spark, tmp_path):
+    """In the plain layout, `_read_slices` reads the touched table's dir
+    by path: with other tables in the state, every input file of the read
+    lies under ``tbl=a``."""
+    from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
+    from dumpr_spark.streaming.sink import MergeSink
+
+    sink = MergeSink(spark, str(tmp_path / "plain_state"))
+    sink(spark.createDataFrame(
+        [("upsert", t, str(i), json.dumps({"id": i}), None, "f1", i, i)
+         for t in ("a", "b", "c") for i in range(3)], ENVELOPE_SCHEMA), 0)
+    files = sink._read_slices([("a",)]).inputFiles()
+    assert files and all("/tbl=a/" in f for f in files), files
+    assert sink._read_slices([("a",)]).count() == 3
+
+
+def test_non_policy_key_bucket_refused_with_type_error(spark, tmp_path):
+    """`key_bucket` takes None, "auto" or a KeyBucket / HashKeyBucket
+    (subclasses included): a callable, an int, a dict or another string
+    raises TypeError from every entry point before any state dir
+    appears."""
+    from dumpr_spark.streaming.history import HistorySink
+    from dumpr_spark.streaming.sink import (
+        MergeSink, migrate_key_bucket, start_merge_stream,
+    )
+
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    changes = spark.readStream.format("rate").load()
+    for bad in (lambda c: c, 3, {"width": 3, "origin": 0}, "range"):
+        for start in (lambda: MergeSink(spark, state, key_bucket=bad),
+                      lambda: HistorySink(spark, state, key_bucket=bad),
+                      lambda: start_merge_stream(changes, state, ckpt,
+                                                 key_bucket=bad),
+                      lambda: migrate_key_bucket(spark, state, bad)):
+            with pytest.raises(TypeError, match="KeyBucket / HashKeyBucket"):
+                start()
+    assert os.listdir(tmp_path) == []
+    assert not spark.streams.active
 
 
 def test_merge_sink_auto_layout_numeric_seeds_range_policy(spark, tmp_path):
@@ -4295,12 +4286,13 @@ def test_auto_layout_empty_seed_and_refusals(spark, tmp_path):
     """Auto-mode edges: an empty first batch leaves the sink unresolved
     and writes nothing (the next non-empty batch seeds); auto over an
     existing PLAIN state is a migration event, refused; auto over a
-    bucketed state cut by an OPAQUE callable (no policy marker) is
-    refused — auto cannot reconstruct an identity the layout never
-    stamped; and migrate_key_bucket refuses the string outright."""
+    bucketed state without its policy marker (a legacy state) is refused
+    — auto cannot reconstruct an identity the state does not carry; and
+    migrate_key_bucket refuses the string outright."""
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
-    from dumpr_spark.streaming.sink import MergeSink, migrate_key_bucket
-    from pyspark.sql import functions as F
+    from dumpr_spark.streaming.sink import (
+        KeyBucket, MergeSink, migrate_key_bucket,
+    )
 
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
@@ -4322,12 +4314,13 @@ def test_auto_layout_empty_seed_and_refusals(spark, tmp_path):
     with pytest.raises(ValueError, match="migrate_key_bucket"):
         MergeSink(spark, plain_state, key_bucket="auto")(batch([up("orders", 9, 9)]), 1)
 
-    # opaque-callable bucketed state (no marker) + auto -> refused
-    opaque_state = str(tmp_path / "auto_opaque")
-    kb = lambda c: F.coalesce((c.try_cast("long") / F.lit(3)).cast("int"), F.lit(-1))  # noqa: E731
-    MergeSink(spark, opaque_state, key_bucket=kb)(batch([up("orders", i, i) for i in range(5)]), 0)
-    with pytest.raises(ValueError, match="opaque"):
-        MergeSink(spark, opaque_state, key_bucket="auto").read_state()
+    # bucketed state without its marker + auto -> refused
+    legacy_state = str(tmp_path / "auto_legacy")
+    MergeSink(spark, legacy_state, key_bucket=KeyBucket(width=3))(
+        batch([up("orders", i, i) for i in range(5)]), 0)
+    os.remove(os.path.join(legacy_state, "_kb_policy.json"))
+    with pytest.raises(ValueError, match="no _kb_policy.json marker"):
+        MergeSink(spark, legacy_state, key_bucket="auto").read_state()
 
     with pytest.raises(ValueError, match="SEED-TIME"):
         migrate_key_bucket(spark, plain_state, "auto")
@@ -4371,7 +4364,7 @@ def test_history_sink_auto_layout_equals_plain(spark, tmp_path):
 def test_hash_bucket_helper_dial_validation(spark):
     """suggest_hash_bucket_count / suggest_key_bucket refuse broken dials
     up front (r13 ADVICE): max_buckets=0 would mint a pmod-by-zero policy
-    whose NULL buckets only explode much later in _pair_filter; a
+    whose NULL buckets only explode much later in _check_pairs; a
     non-positive rows target breaks the ceiling; a share outside (0, 1]
     is a ZeroDivisionError or a negative floor."""
     from dumpr_spark.streaming.sink import (
@@ -4686,12 +4679,12 @@ def test_auto_layout_ignores_error_rows_in_seed_batch(spark, tmp_path):
         assert sink.read_state().count() == 19
 
 
-def test_bucket_growth_check_skips_exotic_table_names(spark, tmp_path):
-    """The growth check is advisory and must never break a merge: a table
-    name that is not identity under URL quoting (space -> %20 dirs) is
-    skipped by the footer walk (same guard as _read_touched's fallback),
-    so the batch commits fine and no spurious warning fires even past the
-    threshold."""
+def test_bucket_growth_check_measures_exotic_table_names(spark, tmp_path):
+    """The growth check finds a slice through the same lookup as the
+    merge read, so a table name that Spark escapes in its dir name
+    (``x/y`` as ``tbl=x%2Fy``) is measured like any other: past the
+    threshold it warns once, naming the slice by its table name, and the
+    batch commits."""
     import warnings
 
     from dumpr_spark.cdc.envelope import ENVELOPE_SCHEMA
@@ -4700,7 +4693,7 @@ def test_bucket_growth_check_skips_exotic_table_names(spark, tmp_path):
     def batch(rows):
         return spark.createDataFrame(rows, ENVELOPE_SCHEMA)
 
-    up = lambda i, seq: ("upsert", "a b", str(i), json.dumps({"id": i}), None, "f1", seq, seq)  # noqa: E731
+    up = lambda i, seq: ("upsert", "x/y", str(i), json.dumps({"id": i}), None, "f1", seq, seq)  # noqa: E731
 
     sink = MergeSink(spark, str(tmp_path / "exotic_growth"),
                      key_bucket=KeyBucket(width=1000, origin=0),
@@ -4708,7 +4701,8 @@ def test_bucket_growth_check_skips_exotic_table_names(spark, tmp_path):
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         sink(batch([up(i, i) for i in range(20)]), 0)  # 20 rows >> 5
-        assert [x for x in w if "growth threshold" in str(x.message)] == []
+        hits = [str(x.message) for x in w if "growth threshold" in str(x.message)]
+    assert len(hits) == 1 and "tbl=x/y/_kb=0" in hits[0] and "20 rows" in hits[0]
     assert sink.read_state().count() == 20
 
 
